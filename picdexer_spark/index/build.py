@@ -74,6 +74,7 @@ from picdexer_spark.index.codec import (
     segmented_delta_decode,
     varint_decode,
 )
+from picdexer_spark.index.termdict import write_term_stats
 from picdexer_spark.sources.catalog import (
     POSTINGS_SCHEMA,
     URL_FIELD_NS,
@@ -1043,16 +1044,15 @@ def build_index(
         p_url = os.path.join(snap_dir, "postings", "field=url")
         if cfg.index_url_field and os.path.isdir(p_url):
             ts_src = ts_src.unionByName(spark.read.parquet(p_url))
-        (
+        write_term_stats(
             ts_src.groupBy("term")
             .agg(F.sum("n").alias("df"), F.sum("sum_tf").alias("cf"))
             # vocab-sized rollup: cap the file count (coalesce collapses
             # the agg's reduce stage, no extra exchange) so the engine's
-            # driver-side df-cache preload reads a handful of files, not
+            # driver-side term dictionary opens a handful of footers, not
             # one per session shuffle partition
-            .coalesce(max(1, n_parts // 4))
-            .write.mode("overwrite")
-            .parquet(os.path.join(snap_dir, "term_stats"))
+            .coalesce(max(1, n_parts // 4)),
+            os.path.join(snap_dir, "term_stats"),
         )
 
     def _shard_metrics_job():

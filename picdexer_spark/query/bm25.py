@@ -16,8 +16,9 @@ reference deployment, re-expressed as a Spark plan:
     .orderBy(score desc, doc_id)    -- TakeOrdered k (driver merge)
 
 Global statistics (N, avgdl, per-term global df) come from the tiny
-stats/term_stats tables — a <=|q|-row collect broadcast into the UDF closure,
-the broadcast-small-dim pattern.
+stats table and the term dictionary (index/termdict.py: a driver-side read
+of the few term_stats row groups that can hold the query terms — no Spark
+job), captured into the UDF closure, the broadcast-small-dim pattern.
 
 BM25 spec pinned in oracle/reference.py; k1=1.2 b=0.75 (ES defaults).
 """
@@ -33,7 +34,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
+from picdexer_spark.index.termdict import TermDictionary
 from picdexer_spark.oracle.reference import B, K1
 from picdexer_spark.query.wand import (
     TermBlocks,
@@ -47,7 +50,15 @@ from picdexer_spark.query.wand import (
 )
 from picdexer_spark.sources.catalog import URL_FIELD_NS, IndexCatalog
 
-RESULT_SCHEMA = "doc_id long, score double"
+#: (doc_id, score) — a StructType, not a DDL string: a string is parsed
+#: through the JVM on every query plan that names it
+RESULT_SCHEMA = StructType([StructField("doc_id", LongType()),
+                            StructField("score", DoubleType())])
+
+#: posting-block columns the shard kernels read (proximity queries add
+#: pos_enc)
+PAY_COLS = ("term", "shard_id", "first_doc", "last_doc", "max_tf", "min_dl",
+            "n", "doc_ids_enc", "tfs_enc", "dls_enc")
 
 
 def idf(n_docs: int, df: int) -> float:
@@ -412,36 +423,37 @@ class SearchEngine:
                         (self.url_total_len + int(trow["us"]))
                         / self.url_n_docs_scoring
                     )
-        # small vocabularies: pull df stats to the driver once, saving one
-        # Spark job per query; a web-scale vocab (hundreds of millions of
-        # terms) stays a distributed filtered lookup. The footer row count
-        # gates the pull and the pull itself is a driver-side pyarrow read
-        # (no Spark job — term_stats is written by the nearest-ancestor
-        # snapshot as a handful of files); non-POSIX layouts fall back to
-        # the distributed limit+collect.
-        self._df_cache: dict[str, int] | None = None
-        try:
-            tsp = self.cat.nearest_table_path("term_stats", self.snapshot_id)
-            if tsp is not None and (
-                self.cat.parquet_num_rows(tsp) <= preload_stats_max_terms
-            ):
-                tbl = self.cat.read_arrow(tsp, columns=["term", "df"])
-                self._df_cache = dict(zip(
-                    tbl.column("term").to_pylist(),
-                    (int(v) for v in tbl.column("df").to_pylist()),
-                ))
-        except Exception:
-            self._df_cache = None
-        if self._df_cache is None:
-            head = self.term_stats.select("term", "df").limit(
-                preload_stats_max_terms + 1
-            ).collect()
-            if len(head) <= preload_stats_max_terms:
-                self._df_cache = {r["term"]: int(r["df"]) for r in head}
+        # the term dictionary is read driver-side from the term_stats
+        # footers (index/termdict.py): small vocabularies are pulled whole
+        # into a dict once; above `preload_stats_max_terms` (a web-scale
+        # vocab) each df or prefix lookup reads only the row groups whose
+        # term range can hold the wanted terms — never a Spark job
+        tsp = self.cat.nearest_table_path("term_stats", self.snapshot_id)
+        self.termdict = TermDictionary(tsp)
+        self._df_cache: dict[str, int] | None = (
+            self.termdict.read_all()
+            if self.termdict.num_rows <= preload_stats_max_terms else None
+        )
+        self._payload: dict[tuple[bool, bool], DataFrame] = {}
         _warm_exec_paths(spark)
 
     def _empty(self) -> DataFrame:
         return self.spark.createDataFrame([], RESULT_SCHEMA)
+
+    def _candidates(self, terms, url: bool = False,
+                    pos: bool = False) -> DataFrame:
+        """Candidate posting blocks of `terms` (the content field's, or
+        the url field's with `url`), with pos_enc when `pos`. The payload
+        projection is built once per engine and each query only adds its
+        term filter: every DataFrame call is a py4j round trip plus an
+        analysis pass, paid on the query's latency. Catalyst pushes the
+        filter below the projection, so the physical plan is unchanged."""
+        proj = self._payload.get((url, pos))
+        if proj is None:
+            src = self.postings_url if url else self.postings
+            proj = src.select(*PAY_COLS, *(("pos_enc",) if pos else ()))
+            self._payload[(url, pos)] = proj
+        return proj.filter(F.col("term").isin(list(terms)))
 
     def _apply_shard_scorer(self, cand: DataFrame, scorer) -> DataFrame:
         """Run a per-shard kernel over the candidate blocks. Multi-shard:
@@ -450,7 +462,14 @@ class SearchEngine:
         over the whole candidate set in one task WITHOUT the exchange
         (coalesce is a narrow dependency — no shuffle write/read, one
         Spark stage instead of two); row-identical because the one group
-        applyInPandas would form IS the whole frame."""
+        applyInPandas would form IS the whole frame.
+
+        Being narrow, coalesce(1) also collapses the WHOLE upstream — the
+        postings scan, the term filter, any broadcast join — into that
+        one task, so a single-shard index gives up map-side scan
+        parallelism too, not just the exchange. Cheap while a query's
+        candidate scan is small; a single-shard index with a large
+        postings table or many snapshot files reads it all in one task."""
         if not self._single_shard:
             return cand.groupBy("shard_id").applyInPandas(
                 scorer, RESULT_SCHEMA)
@@ -465,12 +484,7 @@ class SearchEngine:
     def term_dfs(self, terms: list[str]) -> dict[str, int]:
         if self._df_cache is not None:
             return {t: self._df_cache[t] for t in terms if t in self._df_cache}
-        rows = (
-            self.term_stats.filter(F.col("term").isin(list(terms)))
-            .select("term", "df")
-            .collect()
-        )
-        return {r["term"]: int(r["df"]) for r in rows}
+        return self.termdict.dfs(terms)
 
     def _idf_map(self, present: list[str], dfs: dict[str, int],
                  n_docs_sc: int, ns: str,
@@ -650,13 +664,8 @@ class SearchEngine:
             idf_dfs = {t: stats_override[0][t] for t in present}
         idf_map = self._idf_map(present, idf_dfs, n_docs_sc, ns, boosts)
 
-        pay_cols = ["term", "shard_id", "first_doc", "last_doc", "max_tf",
-                    "min_dl", "n", "doc_ids_enc", "tfs_enc", "dls_enc"]
-        if mode == "phrase":
-            pay_cols.append("pos_enc")  # proximity payload only when needed
-        src = self.postings_url if ns else self.postings
-        cand = src.filter(F.col("term").isin(present)) \
-            .select(*pay_cols)
+        # proximity payload only when needed
+        cand = self._candidates(present, url=bool(ns), pos=mode == "phrase")
         scorer_terms = list(terms) if mode == "phrase" else present
         scorer = _make_shard_scorer(scorer_terms, idf_map, k, mode,
                                     avgdl_sc, prune, self._tomb_counts,
@@ -731,11 +740,8 @@ class SearchEngine:
             kernel_classes.append((rep, present))
         if not kernel_classes:
             return self._empty()
-        pay_cols = ["term", "shard_id", "first_doc", "last_doc", "max_tf",
-                    "min_dl", "n", "doc_ids_enc", "tfs_enc", "dls_enc"]
-        src = self.postings_url if ns else self.postings
         flat = [m for _, ms in kernel_classes for m in ms]
-        cand = src.filter(F.col("term").isin(flat)).select(*pay_cols)
+        cand = self._candidates(flat, url=bool(ns))
         kmode = "synonyms_conj" if mode == "conjunctive" else "synonyms"
         scorer = _make_shard_scorer(
             flat, idf_map, k, kmode, avgdl_sc, prune=False,
@@ -755,12 +761,13 @@ class SearchEngine:
         `max_expansions` highest-df ones (ties -> term asc) — the Lucene
         `top_terms_N` multi-term rewrite (keeps the scored term set
         bounded no matter how hot the prefix). Deterministic: both the
-        driver-cache and the distributed path order by (df desc, term asc).
+        driver-cache and the term-dictionary path order by (df desc, term
+        asc).
 
-        Scale shape (web-scale vocab, no df cache): a filtered
-        term-dictionary scan — `startswith` pushes a StringStartsWith
-        filter to the parquet footer, so only row groups whose term range
-        overlaps the prefix load — then TakeOrdered(max_expansions)."""
+        Scale shape (web-scale vocab, no df cache): a driver-side
+        term-dictionary scan of only the row groups whose term range
+        overlaps the prefix (:meth:`TermDictionary.prefix`), then the
+        top `max_expansions` by (df desc, term asc)."""
         n = self.MAX_PREFIX_EXPANSIONS if max_expansions is None \
             else max_expansions
         if self._df_cache is not None:
@@ -768,14 +775,9 @@ class SearchEngine:
                     if t.startswith(prefix)]
             hits.sort(key=lambda td: (-td[1], td[0]))
             return [t for t, _ in hits[:n]]
-        rows = (
-            self.term_stats.filter(F.col("term").startswith(prefix))
-            .select("term", "df")
-            .orderBy(F.desc("df"), F.asc("term"))
-            .limit(n)
-            .collect()
-        )
-        return [r["term"] for r in rows]
+        tbl = self.termdict.prefix(prefix).sort_by(
+            [("df", "descending"), ("term", "ascending")])
+        return tbl.column("term").slice(0, n).to_pylist()
 
     def expand_prefix_alpha(self, prefix: str,
                             max_expansions: int | None = None) -> list[str]:
@@ -785,20 +787,14 @@ class SearchEngine:
         unlike the top_terms_N df-ranked rewrite of :meth:`expand_prefix`;
         this is the documented ES match_phrase_prefix gotcha where a hot
         completion can fall outside the first-50 window — reproduced
-        faithfully, not 'fixed'). Same pushed StringStartsWith scan."""
+        faithfully, not 'fixed'). Same row-group-pruned dictionary scan."""
         n = self.MAX_PREFIX_EXPANSIONS if max_expansions is None \
             else max_expansions
         if self._df_cache is not None:
             return sorted(t for t in self._df_cache
                           if t.startswith(prefix))[:n]
-        rows = (
-            self.term_stats.filter(F.col("term").startswith(prefix))
-            .select("term")
-            .orderBy(F.asc("term"))
-            .limit(n)
-            .collect()
-        )
-        return [r["term"] for r in rows]
+        return self.termdict.prefix(prefix).sort_by("term") \
+            .column("term").slice(0, n).to_pylist()
 
     def expand_wildcard(self, pattern: str,
                         max_expansions: int | None = None) -> list[str]:
@@ -922,12 +918,8 @@ class SearchEngine:
         if any(t not in dfs for t in uniq_fixed):
             return self._empty()  # a required fixed term matches nothing
         idf_map = {t: idf(self.n_docs_scoring, d) for t, d in dfs.items()}
-        pay_cols = ["term", "shard_id", "first_doc", "last_doc", "max_tf",
-                    "min_dl", "n", "doc_ids_enc", "tfs_enc", "dls_enc",
-                    "pos_enc"]
         qterms = sorted(set(uniq_fixed) | set(alts))
-        cand = self.postings.filter(F.col("term").isin(qterms)) \
-            .select(*pay_cols)
+        cand = self._candidates(qterms, pos=True)
         scorer = _make_shard_scorer(
             fixed, idf_map, k, "phrase_prefix", self.avgdl_scoring, prune,
             self._tomb_counts, after=after, alts=alts,
@@ -1051,8 +1043,8 @@ class SearchEngine:
     def suggest(self, prefix: str, n: int = 10) -> list[tuple[str, int]]:
         """Search-bar autocomplete (the ES term suggester / Kibana
         query-bar completion): the `n` highest-df dictionary terms
-        starting with `prefix`, as [(term, df)] — the same pushed
-        StringStartsWith dictionary scan as :meth:`expand_prefix`, but
+        starting with `prefix`, as [(term, df)] — the same dictionary
+        prefix scan as :meth:`expand_prefix`, but
         returning the weights the completion UI ranks by.
 
         The prefix is analyzed with the INDEX analyzer (tokenize_py), the
@@ -1137,16 +1129,17 @@ class SearchEngine:
     def vocab_size(self) -> int:
         """Content-dictionary term count (field-namespaced `\\x1f` terms
         excluded) — the V in :meth:`suggest_phrase`'s Laplace smoothing.
-        Driver-dict count when the vocab cache holds, else ONE
-        metadata-sized distributed count; cached per engine."""
+        Driver-dict count when the vocab cache holds, else the footer
+        row count minus the namespaced terms (a dictionary prefix scan of
+        the `\\x1f` range); cached per engine."""
         v = getattr(self, "_vocab_size_cache", None)
         if v is None:
             if self._df_cache is not None:
                 v = sum(1 for t in self._df_cache
                         if not t.startswith("\x1f"))
             else:
-                v = int(self.term_stats.filter(
-                    ~F.col("term").startswith("\x1f")).count())
+                v = (self.termdict.num_rows
+                     - self.termdict.prefix("\x1f").num_rows)
             self._vocab_size_cache = v
         return v
 
@@ -1868,13 +1861,7 @@ class SearchEngine:
             F.expr(f"doc_id div {self.shard_range}").alias("shard_id"),
             "doc_id",
         )
-        pay_cols = ["term", "shard_id", "first_doc", "last_doc", "max_tf",
-                    "min_dl", "n", "doc_ids_enc", "tfs_enc", "dls_enc"]
-        if mode == "phrase":
-            pay_cols.append("pos_enc")
-        cand = (self.postings_url if ns else self.postings) \
-            .filter(F.col("term").isin(present)) \
-            .select(*pay_cols)
+        cand = self._candidates(present, url=bool(ns), pos=mode == "phrase")
         scorer_terms = list(terms) if mode == "phrase" else present
         scorer = _make_filtered_shard_scorer(scorer_terms, idf_map, k, mode,
                                              avgdl_sc, prune,
@@ -1973,13 +1960,7 @@ class SearchEngine:
         if not present:
             return self.spark.createDataFrame([], empty_schema)
         idf_map = {t: idf(n_docs_sc, dfs[t]) for t in present}
-        pay_cols = ["term", "shard_id", "first_doc", "last_doc", "max_tf",
-                    "min_dl", "n", "doc_ids_enc", "tfs_enc", "dls_enc"]
-        if mode == "phrase":
-            pay_cols.append("pos_enc")
-        cand = (self.postings_url if ns else self.postings) \
-            .filter(F.col("term").isin(present)) \
-            .select(*pay_cols)
+        cand = self._candidates(present, url=bool(ns), pos=mode == "phrase")
         scorer_terms = list(terms) if mode == "phrase" else present
         if cond is not None:
             allowed = live.filter(cond).select(
@@ -2509,13 +2490,8 @@ class SearchEngine:
             specs.append((ns, present, idf_map, float(avgdl_sc)))
         if not specs:
             return self._empty()
-        pay_cols = ["term", "shard_id", "first_doc", "last_doc", "max_tf",
-                    "min_dl", "n", "doc_ids_enc", "tfs_enc", "dls_enc"]
-        cands = []
-        for ns, present, _im, _ad in specs:
-            src = self.postings_url if ns else self.postings
-            cands.append(src.filter(F.col("term").isin(present))
-                         .select(*pay_cols))
+        cands = [self._candidates(present, url=bool(ns))
+                 for ns, present, _im, _ad in specs]
         cand = cands[0]
         for c in cands[1:]:
             cand = cand.unionByName(c)
@@ -3304,13 +3280,8 @@ class SearchEngine:
              for t in present],
             "query_id long, term string",
         )
-        cand = self.postings.filter(F.col("term").isin(all_terms))
-        pay_cols = ["term", "shard_id", "first_doc", "last_doc", "max_tf",
-                    "min_dl", "n", "doc_ids_enc", "tfs_enc", "dls_enc"]
-        if any_phrase:
-            pay_cols.append("pos_enc")
         grouped = (
-            cand.select(*pay_cols)
+            self._candidates(all_terms, pos=any_phrase)
             .join(F.broadcast(qterms), "term")
             .groupBy("shard_id", "query_id")
         )

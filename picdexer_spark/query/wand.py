@@ -505,7 +505,8 @@ def score_disjunctive(
         return _bulk()
 
     # CHUNKED sweep (round 7): segments are processed in descending-ub
-    # CHUNKS of 64 with all bookkeeping vectorized, instead of one Python
+    # CHUNKS (8 segments first, doubling after each chunk — the schedule
+    # below) with all bookkeeping vectorized, instead of one Python
     # iteration (decode + unique + topk) per segment. The per-segment
     # formulation cost ~85 us of fixed Python per segment and ran them ALL
     # whenever theta never caught the ub tail (measured 135 ms vs 26 ms

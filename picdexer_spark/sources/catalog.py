@@ -14,7 +14,13 @@ analogue owns four tables plus a manifest:
                      field=text/ is the `postings` table, field=url/ the
                      `postings_url` table (Lucene's per-field terms
                      dictionary; content scans never read url blocks)
-        term_stats/  term, df, cf
+        term_stats/  term, df, cf — one row per term of both fields; each
+                     file sorted by term in fixed ~1 MB row groups
+                     (index/termdict.py writes every copy), so the
+                     footers' per-row-group term ranges are a terms
+                     index: the engine's TermDictionary answers df and
+                     prefix lookups driver-side by reading only the row
+                     groups that can hold the wanted terms
         stats/       n_docs, total_len, avgdl        (single row)
         metrics/     shard_id, docs_indexed, postings_emitted,
                      bytes_compressed, snapshot_id
@@ -39,6 +45,8 @@ import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+
+from picdexer_spark.index.termdict import TERM_STATS_SCHEMA
 
 TABLES = ("docs", "postings", "postings_url", "term_stats", "stats",
           "metrics", "lineage", "deletes")
@@ -230,12 +238,11 @@ class IndexCatalog:
         return None
 
     @staticmethod
-    def read_arrow(path: str, columns: list[str] | None = None):
-        """Driver-side pyarrow read of one table directory (metadata-sized
-        tables only: stats is 1 row, term_stats is vocab-sized and callers
-        gate on its footer row count first). The catalog layout is
-        POSIX-visible by design (every resolution above is os.path based);
-        on an object-store deployment these fall back to the Spark read."""
+    def read_arrow(path: str):
+        """Driver-side pyarrow read of one metadata-sized table directory
+        (stats is 1 row; term_stats has its own row-group-indexed reader,
+        index/termdict.py). The catalog layout is POSIX-visible by design
+        (every resolution above is os.path based)."""
         import glob
 
         import pyarrow.parquet as pq
@@ -246,19 +253,7 @@ class IndexCatalog:
         import pyarrow as pa
 
         return pa.concat_tables(
-            [pq.read_table(f, columns=columns) for f in files]
-        )
-
-    @staticmethod
-    def parquet_num_rows(path: str) -> int:
-        """Total row count from parquet footers (no data read)."""
-        import glob
-
-        import pyarrow.parquet as pq
-
-        return sum(
-            pq.ParquetFile(f).metadata.num_rows
-            for f in glob.glob(os.path.join(path, "*.parquet"))
+            [pq.read_table(f) for f in files]
         )
 
     def read(self, spark: SparkSession, table: str,
@@ -285,6 +280,8 @@ class IndexCatalog:
         for sid in self.parent_chain(snapshot_id):
             p = self.table_path(table, sid)
             if os.path.isdir(p):
+                if table == "term_stats":
+                    return spark.read.schema(TERM_STATS_SCHEMA).parquet(p)
                 return spark.read.parquet(p)
         raise FileNotFoundError(
             f"table {table!r} absent in snapshot chain of "

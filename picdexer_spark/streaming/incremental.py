@@ -39,6 +39,7 @@ from picdexer_spark.index.build import (
     _write_small_table,
     build_index,
 )
+from picdexer_spark.index.termdict import TERM_STATS_SCHEMA, write_term_stats
 from picdexer_spark.sources.catalog import IndexCatalog
 
 
@@ -207,14 +208,15 @@ def build_incremental(
 
     # term_stats: parent full + delta rollup -> full table for this snapshot
     parent_ts = cat.read(spark, "term_stats", parent)
-    delta_ts = spark.read.parquet(os.path.join(snap_dir, "term_stats"))
+    delta_ts = spark.read.schema(TERM_STATS_SCHEMA).parquet(
+        os.path.join(snap_dir, "term_stats"))
     merged = (
         parent_ts.unionByName(delta_ts)
         .groupBy("term")
         .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
     )
     tmp = os.path.join(snap_dir, "term_stats_merged")
-    merged.write.mode("overwrite").parquet(tmp)
+    write_term_stats(merged, tmp)
     final = os.path.join(snap_dir, "term_stats")
     shutil.rmtree(final)
     os.rename(tmp, final)
@@ -319,8 +321,8 @@ def merge_chain(spark: SparkSession, index_dir: str,
     Keeps the newest ``max_segments - 1`` snapshots as-is and merges the
     rest; no-op (returns None) when the chain is already short enough.
     The merged snapshot unions each chained table's tail deltas (a
-    map-only Spark job — no shuffle) and copies term_stats/stats from the
-    newest tail member that has them (exactly what nearest-ancestor
+    map-only Spark job — no shuffle) and file-copies term_stats/stats from
+    the newest tail member that has them (exactly what nearest-ancestor
     resolution returned before). One atomic manifest write then rewires
     the surviving child's parent pointer — crash before it leaves the old
     chain fully intact (the orphan dir is abort_uncommitted fodder).
@@ -372,11 +374,14 @@ def merge_chain(spark: SparkSession, index_dir: str,
             continue
         spark.read.schema(CHAINED_SCHEMAS[table]).parquet(*paths) \
             .write.parquet(_dst(table))
+    # term_stats/stats are immutable once committed: a file copy keeps
+    # them byte-for-byte (term_stats' sorted row-group layout included)
+    # without a Spark read+write job each
     for table in ("term_stats", "stats"):
         for sid in tail:  # newest tail member wins = nearest-ancestor rule
             p = cat.table_path(table, sid)
             if os.path.isdir(p):
-                spark.read.parquet(p).write.parquet(_dst(table))
+                shutil.copytree(p, _dst(table))
                 break
 
     m = cat.read_manifest()

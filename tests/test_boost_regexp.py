@@ -163,12 +163,20 @@ def test_expand_regexp_cache_path_matches_reference(spark, built):
 
 
 def test_expand_regexp_distributed_path_parity(spark, built):
-    idx, _ = built
+    idx, oracle = built
     cached = SearchEngine(spark, idx)
     dist = SearchEngine(spark, idx, preload_stats_max_terms=0)
     assert dist._df_cache is None
     for pat in PATTERNS:
         assert dist.expand_regexp(pat) == cached.expand_regexp(pat), pat
+    exp = cached.expand_regexp("w1[0-3]")
+    probe = exp + ["zzznope", "\x1furl\x1fhttps"]
+    got = dist.term_dfs(probe)
+    assert got == cached.term_dfs(probe)
+    assert {t: got[t] for t in exp} == {
+        t: len(oracle.postings[t]) for t in exp}
+    assert "zzznope" not in got and "\x1furl\x1fhttps" in got
+    assert dist.vocab_size() == cached.vocab_size() == len(oracle.postings)
 
 
 def test_query_string_regexp_scores_expansion(spark, built):

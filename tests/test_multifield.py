@@ -30,6 +30,7 @@ from picdexer_spark.fixtures.pages import gen_pages
 from picdexer_spark.index.build import IndexConfig, build_index
 from picdexer_spark.oracle.reference import OracleIndex
 from picdexer_spark.query.bm25 import SearchEngine
+from picdexer_spark.sources.catalog import URL_FIELD_NS
 
 N = 500
 
@@ -147,6 +148,16 @@ def test_dictionary_surface_never_leaks_namespace(spark, built):
     dist = SearchEngine(spark, idx, preload_stats_max_terms=0)
     for t in dist.expand_fuzzy("urlp", 2):
         assert not t.startswith("\x1f")
+    # the dictionary path: namespaced dfs resolve per field, and the
+    # vocabulary count leaves the url namespace out
+    _, text_oracle, url_oracle = built
+    probe = ["https", "zzznope"] + [
+        URL_FIELD_NS + t for t in ("https", "zzznope")]
+    want = {URL_FIELD_NS + "https": len(url_oracle.postings["https"])}
+    if "https" in text_oracle.postings:
+        want["https"] = len(text_oracle.postings["https"])
+    assert dist.term_dfs(probe) == eng.term_dfs(probe) == want
+    assert dist.vocab_size() == eng.vocab_size() == len(text_oracle.postings)
     assert all(not t.startswith("\x1f")
                for t, _df in eng.suggest("s", 50))
 

@@ -15,6 +15,7 @@ from picdexer_spark.fixtures.pages import gen_pages
 from picdexer_spark.index.build import IndexConfig, build_index
 from picdexer_spark.query.bm25 import SearchEngine
 from picdexer_spark.query.parser import parse_kuery, parse_query_string
+from picdexer_spark.sources.catalog import URL_FIELD_NS
 
 N = 600
 
@@ -67,6 +68,16 @@ def test_expand_prefix_order_cap_and_distributed_parity(spark, built):
     assert dist._df_cache is None
     assert dist.expand_prefix("w1") == want_full[:50]
     assert dist.expand_prefix("w1", max_expansions=3) == want_full[:3]
+    # df lookups and the vocabulary count agree too: present, absent and
+    # url-field-namespaced terms
+    url_https = URL_FIELD_NS + "https"
+    probe = want_full[:3] + ["zzznope", url_https, URL_FIELD_NS + "zzznope"]
+    want_dfs = {t: eng._df_cache[t] for t in want_full[:3] + [url_https]}
+    assert eng.term_dfs(probe) == want_dfs
+    assert dist.term_dfs(probe) == want_dfs
+    assert dist.term_dfs([]) == {}
+    assert dist.vocab_size() == eng.vocab_size() == sum(
+        1 for t in eng._df_cache if not t.startswith("\x1f"))
 
 
 def test_prefix_search_matches_manual_expansion(spark, built):

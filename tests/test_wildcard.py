@@ -68,6 +68,16 @@ def test_expand_wildcard_distributed_path_parity(spark, built):
     assert dist._df_cache is None
     for pat in ("w1*3", "*erm1", "w9*"):
         assert dist.expand_wildcard(pat) == cached.expand_wildcard(pat), pat
+    # the df lookups the expansions are scored with: present terms carry
+    # the oracle's df, absent ones are missing, namespaced ones resolve
+    exp = cached.expand_wildcard("w1*3")
+    probe = exp + ["zzznope", "\x1furl\x1fhttps"]
+    got = dist.term_dfs(probe)
+    assert got == cached.term_dfs(probe)
+    assert {t: got[t] for t in exp} == {
+        t: len(oracle.postings[t]) for t in exp}
+    assert "zzznope" not in got and "\x1furl\x1fhttps" in got
+    assert dist.vocab_size() == cached.vocab_size() == len(oracle.postings)
 
 
 def test_query_string_wildcard_scores_expansion(spark, built):
