@@ -8,14 +8,20 @@ writer (full builds, incremental merges) goes through
 row groups of about :data:`ROW_GROUP_BYTES`. The parquet footer then
 carries a per-row-group [min, max] `term` range: the same two-level
 shape as Lucene's terms index (an in-memory index over on-disk term
-blocks) that Elasticsearch resolves query terms through without any
-distributed work.
+blocks) that Elasticsearch resolves every query term and multi-term
+rewrite through without any distributed work.
 
-:class:`TermDictionary` reads every footer once and answers df lookups
-and prefix scans by reading, with pyarrow, only the row groups whose
-range can hold a wanted term. It is correct on any layout: a file
-written before the sort (one row group spanning the whole alphabet, or
-unsorted groups) just has wider ranges, so more groups are read.
+:class:`TermDictionary` reads every footer once and is the engine's only
+dictionary reader. :meth:`~TermDictionary.dfs` answers df lookups by
+reading only the row groups whose range can hold a wanted term;
+:meth:`~TermDictionary.scan` yields, one row group at a time, the rows
+under a prefix (the empty prefix sweeps the whole dictionary). Prefix
+expansion concatenates what it yields (:meth:`~TermDictionary.prefix`);
+the wildcard, regexp and fuzzy sweeps fold it into a running top-n, so
+they hold one row group in memory whatever the vocabulary size. It is
+correct on any layout: a file written before the sort (one row group
+spanning the whole alphabet, or unsorted groups) just has wider ranges,
+so more groups are read.
 """
 
 from __future__ import annotations
@@ -38,6 +44,10 @@ TERM_STATS_SCHEMA = "term string, df long, cf long"
 #: the low milliseconds while a web-scale vocabulary still indexes into
 #: only thousands of footer entries.
 ROW_GROUP_BYTES = 1 << 20
+
+#: a (term, df) table with no rows: the schema every read returns
+EMPTY = pa.table({"term": pa.array([], pa.string()),
+                  "df": pa.array([], pa.int64())})
 
 
 def write_term_stats(df: DataFrame, path: str) -> None:
@@ -96,17 +106,8 @@ class TermDictionary:
             f, md = self._files[fi]
             parts.append(pq.ParquetFile(f, metadata=md).read_row_groups(
                 rgs, columns=["term", "df"]))
-        if not parts:
-            return pa.table({"term": pa.array([], pa.string()),
-                             "df": pa.array([], pa.int64())})
-        return pa.concat_tables(parts)
-
-    def read_all(self) -> dict[str, int]:
-        """The whole vocabulary as {term: df} (callers gate on
-        :attr:`num_rows` first)."""
-        tbl = self._read(self._groups)
-        return dict(zip(tbl.column("term").to_pylist(),
-                        tbl.column("df").to_pylist()))
+        # "default" promotion unifies a writer's nullability with EMPTY's
+        return pa.concat_tables([EMPTY, *parts], promote_options="default")
 
     def dfs(self, terms) -> dict[str, int]:
         """{term: df} for the given terms that are in the dictionary."""
@@ -127,14 +128,23 @@ class TermDictionary:
         return dict(zip(tbl.column("term").to_pylist(),
                         tbl.column("df").to_pylist()))
 
+    def scan(self, prefix: str = ""):
+        """Yield the (term, df) rows starting with `prefix`, one table per
+        row group that can hold such a term, in no particular order. A
+        row group can hold one iff its max is >= prefix and its min, cut
+        to len(prefix), is <= prefix; the empty prefix visits every
+        group. Each group is read on its own, so a caller that folds the
+        rows into a bounded result holds one row group at a time."""
+        n = len(prefix)
+        for g in self._groups:
+            if g[2] is None or (g[3] >= prefix and g[2][:n] <= prefix):
+                tbl = self._read([g])
+                if prefix:
+                    tbl = tbl.filter(pc.starts_with(tbl.column("term"),
+                                                    prefix))
+                yield tbl
+
     def prefix(self, prefix: str) -> pa.Table:
         """(term, df) rows of every term starting with `prefix`, in no
-        particular order. A row group can hold such a term iff its max is
-        >= prefix and its min, cut to len(prefix), is <= prefix."""
-        n = len(prefix)
-        groups = [g for g in self._groups
-                  if g[2] is None or (g[3] >= prefix and g[2][:n] <= prefix)]
-        tbl = self._read(groups)
-        if not prefix:
-            return tbl
-        return tbl.filter(pc.starts_with(tbl.column("term"), prefix))
+        particular order (:meth:`scan`, concatenated)."""
+        return pa.concat_tables([EMPTY, *self.scan(prefix)])

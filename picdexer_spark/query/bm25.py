@@ -18,7 +18,10 @@ reference deployment, re-expressed as a Spark plan:
 Global statistics (N, avgdl, per-term global df) come from the tiny
 stats table and the term dictionary (index/termdict.py: a driver-side read
 of the few term_stats row groups that can hold the query terms — no Spark
-job), captured into the UDF closure, the broadcast-small-dim pattern.
+job), captured into the UDF closure, the broadcast-small-dim pattern. The
+same dictionary answers every multi-term rewrite — prefix, wildcard,
+regexp and fuzzy expansions sweep it one row group at a time on the
+driver, whatever the vocabulary size.
 
 BM25 spec pinned in oracle/reference.py; k1=1.2 b=0.75 (ES defaults).
 """
@@ -31,12 +34,13 @@ import re
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-from picdexer_spark.index.termdict import TermDictionary
+from picdexer_spark.index.termdict import EMPTY, TermDictionary
 from picdexer_spark.oracle.reference import B, K1
 from picdexer_spark.query.wand import (
     TermBlocks,
@@ -63,32 +67,6 @@ PAY_COLS = ("term", "shard_id", "first_doc", "last_doc", "max_tf", "min_dl",
 
 def idf(n_docs: int, df: int) -> float:
     return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-
-
-def levenshtein_capped(a: str, b: str, maxd: int) -> int:
-    """CLASSIC edit distance (no transpositions), or maxd+1 as soon as the
-    row minimum exceeds `maxd` (the banded early abandon). Kept as the
-    reference for the JVM `levenshtein(a, b, threshold)` built-in the
-    distributed fuzzy PREFILTER runs on; ranking semantics are
-    :func:`damerau_capped`."""
-    la, lb = len(a), len(b)
-    if abs(la - lb) > maxd:
-        return maxd + 1
-    prev = list(range(lb + 1))
-    for i in range(1, la + 1):
-        ca = a[i - 1]
-        cur = [i] + [0] * lb
-        best = i
-        for j in range(1, lb + 1):
-            c = min(prev[j] + 1, cur[j - 1] + 1,
-                    prev[j - 1] + (ca != b[j - 1]))
-            cur[j] = c
-            if c < best:
-                best = c
-        if best > maxd:
-            return maxd + 1
-        prev = cur
-    return prev[lb] if prev[lb] <= maxd else maxd + 1
 
 
 def damerau_capped(a: str, b: str, maxd: int) -> int:
@@ -125,9 +103,9 @@ def osa_distances(term: str, mat: np.ndarray, lens: np.ndarray) -> np.ndarray:
     char-code matrix, rows zero-padded; true lengths in `lens`). The two
     Python loops run over the query length x the max candidate length
     (both tiny); every inner operation is one numpy vector op across the
-    whole candidate axis — no per-term Python, the driver-cache fuzzy
-    path at vocabulary scale. Parity with :func:`damerau_capped` is
-    pytest-pinned."""
+    whole candidate axis — no per-term Python; :meth:`SearchEngine.
+    expand_fuzzy` runs it once per term-dictionary row group. Parity
+    with :func:`damerau_capped` is pytest-pinned."""
     n, max_l = mat.shape
     if n == 0 or not term:
         return np.full(n, max(len(term), max_l), dtype=np.int32)
@@ -289,7 +267,6 @@ class SearchEngine:
 
     def __init__(self, spark: SparkSession, index_dir: str,
                  snapshot_id: str | None = None,
-                 preload_stats_max_terms: int = 200_000,
                  analyzed_fields: tuple[str, ...] = ("url",),
                  synonyms: list[list[str]] | None = None):
         self.spark = spark
@@ -312,18 +289,14 @@ class SearchEngine:
         self.postings = self.cat.read(spark, "postings", self.snapshot_id)
         self.term_stats = self.cat.read(spark, "term_stats", self.snapshot_id)
         # stats is a 1-row driver-written table: read it driver-side
-        # (pyarrow) instead of paying a Spark job per engine construction;
-        # object-store layouts fall back to the distributed read
-        st_d = None
-        try:
-            sp = self.cat.nearest_table_path("stats", self.snapshot_id)
-            if sp is not None:
-                st_d = self.cat.read_arrow(sp).to_pylist()[0]
-        except Exception:
-            st_d = None
-        if st_d is None:
-            st_d = self.cat.read(
-                spark, "stats", self.snapshot_id).first().asDict()
+        # (pyarrow) instead of paying a Spark job per engine construction
+        # (the catalog layout is POSIX-visible, like term_stats below)
+        sp = self.cat.nearest_table_path("stats", self.snapshot_id)
+        if sp is None:
+            raise FileNotFoundError(
+                f"table 'stats' absent in snapshot chain of "
+                f"{self.snapshot_id}")
+        st_d = self.cat.read_arrow(sp).to_pylist()[0]
         self.n_docs = int(st_d["n_docs"])
         self.avgdl = float(st_d["avgdl"])
         self.shard_range = shard_range = int(
@@ -424,16 +397,11 @@ class SearchEngine:
                         / self.url_n_docs_scoring
                     )
         # the term dictionary is read driver-side from the term_stats
-        # footers (index/termdict.py): small vocabularies are pulled whole
-        # into a dict once; above `preload_stats_max_terms` (a web-scale
-        # vocab) each df or prefix lookup reads only the row groups whose
-        # term range can hold the wanted terms — never a Spark job
+        # footers (index/termdict.py): each df lookup, expansion or
+        # sweep reads only the row groups whose term range can hold the
+        # wanted terms — never a Spark job, at any vocabulary size
         tsp = self.cat.nearest_table_path("term_stats", self.snapshot_id)
         self.termdict = TermDictionary(tsp)
-        self._df_cache: dict[str, int] | None = (
-            self.termdict.read_all()
-            if self.termdict.num_rows <= preload_stats_max_terms else None
-        )
         self._payload: dict[tuple[bool, bool], DataFrame] = {}
         _warm_exec_paths(spark)
 
@@ -482,8 +450,6 @@ class SearchEngine:
         return cand.coalesce(1).mapInPandas(one_shard, RESULT_SCHEMA)
 
     def term_dfs(self, terms: list[str]) -> dict[str, int]:
-        if self._df_cache is not None:
-            return {t: self._df_cache[t] for t in terms if t in self._df_cache}
         return self.termdict.dfs(terms)
 
     def _idf_map(self, present: list[str], dfs: dict[str, int],
@@ -760,21 +726,14 @@ class SearchEngine:
         """Terms in the dictionary starting with `prefix`, the
         `max_expansions` highest-df ones (ties -> term asc) — the Lucene
         `top_terms_N` multi-term rewrite (keeps the scored term set
-        bounded no matter how hot the prefix). Deterministic: both the
-        driver-cache and the term-dictionary path order by (df desc, term
-        asc).
+        bounded no matter how hot the prefix).
 
-        Scale shape (web-scale vocab, no df cache): a driver-side
-        term-dictionary scan of only the row groups whose term range
-        overlaps the prefix (:meth:`TermDictionary.prefix`), then the
-        top `max_expansions` by (df desc, term asc)."""
+        Scale shape: a driver-side term-dictionary scan of only the row
+        groups whose term range overlaps the prefix
+        (:meth:`TermDictionary.prefix`), then the top `max_expansions` by
+        (df desc, term asc)."""
         n = self.MAX_PREFIX_EXPANSIONS if max_expansions is None \
             else max_expansions
-        if self._df_cache is not None:
-            hits = [(t, d) for t, d in self._df_cache.items()
-                    if t.startswith(prefix)]
-            hits.sort(key=lambda td: (-td[1], td[0]))
-            return [t for t, _ in hits[:n]]
         tbl = self.termdict.prefix(prefix).sort_by(
             [("df", "descending"), ("term", "ascending")])
         return tbl.column("term").slice(0, n).to_pylist()
@@ -790,11 +749,27 @@ class SearchEngine:
         faithfully, not 'fixed'). Same row-group-pruned dictionary scan."""
         n = self.MAX_PREFIX_EXPANSIONS if max_expansions is None \
             else max_expansions
-        if self._df_cache is not None:
-            return sorted(t for t in self._df_cache
-                          if t.startswith(prefix))[:n]
         return self.termdict.prefix(prefix).sort_by("term") \
             .column("term").slice(0, n).to_pylist()
+
+    def _top_matching(self, prefix: str, rx: str, n: int) -> list[str]:
+        """The `n` highest-df (ties -> term asc) content-dictionary terms
+        under `prefix` that the RE2 pattern `rx` matches — the wildcard
+        and regexp sweep. Row groups arrive one at a time
+        (:meth:`TermDictionary.scan`) and fold into a running top n, so
+        the driver holds one row group plus n rows. Field-namespaced
+        `\\x1f` terms are never candidates (`*ark` must not match
+        `\\x1furl\\x1fspark`)."""
+        best = EMPTY
+        for tbl in self.termdict.scan(prefix):
+            t = tbl.column("term")
+            hit = tbl.filter(pc.and_(pc.invert(pc.starts_with(t, "\x1f")),
+                                     pc.match_substring_regex(t, rx)))
+            if hit.num_rows:
+                best = pa.concat_tables([best, hit]).sort_by(
+                    [("df", "descending"), ("term", "ascending")]
+                ).slice(0, n)
+        return best.column("term").to_pylist()
 
     def expand_wildcard(self, pattern: str,
                         max_expansions: int | None = None) -> list[str]:
@@ -805,38 +780,16 @@ class SearchEngine:
         The pattern is matched verbatim (no analysis; the parser already
         lowercased and charset-checked it).
 
-        Scale shape: the literal prefix BEFORE the first `*` is pushed to
-        the term-dictionary parquet scan as StringStartsWith (row groups
-        outside the prefix range never load); the full pattern then
-        filters via JVM `rlike`. A leading-`*` pattern has no pushable
-        prefix and sweeps the dictionary — the same documented cost ES
-        pays for allow_leading_wildcard."""
+        Scale shape: only the row groups that can hold the literal prefix
+        BEFORE the first `*` are read, and the full pattern filters them
+        with RE2 (pyarrow), one row group at a time. A leading-`*`
+        pattern has no prefix and sweeps the whole dictionary — the same
+        documented cost ES pays for allow_leading_wildcard."""
         n = self.MAX_PREFIX_EXPANSIONS if max_expansions is None \
             else max_expansions
         parts = pattern.split("*")
         rx = "^" + ".*".join(re.escape(p) for p in parts) + "$"
-        if self._df_cache is not None:
-            pat = re.compile(rx)
-            # leading-star patterns sweep the dictionary — keep them out
-            # of the url-field namespace (`*ark` must not match
-            # \x1furl\x1fspark)
-            hits = [(t, d) for t, d in self._df_cache.items()
-                    if not t.startswith("\x1f") and pat.match(t)]
-            hits.sort(key=lambda td: (-td[1], td[0]))
-            return [t for t, _ in hits[:n]]
-        dfq = self.term_stats
-        if parts[0]:
-            dfq = dfq.filter(F.col("term").startswith(parts[0]))
-        else:
-            dfq = dfq.filter(~F.col("term").startswith("\x1f"))
-        rows = (
-            dfq.filter(F.col("term").rlike(rx))
-            .select("term", "df")
-            .orderBy(F.desc("df"), F.asc("term"))
-            .limit(n)
-            .collect()
-        )
-        return [r["term"] for r in rows]
+        return self._top_matching(parts[0], rx, n)
 
     def expand_regexp(self, pattern: str,
                       max_expansions: int | None = None) -> list[str]:
@@ -844,42 +797,27 @@ class SearchEngine:
         `batc.+`), the `max_expansions` highest-df ones (ties -> term
         asc) — the Lucene regexp query under the same top_terms_N
         rewrite as :meth:`expand_prefix`. The pattern is implicitly
-        anchored to the WHOLE term (Lucene RegexpQuery contract) and is
-        not analyzed (the parser already lowercased and charset-checked
-        it to the Python-re/Java-regex-common subset).
+        anchored to the WHOLE term (Lucene RegexpQuery contract), is not
+        analyzed and runs on RE2 (the parser already lowercased it and
+        checked it against the same engine).
 
-        Scale shape: the literal prefix before the first metacharacter
-        is pushed to the term-dictionary parquet scan as
-        StringStartsWith; the anchored pattern then filters via JVM
-        `rlike`. A pattern with no literal prefix sweeps the dictionary
-        — the same documented cost as a leading-star wildcard."""
+        Scale shape: only the row groups that can hold the literal prefix
+        before the first metacharacter are read, and the anchored
+        pattern filters them with RE2, one row group at a time. A
+        pattern with no literal prefix sweeps the whole dictionary — the
+        same documented cost as a leading-star wildcard."""
         n = self.MAX_PREFIX_EXPANSIONS if max_expansions is None \
             else max_expansions
-        rx = f"^(?:{pattern})$"
-        if self._df_cache is not None:
-            pat = re.compile(rx)
-            hits = [(t, d) for t, d in self._df_cache.items()
-                    if not t.startswith("\x1f") and pat.match(t)]
-            hits.sort(key=lambda td: (-td[1], td[0]))
-            return [t for t, _ in hits[:n]]
         lit = re.match(r"^[a-z0-9]*", pattern).group(0)
         if len(lit) < len(pattern) and pattern[len(lit)] in "*+?{":
             # a quantifier binds the preceding literal char — it is not
             # part of the guaranteed prefix (`sp*` matches plain `s`)
             lit = lit[:-1]
-        dfq = self.term_stats
-        if lit:
-            dfq = dfq.filter(F.col("term").startswith(lit))
-        else:
-            dfq = dfq.filter(~F.col("term").startswith("\x1f"))
-        rows = (
-            dfq.filter(F.col("term").rlike(rx))
-            .select("term", "df")
-            .orderBy(F.desc("df"), F.asc("term"))
-            .limit(n)
-            .collect()
-        )
-        return [r["term"] for r in rows]
+        if "|" in pattern:
+            # an alternative need not start with the literal prefix
+            # (`w1|rare.*` matches rareterm1)
+            lit = ""
+        return self._top_matching(lit, f"^(?:{pattern})$", n)
 
     def match_phrase_prefix(
         self,
@@ -931,26 +869,6 @@ class SearchEngine:
             )
         return per_shard.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
-    def _vocab_arrays(self):
-        """Char-code matrix over the cached vocabulary for the vectorized
-        fuzzy path, built ONCE per engine: numpy's U-dtype view gives the
-        zero-padded UCS4 matrix with no per-term Python loop."""
-        va = getattr(self, "_vocab_arrays_cache", None)
-        if va is None:
-            # field-namespaced terms (\x1furl\x1f...) are NOT part of the
-            # content dictionary: without this exclusion `urlabc~2` would
-            # fuzzy-expand into the url namespace (two \x1f insertions)
-            # and score url postings with content-field statistics
-            items = sorted(it for it in self._df_cache.items()
-                           if not it[0].startswith("\x1f"))
-            t_arr = np.array([t for t, _ in items])
-            mat = t_arr.view(np.int32).reshape(len(t_arr), -1)
-            lens = np.char.str_len(t_arr).astype(np.int64)
-            dfs = np.array([d for _, d in items], dtype=np.int64)
-            va = (t_arr, mat, lens, dfs)
-            self._vocab_arrays_cache = va
-        return va
-
     def expand_fuzzy(self, term: str, max_edits: int = 2,
                      max_expansions: int | None = None,
                      prefix: str | None = None) -> list[str]:
@@ -968,77 +886,44 @@ class SearchEngine:
         prefix_length constraint) prunes candidates DURING generation,
         before any truncation — the ES contract, so prefix-sharing
         candidates can never be crowded out of the expansion window by
-        non-prefix terms. Cached path: length band + the vectorized
-        numpy kernel (osa_distances) over the whole vocab matrix, zero
-        per-term Python. Distributed path (no df cache — web-scale
-        vocab): the length band `BETWEEN l-d AND l+d` (valid for OSA
-        too: |len diff| <= OSA) prunes the scan, the JVM early-abandon
-        `levenshtein(a, b, 2d)` built-in prefilters (COMPLETE for OSA:
-        a swap costs two classic edits, so OSA <= d implies classic <=
-        2d), then the EXACT OSA distance is computed executor-side (an
-        Arrow-batched pandas_udf over the banded slice — the same
-        osa_distances numpy kernel, per batch) and only the top-n
-        ranked winners are collected: the driver pull is n rows no
-        matter how fat the short-term band is (for len(term) <=
-        2*max_edits the classic-2d prefilter passes essentially the
-        whole band — bounding happens AFTER the exact distance, via
-        orderBy/limit, never via an unranked truncation). Both paths
-        rank identically (pytest-pinned)."""
+        non-prefix terms.
+
+        Scale shape: the row groups that can hold `prefix` (all of them
+        without one) are read one at a time (:meth:`TermDictionary.
+        scan`); the length band `l-d .. l+d` (valid for OSA: |len diff|
+        <= OSA) and the `\\x1f` field namespace are filtered out in
+        Arrow, the vectorized numpy kernel (osa_distances) computes the
+        exact distance of the rest, and the hits fold into a running top
+        n — the driver holds one row group plus n rows."""
         n = self.MAX_PREFIX_EXPANSIONS if max_expansions is None \
             else max_expansions
         if max_edits not in (1, 2):
             raise ValueError("max_edits must be 1 or 2")
-        if self._df_cache is not None:
-            if not self._df_cache:
-                return []
-            t_arr, mat, lens, dfs = self._vocab_arrays()
-            band = np.abs(lens - len(term)) <= max_edits
-            if prefix:
-                band &= np.char.startswith(t_arr, prefix)
-            idx = np.nonzero(band)[0]
-            if not len(idx):
-                return []
-            sub_lens = lens[idx]
-            width = int(sub_lens.max())
-            d = osa_distances(term, mat[idx][:, :width], sub_lens)
-            keep = d <= max_edits
-            kept = idx[keep]
-            hits = sorted(zip(d[keep].tolist(), (-dfs[kept]).tolist(),
-                              t_arr[kept].tolist()))
-            return [t for _d, _df, t in hits[:n]]
         lo, hi = len(term) - max_edits, len(term) + max_edits
-        cand = (
-            self.term_stats.filter(F.length("term").between(lo, hi))
-            # content dictionary only — see the _vocab_arrays exclusion
-            .filter(~F.col("term").startswith("\x1f"))
-        )
-        if prefix:
-            cand = cand.filter(F.col("term").startswith(prefix))
-        cand = cand.select(
-            "term", "df",
-            F.levenshtein(F.lit(term), F.col("term"),
-                          2 * max_edits).alias("d0"),
-        ).filter(F.col("d0") >= 0)  # -1 = beyond the classic prefilter
-
-        @pandas_udf("int")
-        def _osa(terms: pd.Series) -> pd.Series:
-            vals = terms.to_numpy(dtype="U")
-            if not len(vals):
-                return pd.Series([], dtype="int32")
-            m = vals.view(np.int32).reshape(len(vals), -1)
-            ls = np.char.str_len(vals).astype(np.int64)
-            return pd.Series(osa_distances(term, m, ls))
-
-        rows = (
-            cand.withColumn("osa", _osa("term"))
-            .filter(F.col("osa") <= max_edits)
-            # the exact rank, pushed distributed: TakeOrdered of n rows
-            # is the ONLY thing that crosses to the driver
-            .orderBy(F.asc("osa"), F.desc("df"), F.asc("term"))
-            .limit(n)
-            .collect()
-        )
-        return [r["term"] for r in rows]
+        best: list[tuple[int, int, str]] = []
+        for tbl in self.termdict.scan(prefix or ""):
+            t = tbl.column("term")
+            ln = pc.utf8_length(t)
+            band = tbl.filter(pc.and_(
+                pc.and_(pc.greater_equal(ln, lo), pc.less_equal(ln, hi)),
+                # field-namespaced terms are not part of the content
+                # dictionary: `urlabc~2` must not expand into the url
+                # namespace (two \x1f insertions) and score url postings
+                # with content-field statistics
+                pc.invert(pc.starts_with(t, "\x1f"))))
+            if not band.num_rows:
+                continue
+            t_arr = np.array(band.column("term").to_pylist())
+            mat = t_arr.view(np.int32).reshape(len(t_arr), -1)
+            lens = np.char.str_len(t_arr).astype(np.int64)
+            d = osa_distances(term, mat, lens)
+            keep = np.nonzero(d <= max_edits)[0]
+            dfs = band.column("df").to_numpy()
+            best.extend(zip(d[keep].tolist(), (-dfs[keep]).tolist(),
+                            t_arr[keep].tolist()))
+            best.sort()
+            del best[n:]
+        return [t for _d, _df, t in best]
 
     def suggest(self, prefix: str, n: int = 10) -> list[tuple[str, int]]:
         """Search-bar autocomplete (the ES term suggester / Kibana
@@ -1087,8 +972,8 @@ class SearchEngine:
         strictly more frequent than the input, "always" never filters.
         `min_doc_freq` here is an absolute doc count (ES also accepts a
         fraction; pinned to the absolute form). Candidate generation
-        rides :meth:`expand_fuzzy` (banded vocab scan / JVM prefilter —
-        never a full-vocab driver pull). Returns
+        rides :meth:`expand_fuzzy` (a banded dictionary sweep, one row
+        group at a time — never a full-vocab driver pull). Returns
         [(suggestion, df, distance)]."""
         from picdexer_spark.functions.tokenize import tokenize_py
 
@@ -1128,18 +1013,13 @@ class SearchEngine:
 
     def vocab_size(self) -> int:
         """Content-dictionary term count (field-namespaced `\\x1f` terms
-        excluded) — the V in :meth:`suggest_phrase`'s Laplace smoothing.
-        Driver-dict count when the vocab cache holds, else the footer
-        row count minus the namespaced terms (a dictionary prefix scan of
-        the `\\x1f` range); cached per engine."""
+        excluded) — the V in :meth:`suggest_phrase`'s Laplace smoothing:
+        the footer row count minus the namespaced terms (a dictionary
+        scan of the `\\x1f` range); cached per engine."""
         v = getattr(self, "_vocab_size_cache", None)
         if v is None:
-            if self._df_cache is not None:
-                v = sum(1 for t in self._df_cache
-                        if not t.startswith("\x1f"))
-            else:
-                v = (self.termdict.num_rows
-                     - self.termdict.prefix("\x1f").num_rows)
+            v = self.termdict.num_rows - sum(
+                t.num_rows for t in self.termdict.scan("\x1f"))
             self._vocab_size_cache = v
         return v
 

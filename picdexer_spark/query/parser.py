@@ -44,6 +44,9 @@ from __future__ import annotations
 
 import re
 
+import pyarrow as pa
+import pyarrow.compute as pc
+
 from picdexer_spark.functions.tokenize import tokenize_py
 
 _OPS = ("AND", "OR")
@@ -60,10 +63,16 @@ _TOKEN_RE = re.compile(r'[^\s":]+:"[^"]*"|"[^"]*"|\S+')
 _FUZZY_RE = re.compile(r"^(.*?)~([12]?)$", re.DOTALL)
 _WILDCARD_RE = re.compile(r"^[a-z0-9*]+$")
 _BOOST_RE = re.compile(r"^(.+)\^(\d+(?:\.\d+)?)$", re.DOTALL)
-# Lucene regexp charset subset that means the same thing compiled by
-# Python `re` (driver vocab cache) and Java regex (`rlike` pushdown):
-# literals, char classes, alternation, grouping, ., *, +, ?, {m,n}
+# Lucene regexp charset subset that the engine's regexp sweep (RE2, via
+# pyarrow) reads the way Lucene does: literals, char classes,
+# alternation, grouping, ., *, +, ?, {m} / {m,} / {m,n}
 _REGEXP_BODY_RE = re.compile(r"^[a-z0-9.*+?|()\[\]{},\-]+$")
+#: the only brace forms: a counted repetition (RE2 reads any other brace
+#: — `{,n}`, `{`, `{}` — as a literal, Lucene has no `{,n}` form)
+_REGEXP_REPEAT_RE = re.compile(r"\{\d+(?:,\d*)?\}")
+#: a one-row column to compile a regexp body against: RE2 validates the
+#: pattern only when there is a row to run it on
+_RE2_PROBE = pa.array([""], pa.string())
 
 
 def _analyze_words(words: list[str], mode: str) -> list[str]:
@@ -116,9 +125,10 @@ def _analyze_words(words: list[str], mode: str) -> list[str]:
             # term; the engine expands it against the term dictionary
             # (SearchEngine.expand_regexp, the same top_terms_N
             # scoring_boolean rewrite as prefix/wildcard). OR-context
-            # only. The charset is the subset that compiles identically
-            # under Python re and Java regex (no anchors/backrefs/
-            # escapes), refused otherwise.
+            # only. The charset is a Lucene subset (no anchors/backrefs/
+            # escapes); braces must be counted repetitions, and the body
+            # must compile under RE2 — the engine that runs it, which
+            # also refuses stacked quantifiers (`*+`, `++`, `?+`).
             if mode != "disjunctive":
                 raise ValueError(
                     "regexp terms are only supported in OR context"
@@ -130,9 +140,14 @@ def _analyze_words(words: list[str], mode: str) -> list[str]:
                     "subset (lowercase literals and . * + ? | ( ) [ ] "
                     "{ } , -)"
                 )
+            if re.search(r"[{}]", _REGEXP_REPEAT_RE.sub("", body)):
+                raise ValueError(
+                    f"regexp {w!r}: a brace must open a counted "
+                    "repetition {m}, {m,} or {m,n}"
+                )
             try:
-                re.compile(body)
-            except re.error as e:
+                pc.match_substring_regex(_RE2_PROBE, pattern=body)
+            except pa.ArrowInvalid as e:
                 raise ValueError(f"bad regexp {w!r}: {e}") from None
             terms.append(f"/{body}/")
             continue

@@ -18,8 +18,9 @@ analogue owns four tables plus a manifest:
                      file sorted by term in fixed ~1 MB row groups
                      (index/termdict.py writes every copy), so the
                      footers' per-row-group term ranges are a terms
-                     index: the engine's TermDictionary answers df and
-                     prefix lookups driver-side by reading only the row
+                     index: the engine's TermDictionary answers df
+                     lookups and prefix, wildcard, regexp and fuzzy
+                     expansions driver-side by reading only the row
                      groups that can hold the wanted terms
         stats/       n_docs, total_len, avgdl        (single row)
         metrics/     shard_id, docs_indexed, postings_emitted,

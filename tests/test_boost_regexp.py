@@ -17,13 +17,15 @@ Regexp contract (Lucene RegexpQuery): the pattern is lowercased, NOT
 analyzed, implicitly anchored to the whole term, expanded against the
 dictionary via the top_terms_N df-ranked rewrite (cap 50) and scored as
 a scoring_boolean disjunction. OR-context only; charset restricted to
-the Python-re/Java-regex-common subset. Pins:
+a Lucene subset that RE2 (the engine's regexp sweep) reads the same way.
+Pins:
 
-- expansion identity vs a python re over the full vocabulary on BOTH
-  the df-cache and the distributed dictionary path (quantifier right
-  after the literal prefix exercises the prefix-pushdown guard);
+- expansion identity vs a python re over the full vocabulary (a
+  quantifier right after the literal prefix and a top-level alternation
+  exercise the prefix-pushdown guards);
 - query_string `/pat/` scores exactly the expanded disjunction;
-- refusals: AND context, charset escapes/anchors, invalid pattern.
+- refusals: AND context, charset escapes/anchors, invalid pattern,
+  braces that are not a counted repetition, stacked quantifiers.
 """
 
 import re
@@ -149,34 +151,34 @@ def _py_expand_re(oracle, pattern, n=50):
     return [t for t, _ in hits[:n]]
 
 
-PATTERNS = ("w1[0-3]", "w.", "rareterm1+", "w(1|2)0", "rare.*m1")
+PATTERNS = ("w1[0-3]", "w.", "rareterm1+", "w(1|2)0", "rare.*m1",
+            "w1|rareterm1", "w5{0,1}3", ".*m1")
 
 
 def test_expand_regexp_cache_path_matches_reference(spark, built):
+    """Name kept from the two-path engine: the one dictionary path
+    against a python re over the oracle's vocabulary."""
     idx, oracle = built
     eng = SearchEngine(spark, idx)
-    assert eng._df_cache is not None
     for pat in PATTERNS:
         got = eng.expand_regexp(pat)
         assert got == _py_expand_re(oracle, pat), pat
         assert got, pat  # every pattern matches something — not vacuous
+        assert eng.expand_regexp(pat, 2) == _py_expand_re(oracle, pat, 2)
 
 
 def test_expand_regexp_distributed_path_parity(spark, built):
+    """Name kept from the two-path engine: the df lookups a regexp
+    expansion is scored with, against the oracle."""
     idx, oracle = built
-    cached = SearchEngine(spark, idx)
-    dist = SearchEngine(spark, idx, preload_stats_max_terms=0)
-    assert dist._df_cache is None
-    for pat in PATTERNS:
-        assert dist.expand_regexp(pat) == cached.expand_regexp(pat), pat
-    exp = cached.expand_regexp("w1[0-3]")
+    eng = SearchEngine(spark, idx)
+    exp = eng.expand_regexp("w1[0-3]")
     probe = exp + ["zzznope", "\x1furl\x1fhttps"]
-    got = dist.term_dfs(probe)
-    assert got == cached.term_dfs(probe)
+    got = eng.term_dfs(probe)
     assert {t: got[t] for t in exp} == {
         t: len(oracle.postings[t]) for t in exp}
     assert "zzznope" not in got and "\x1furl\x1fhttps" in got
-    assert dist.vocab_size() == cached.vocab_size() == len(oracle.postings)
+    assert eng.vocab_size() == len(oracle.postings)
 
 
 def test_query_string_regexp_scores_expansion(spark, built):
@@ -202,7 +204,7 @@ def test_regexp_anchored_whole_term(spark, built):
 def test_regexp_refusals(spark, built):
     idx, _ = built
     eng = SearchEngine(spark, idx)
-    for q in ("/w1./ AND w0", r"/w\d/", "/w[/"):
+    for q in ("/w1./ AND w0", r"/w\d/", "/w[/", "/w5{,1}3/", "/w5*+3/"):
         with pytest.raises(ValueError):
             eng.search_query_string(q, 10)
     # uppercase is LOWERCASED, not refused (the wildcard contract)

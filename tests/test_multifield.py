@@ -136,28 +136,28 @@ def test_multi_match_most_and_best_fields(spark, built):
 
 
 def test_dictionary_surface_never_leaks_namespace(spark, built):
-    idx, _, _ = built
+    idx, text_oracle, url_oracle = built
     eng = SearchEngine(spark, idx)
-    # leading-star wildcard sweeps the dictionary — must skip \x1f terms
-    assert all(not t.startswith("\x1f")
-               for t in eng.expand_wildcard("*ite3"))
+    # leading-star wildcard and prefix-less regexp sweep the dictionary —
+    # they must skip \x1f terms (`.` matches \x1f) and find exactly the
+    # content terms
+    assert any(t.endswith("ite3") for t in url_oracle.postings)
+    want = {t for t in text_oracle.postings if t.endswith("ite3")}
+    assert set(eng.expand_wildcard("*ite3", 10**6)) == want
+    assert set(eng.expand_regexp(".*ite3", 10**6)) == want
     # fuzzy: 'urlsite3'-ish shapes would be 2 edits from the namespaced
-    # term if the vocab matrix included it
+    # term if the sweep read it
     for t in eng.expand_fuzzy("urlp", 2):
         assert not t.startswith("\x1f")
-    dist = SearchEngine(spark, idx, preload_stats_max_terms=0)
-    for t in dist.expand_fuzzy("urlp", 2):
-        assert not t.startswith("\x1f")
-    # the dictionary path: namespaced dfs resolve per field, and the
-    # vocabulary count leaves the url namespace out
-    _, text_oracle, url_oracle = built
+    # namespaced dfs resolve per field, and the vocabulary count leaves
+    # the url namespace out
     probe = ["https", "zzznope"] + [
         URL_FIELD_NS + t for t in ("https", "zzznope")]
     want = {URL_FIELD_NS + "https": len(url_oracle.postings["https"])}
     if "https" in text_oracle.postings:
         want["https"] = len(text_oracle.postings["https"])
-    assert dist.term_dfs(probe) == eng.term_dfs(probe) == want
-    assert dist.vocab_size() == eng.vocab_size() == len(text_oracle.postings)
+    assert eng.term_dfs(probe) == want
+    assert eng.vocab_size() == len(text_oracle.postings)
     assert all(not t.startswith("\x1f")
                for t, _df in eng.suggest("s", 50))
 

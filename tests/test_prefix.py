@@ -2,8 +2,9 @@
 analyzed text field — the discover box `mach*` syntax).
 
 - parser accept/refuse boundaries for `*` placement;
-- expand_prefix: top_terms_N rewrite pinned (df desc, term asc, cap), and
-  the driver-cache path == the distributed term-dictionary path;
+- expand_prefix / expand_fuzzy / term_dfs / vocab_size: the
+  term-dictionary answers equal a brute force over the whole term_stats
+  table (top_terms_N rewrite pinned: df desc, term asc, cap);
 - end-to-end: search_query_string over a prefix is bit-identical to
   search() over the manually expanded term set (scoring_boolean — each
   expanded term keeps its own idf).
@@ -15,7 +16,7 @@ from picdexer_spark.fixtures.pages import gen_pages
 from picdexer_spark.index.build import IndexConfig, build_index
 from picdexer_spark.query.bm25 import SearchEngine
 from picdexer_spark.query.parser import parse_kuery, parse_query_string
-from picdexer_spark.sources.catalog import URL_FIELD_NS
+from picdexer_spark.sources.catalog import URL_FIELD_NS, IndexCatalog
 
 N = 600
 
@@ -27,6 +28,14 @@ def built(spark, tmp_path_factory):
     build_index(spark, spark.createDataFrame(pdf), idx,
                 IndexConfig(shard_range=128))
     return idx
+
+
+def _dictionary(idx) -> dict[str, int]:
+    """{term: df} of the whole term_stats table — the brute-force side."""
+    tbl = IndexCatalog.read_arrow(
+        IndexCatalog(idx).nearest_table_path("term_stats"))
+    return dict(zip(tbl.column("term").to_pylist(),
+                    tbl.column("df").to_pylist()))
 
 
 def test_parser_prefix_boundaries():
@@ -54,30 +63,27 @@ def test_parser_prefix_boundaries():
 
 
 def test_expand_prefix_order_cap_and_distributed_parity(spark, built):
+    """Name kept from the two-path engine; the one dictionary path is
+    checked against a brute force over the whole term_stats table."""
+    vocab = _dictionary(built)
     eng = SearchEngine(spark, built)
-    assert eng._df_cache is not None
     want_full = [t for t, _ in sorted(
-        ((t, d) for t, d in eng._df_cache.items() if t.startswith("w1")),
+        ((t, d) for t, d in vocab.items() if t.startswith("w1")),
         key=lambda td: (-td[1], td[0]))]
     assert len(want_full) > 5  # non-degenerate: w1, w1x, w1xx...
     assert eng.expand_prefix("w1") == want_full[:50]
     assert eng.expand_prefix("w1", max_expansions=3) == want_full[:3]
     assert eng.expand_prefix("zzznope") == []
-    # distributed path (no df cache) must agree exactly
-    dist = SearchEngine(spark, built, preload_stats_max_terms=0)
-    assert dist._df_cache is None
-    assert dist.expand_prefix("w1") == want_full[:50]
-    assert dist.expand_prefix("w1", max_expansions=3) == want_full[:3]
-    # df lookups and the vocabulary count agree too: present, absent and
+    assert eng.expand_prefix_alpha("w1") == sorted(want_full)[:50]
+    # df lookups and the vocabulary count: present, absent and
     # url-field-namespaced terms
     url_https = URL_FIELD_NS + "https"
     probe = want_full[:3] + ["zzznope", url_https, URL_FIELD_NS + "zzznope"]
-    want_dfs = {t: eng._df_cache[t] for t in want_full[:3] + [url_https]}
+    want_dfs = {t: vocab[t] for t in want_full[:3] + [url_https]}
     assert eng.term_dfs(probe) == want_dfs
-    assert dist.term_dfs(probe) == want_dfs
-    assert dist.term_dfs([]) == {}
-    assert dist.vocab_size() == eng.vocab_size() == sum(
-        1 for t in eng._df_cache if not t.startswith("\x1f"))
+    assert eng.term_dfs([]) == {}
+    assert eng.vocab_size() == sum(
+        1 for t in vocab if not t.startswith("\x1f"))
 
 
 def test_prefix_search_matches_manual_expansion(spark, built):
@@ -135,7 +141,7 @@ def test_fuzzy_transpositions_are_one_edit():
     edit (OSA), so `baord~1` finds `board`; OSA never re-edits a
     transposed pair (`ca` vs `abc` stays 3, unlike unrestricted
     Damerau's 2)."""
-    from picdexer_spark.query.bm25 import damerau_capped, levenshtein_capped
+    from picdexer_spark.query.bm25 import damerau_capped
 
     assert damerau_capped("baord", "board", 1) == 1
     assert damerau_capped("baord", "board", 2) == 1
@@ -143,12 +149,10 @@ def test_fuzzy_transpositions_are_one_edit():
     assert damerau_capped("part", "prat", 1) == 1
     assert damerau_capped("part", "part", 2) == 0
     assert damerau_capped("part", "xyzq", 2) == 3  # capped overflow
-    # the classic kernel stays the JVM-prefilter reference (swap = 2)
-    assert levenshtein_capped("baord", "board", 2) == 2
 
 
 def test_osa_vectorized_matches_scalar():
-    """The numpy driver-cache kernel == the scalar OSA reference over a
+    """The numpy kernel of the fuzzy sweep == the scalar OSA reference over a
     randomized vocabulary (the no-Python-loop rewrite parity pin)."""
     import random
 
@@ -172,14 +176,19 @@ def test_osa_vectorized_matches_scalar():
 
 
 def test_expand_fuzzy_order_cap_and_distributed_parity(spark, built):
+    """Name kept from the two-path engine; the one row-group sweep is
+    checked against a scalar OSA brute force over the whole content
+    dictionary."""
     from picdexer_spark.query.bm25 import damerau_capped
 
+    vocab = _dictionary(built)
     eng = SearchEngine(spark, built)
-    assert eng._df_cache is not None
 
-    def brute(term, d):
+    def brute(term, d, pre=""):
         hits = []
-        for t, df_ in eng._df_cache.items():
+        for t, df_ in vocab.items():
+            if t.startswith("\x1f") or not t.startswith(pre):
+                continue
             dist = damerau_capped(term, t, d)
             if dist <= d:
                 hits.append((dist, -df_, t))
@@ -191,21 +200,13 @@ def test_expand_fuzzy_order_cap_and_distributed_parity(spark, built):
         assert len(want) > 3, (term, d)  # non-degenerate expansion
         assert eng.expand_fuzzy(term, d) == want[:50]
         assert eng.expand_fuzzy(term, d, max_expansions=4) == want[:4]
-    # the distributed path (classic-2d JVM prefilter + exact OSA re-check)
-    # ranks identically to the cached numpy path
-    dist_eng = SearchEngine(spark, built, preload_stats_max_terms=0)
-    assert dist_eng.expand_fuzzy("w1", 1) == brute("w1", 1)[:50]
-    assert dist_eng.expand_fuzzy("w123", 1, max_expansions=4) == \
-        brute("w123", 1)[:4]
-    # prefix constraint prunes DURING generation (before the cap), on
-    # both paths identically
-    def brute_pre(term, d, pre):
-        return [t for t in brute(term, d) if t.startswith(pre)]
-    want_pre = brute_pre("w1", 2, "w1")
+    # prefix constraint prunes DURING generation (before the cap)
+    want_pre = brute("w1", 2, "w1")
     assert len(want_pre) > 1
     assert eng.expand_fuzzy("w1", 2, prefix="w1") == want_pre[:50]
-    assert dist_eng.expand_fuzzy("w1", 2, max_expansions=3,
-                                 prefix="w1") == want_pre[:3]
+    assert eng.expand_fuzzy("w1", 2, max_expansions=3,
+                            prefix="w1") == want_pre[:3]
+    assert eng.expand_fuzzy("zzzzzzzzzz", 1) == []
     with pytest.raises(ValueError):
         eng.expand_fuzzy("w1", 3)
 

@@ -3,12 +3,13 @@
 Contract: the pattern is unanalyzed (lowercase + dictionary charset +
 stars only), expands against the term dictionary via the same
 top_terms_N df-ranked rewrite as prefix (cap 50, df desc / term asc),
-and scores as a scoring_boolean disjunction. OR-context only; the
-literal prefix before the first star is a pushed StringStartsWith scan
-distributed-side. Pins:
+and scores as a scoring_boolean disjunction. OR-context only; only the
+term-dictionary row groups that can hold the literal prefix before the
+first star are read. Pins:
 
-- expansion identity vs a python reference over the full vocabulary,
-  on BOTH the df-cache and the distributed dictionary path;
+- expansion identity vs a python reference over the full vocabulary
+  (the oracle's postings), and the df lookups the expansions score
+  with;
 - query_string routing: `w1*3` scores exactly the expanded disjunction
   (rank identity vs the brute-force oracle);
 - leading-star patterns work (`*erm1` -> rareterm1) and are the
@@ -54,30 +55,29 @@ def _py_expand(oracle, pattern, n=50):
 
 
 def test_expand_wildcard_cache_path_matches_reference(spark, built):
+    """Name kept from the two-path engine: the one dictionary path
+    against the python reference."""
     idx, oracle = built
     eng = SearchEngine(spark, idx)
-    assert eng._df_cache is not None
-    for pat in ("w1*3", "*erm1", "w*0", "rare*m1*"):
+    for pat in ("w1*3", "*erm1", "w*0", "rare*m1*", "w9*"):
         assert eng.expand_wildcard(pat) == _py_expand(oracle, pat), pat
+        assert eng.expand_wildcard(pat, 2) == \
+            _py_expand(oracle, pat, 2), pat
 
 
 def test_expand_wildcard_distributed_path_parity(spark, built):
+    """Name kept from the two-path engine: the df lookups the expansions
+    are scored with — present terms carry the oracle's df, absent ones
+    are missing, namespaced ones resolve."""
     idx, oracle = built
-    cached = SearchEngine(spark, idx)
-    dist = SearchEngine(spark, idx, preload_stats_max_terms=0)
-    assert dist._df_cache is None
-    for pat in ("w1*3", "*erm1", "w9*"):
-        assert dist.expand_wildcard(pat) == cached.expand_wildcard(pat), pat
-    # the df lookups the expansions are scored with: present terms carry
-    # the oracle's df, absent ones are missing, namespaced ones resolve
-    exp = cached.expand_wildcard("w1*3")
+    eng = SearchEngine(spark, idx)
+    exp = eng.expand_wildcard("w1*3")
     probe = exp + ["zzznope", "\x1furl\x1fhttps"]
-    got = dist.term_dfs(probe)
-    assert got == cached.term_dfs(probe)
+    got = eng.term_dfs(probe)
     assert {t: got[t] for t in exp} == {
         t: len(oracle.postings[t]) for t in exp}
     assert "zzznope" not in got and "\x1furl\x1fhttps" in got
-    assert dist.vocab_size() == cached.vocab_size() == len(oracle.postings)
+    assert eng.vocab_size() == len(oracle.postings)
 
 
 def test_query_string_wildcard_scores_expansion(spark, built):
