@@ -15,13 +15,17 @@ rewrite through without any distributed work.
 dictionary reader. :meth:`~TermDictionary.dfs` answers df lookups by
 reading only the row groups whose range can hold a wanted term;
 :meth:`~TermDictionary.scan` yields, one row group at a time, the rows
-under a prefix (the empty prefix sweeps the whole dictionary). Prefix
-expansion concatenates what it yields (:meth:`~TermDictionary.prefix`);
-the wildcard, regexp and fuzzy sweeps fold it into a running top-n, so
-they hold one row group in memory whatever the vocabulary size. It is
-correct on any layout: a file written before the sort (one row group
-spanning the whole alphabet, or unsorted groups) just has wider ranges,
-so more groups are read.
+under a prefix (the empty prefix sweeps the whole dictionary), and
+:meth:`~TermDictionary.top` folds that scan into a running top-n, so
+prefix, wildcard, regexp and fuzzy expansions hold one row group plus n
+rows in memory whatever the vocabulary size. It is correct on any
+layout: a file written before the sort (one row group spanning the
+whole alphabet, or unsorted groups) just has wider ranges, so more
+groups are read.
+
+:class:`TermRanges` is the footer part on its own — per-row-group
+`term` ranges over any set of parquet files — shared with the postings
+reader (query/local.py), whose files are laid out the same way.
 """
 
 from __future__ import annotations
@@ -64,24 +68,20 @@ def write_term_stats(df: DataFrame, path: str) -> None:
     )
 
 
-class TermDictionary:
-    """Driver-side reader over one term_stats directory.
+class TermRanges:
+    """Per-row-group `term` [min, max] ranges of a set of parquet files,
+    read from their footers once. A row group without min/max statistics
+    on `term` counts as covering every term, so any layout is answered
+    correctly; a sorted one just lets fewer groups through."""
 
-    Construction reads only the parquet footers: :attr:`num_rows` (the
-    vocabulary size) and, per row group, its `term` [min, max] range. A
-    row group without min/max statistics counts as covering every term.
-    """
-
-    def __init__(self, path: str):
-        files = sorted(glob.glob(os.path.join(path, "*.parquet")))
-        if not files:
-            raise FileNotFoundError(f"no parquet files under {path}")
+    def __init__(self, files: list[str]):
         self._files: list[tuple[str, pq.FileMetaData]] = []
         #: (file index, row-group index, min term | None, max term | None)
         self._groups: list[tuple[int, int, str | None, str | None]] = []
         self.num_rows = 0
         for f in files:
-            md = pq.ParquetFile(f).metadata
+            with pq.ParquetFile(f) as pf:
+                md = pf.metadata
             fi = len(self._files)
             self._files.append((f, md))
             self.num_rows += md.num_rows
@@ -96,16 +96,60 @@ class TermDictionary:
                 else:
                     self._groups.append((fi, g, None, None))
 
-    def _read(self, groups) -> pa.Table:
-        """(term, df) rows of the given row groups, one read per file."""
+    def covering(self, terms) -> list[tuple[int, int, str | None, str | None]]:
+        """The row groups whose range can hold one of `terms`."""
+        want = sorted(set(terms))
+        if not want:
+            return []
+
+        def covers(lo, hi):
+            if lo is None:
+                return True
+            i = bisect_left(want, lo)
+            return i < len(want) and want[i] <= hi
+
+        return [g for g in self._groups if covers(g[2], g[3])]
+
+    def read(self, groups, columns) -> list[pa.Table]:
+        """`columns` of the given row groups, one table per file. A
+        column a file lacks is left out of its table (callers unify with
+        ``concat_tables(promote_options="default")``, which fills nulls)."""
         by_file: dict[int, list[int]] = {}
         for fi, g, _lo, _hi in groups:
             by_file.setdefault(fi, []).append(g)
         parts = []
         for fi, rgs in by_file.items():
             f, md = self._files[fi]
-            parts.append(pq.ParquetFile(f, metadata=md).read_row_groups(
-                rgs, columns=["term", "df"]))
+            names = md.schema.names
+            with pq.ParquetFile(f, metadata=md) as pf:
+                parts.append(pf.read_row_groups(
+                    rgs, columns=[c for c in columns if c in names]))
+        return parts
+
+
+#: sort keys of the top_terms_N rewrite: df desc, ties by term
+BY_DF = [("df", "descending"), ("term", "ascending")]
+#: sort keys of a term-order walk
+BY_TERM = [("term", "ascending")]
+
+
+class TermDictionary(TermRanges):
+    """Driver-side reader over one term_stats directory.
+
+    Construction reads only the parquet footers (:class:`TermRanges`):
+    :attr:`num_rows` (the vocabulary size) and, per row group, its `term`
+    [min, max] range.
+    """
+
+    def __init__(self, path: str):
+        files = sorted(glob.glob(os.path.join(path, "*.parquet")))
+        if not files:
+            raise FileNotFoundError(f"no parquet files under {path}")
+        super().__init__(files)
+
+    def _read(self, groups) -> pa.Table:
+        """(term, df) rows of the given row groups, one read per file."""
+        parts = self.read(groups, ["term", "df"])
         # "default" promotion unifies a writer's nullability with EMPTY's
         return pa.concat_tables([EMPTY, *parts], promote_options="default")
 
@@ -114,15 +158,7 @@ class TermDictionary:
         want = sorted(set(terms))
         if not want:
             return {}
-
-        def covers(lo, hi):
-            if lo is None:
-                return True
-            i = bisect_left(want, lo)
-            return i < len(want) and want[i] <= hi
-
-        groups = [g for g in self._groups if covers(g[2], g[3])]
-        tbl = self._read(groups)
+        tbl = self._read(self.covering(want))
         tbl = tbl.filter(pc.is_in(tbl.column("term"),
                                   value_set=pa.array(want, pa.string())))
         return dict(zip(tbl.column("term").to_pylist(),
@@ -144,7 +180,20 @@ class TermDictionary:
                                                     prefix))
                 yield tbl
 
-    def prefix(self, prefix: str) -> pa.Table:
-        """(term, df) rows of every term starting with `prefix`, in no
-        particular order (:meth:`scan`, concatenated)."""
-        return pa.concat_tables([EMPTY, *self.scan(prefix)])
+    def top(self, prefix: str, n: int, keys, keep=None) -> pa.Table:
+        """The first `n` (term, df) rows under `prefix` in `keys` order
+        (:data:`BY_DF` or :data:`BY_TERM`; term is unique, so the order
+        is total), optionally only the rows for which `keep(table)`
+        returns a true mask. The scan folds into a running top n: the
+        driver holds one row group plus n rows."""
+        best = EMPTY
+        if n <= 0:
+            return best
+        for tbl in self.scan(prefix):
+            if keep is not None:
+                tbl = tbl.filter(keep(tbl))
+            if tbl.num_rows > n:
+                tbl = tbl.take(pc.select_k_unstable(tbl, n, keys))
+            if tbl.num_rows:
+                best = pa.concat_tables([best, tbl]).sort_by(keys).slice(0, n)
+        return best

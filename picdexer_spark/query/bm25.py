@@ -1,27 +1,47 @@
-"""Distributed BM25 top-k search over the postings table.
+"""BM25 top-k search over the postings table.
 
 The query-side analogue of ES `_search` that the reference's Kibana saved
 objects issue (reference: internal/setup/assets/kibana.ndjson:1,8 — analyzed
-`text` fields scored with BM25, `_score` field) — what Lucene does for the
-reference deployment, re-expressed as a Spark plan:
+`text` fields scored with BM25, `_score` field). One query set-up
+(:meth:`SearchEngine._prepare`: validation, df/idf, the per-shard
+scorer) feeds two executions of the same kernels:
 
-  postings.filter(term IN q)        -- parquet row-group pruning: postings
-                                       are range-partitioned+sorted by term,
-                                       so non-matching row groups never load
-    .groupBy(shard_id)              -- shuffle of CANDIDATE blocks only
-    .applyInPandas(score_shard)     -- exact block-max top-k per doc-range
-                                       shard (query/wand.py); per-shard top-k
-                                       is sufficient: global top-k is a
-                                       subset of the union of shard top-ks
-    .orderBy(score desc, doc_id)    -- TakeOrdered k (driver merge)
+- in process, for a collected top-k (:meth:`SearchEngine.search_topk`,
+  and the hit lists of the highlighters) — how an ES shard scores a
+  query inside the process that holds it, with no Spark job:
+
+    footers (once per engine)       -- each postings row group's term
+                                       [min, max] range (query/local.py)
+    read_row_groups(candidates)     -- pyarrow reads only the row groups
+                                       that can hold a query term
+    filter(is_in) + per shard_id    -- exact block-max top-k_eff per
+                                       doc-range shard (query/wand.py)
+    deletes scan of the candidates  -- tombstones, filtered to the ids
+    lexsort (score desc, doc_id)    -- merge, first k
+
+  A query whose candidate row groups exceed LOCAL_TOPK_MAX_BYTES runs
+  the Spark plan below instead, for the executors' parallel decode;
+
+- as a lazy Spark plan, for the DataFrame that compositions build on
+  (:meth:`SearchEngine.search`: filters, shaping, search_indices, ...):
+
+    postings.filter(term IN q)      -- parquet row-group pruning: postings
+                                       files are sorted by term in ~1 MB
+                                       row groups, so non-matching groups
+                                       never load
+      .groupBy(shard_id)            -- shuffle of CANDIDATE blocks only
+      .applyInPandas(score_shard)   -- the same per-shard kernel; global
+                                       top-k is a subset of the union of
+                                       shard top-ks
+      .orderBy(score desc, doc_id)  -- TakeOrdered k (driver merge)
 
 Global statistics (N, avgdl, per-term global df) come from the tiny
 stats table and the term dictionary (index/termdict.py: a driver-side read
 of the few term_stats row groups that can hold the query terms — no Spark
-job), captured into the UDF closure, the broadcast-small-dim pattern. The
-same dictionary answers every multi-term rewrite — prefix, wildcard,
-regexp and fuzzy expansions sweep it one row group at a time on the
-driver, whatever the vocabulary size.
+job), captured into the scorer's closure, the broadcast-small-dim
+pattern. The same dictionary answers every multi-term rewrite — prefix,
+wildcard, regexp and fuzzy expansions sweep it one row group at a time
+on the driver, whatever the vocabulary size.
 
 BM25 spec pinned in oracle/reference.py; k1=1.2 b=0.75 (ES defaults).
 """
@@ -31,17 +51,19 @@ from __future__ import annotations
 import math
 import os
 import re
+from collections import Counter
+from typing import Callable, NamedTuple
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-from picdexer_spark.index.termdict import EMPTY, TermDictionary
+from picdexer_spark.index.termdict import BY_DF, BY_TERM, TermDictionary
 from picdexer_spark.oracle.reference import B, K1
+from picdexer_spark.query.local import PostingsReader, tombstoned
 from picdexer_spark.query.wand import (
     TermBlocks,
     field_match_scores,
@@ -63,6 +85,27 @@ RESULT_SCHEMA = StructType([StructField("doc_id", LongType()),
 #: pos_enc)
 PAY_COLS = ("term", "shard_id", "first_doc", "last_doc", "max_tf", "min_dl",
             "n", "doc_ids_enc", "tfs_enc", "dls_enc")
+
+
+#: candidate posting bytes (compressed, summed from the footers of the
+#: row groups a query would read) above which :meth:`SearchEngine.
+#: search_topk` runs the Spark plan instead of scoring in process: the
+#: in-process path decodes and scores on one driver thread, the Spark
+#: plan on every executor core after a fixed ~0.4 s job cost. Measured
+#: crossover (local[4], 4 vCPUs, a 90k-doc 3-snapshot chain whose head
+#: terms fill 32 MB of row groups): there, 64-head-term queries tie (in
+#: process 0.9-1.1 s, Spark 0.83-1.05 s) and 8-term ones still run 2.5x
+#: faster in process; below it the in-process path won every query.
+LOCAL_TOPK_MAX_BYTES = 32 << 20
+
+
+class _Scoring(NamedTuple):
+    """A prepared top-k: the posting terms to read, from which field's
+    table (`url`), with positions (`pos`), and the per-shard scorer."""
+    terms: list
+    url: bool
+    pos: bool
+    scorer: Callable
 
 
 def idf(n_docs: int, df: int) -> float:
@@ -403,6 +446,7 @@ class SearchEngine:
         tsp = self.cat.nearest_table_path("term_stats", self.snapshot_id)
         self.termdict = TermDictionary(tsp)
         self._payload: dict[tuple[bool, bool], DataFrame] = {}
+        self._readers: dict[bool, PostingsReader] = {}
         _warm_exec_paths(spark)
 
     def _empty(self) -> DataFrame:
@@ -507,7 +551,9 @@ class SearchEngine:
         boosts: dict[str, float] | None = None,
         stats_override: tuple[dict, int, float] | None = None,
     ) -> DataFrame:
-        """Top-k (doc_id, score), globally ordered (score desc, doc_id asc).
+        """Top-k (doc_id, score), globally ordered (score desc, doc_id asc),
+        as a lazy Spark plan that compositions build on;
+        :meth:`search_topk` returns the same rows, collected, in process.
 
         `stats_override`: optional (dfs, n_docs, avgdl) replacing this
         index's OWN scoring statistics — the coordinator hook
@@ -542,6 +588,21 @@ class SearchEngine:
         group (a duplicated clause would double-count in ES but not
         here — refused, not guessed). Degenerate shapes reduce to the
         flat modes so their plans and latencies are identical."""
+        q = self._prepare(terms, mode, k, prune, after, groups, slop,
+                          min_should_match, field, boosts, stats_override)
+        if q is None:
+            return self._empty()
+        return self._ranked(self._candidates(q.terms, q.url, q.pos),
+                            q.scorer, k)
+
+    def _prepare(self, terms, mode="disjunctive", k=10, prune=True,
+                 after=None, groups=None, slop=0, min_should_match=1,
+                 field=None, boosts=None,
+                 stats_override=None) -> _Scoring | None:
+        """Validate a top-k query, look up its dfs and build its
+        per-shard scorer: the set-up both executions share — the Spark
+        plan of :meth:`search` and the in-process :meth:`search_topk`.
+        Arguments as :meth:`search`; None when no doc can match."""
         if after is not None:
             after = (float(after[0]), int(after[1]))
         if slop < 0 or (slop and mode != "phrase"):
@@ -578,7 +639,7 @@ class SearchEngine:
         if mode == "groups":
             groups = [sorted(set(g)) for g in groups if g]
             if not groups:
-                return self._empty()
+                return None
             flat = [t for g in groups for t in g]
             if len(flat) != len(set(flat)):
                 raise ValueError(
@@ -594,16 +655,16 @@ class SearchEngine:
             )
         uniq = sorted(set(terms))
         if not uniq:
-            return self._empty()
+            return None
         dfs = self.term_dfs(uniq)
         if mode in ("conjunctive", "phrase") and any(
             t not in dfs for t in uniq
         ):
-            return self._empty()  # a required term matches nothing
+            return None  # a required term matches nothing
         if mode == "groups":
             gpres = [[t for t in g if t in dfs] for g in groups]
             if any(not g for g in gpres):
-                return self._empty()  # a required group matches nothing
+                return None  # a required group matches nothing
             # degenerate shapes -> the flat kernels (identical plans)
             if len(gpres) == 1:
                 mode, groups = "disjunctive", None
@@ -614,11 +675,11 @@ class SearchEngine:
                 groups = gpres
         present = [t for t in uniq if t in dfs]
         if not present:
-            return self._empty()
+            return None
         # a doc can only match PRESENT terms, so msm > |present| is
         # unsatisfiable (ES: an absent optional clause never matches)
         if min_should_match > len(present):
-            return self._empty()
+            return None
         if stats_override is None:
             idf_dfs = dfs
         else:
@@ -630,20 +691,22 @@ class SearchEngine:
             idf_dfs = {t: stats_override[0][t] for t in present}
         idf_map = self._idf_map(present, idf_dfs, n_docs_sc, ns, boosts)
 
-        # proximity payload only when needed
-        cand = self._candidates(present, url=bool(ns), pos=mode == "phrase")
         scorer_terms = list(terms) if mode == "phrase" else present
         scorer = _make_shard_scorer(scorer_terms, idf_map, k, mode,
                                     avgdl_sc, prune, self._tomb_counts,
                                     after=after, groups=groups, slop=slop,
                                     msm=min_should_match)
+        # proximity payload (pos_enc) only when needed
+        return _Scoring(present, bool(ns), mode == "phrase", scorer)
+
+    def _ranked(self, cand: DataFrame, scorer, k: int) -> DataFrame:
+        """The Spark top-k plan over candidate blocks: per-shard kernel,
+        tombstone anti-join (a broadcast of the `deletes` frame, never
+        collected), global (score desc, doc_id asc) order, limit k."""
         per_shard = self._apply_shard_scorer(cand, scorer)
         if self._tomb_counts:
-            # drop tombstoned docs distributed-side (deletes stays a DF;
-            # broadcast anti-join — never collected)
             per_shard = per_shard.join(
-                F.broadcast(self.deletes), "doc_id", "left_anti"
-            )
+                F.broadcast(self.deletes), "doc_id", "left_anti")
         return per_shard.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def search_synonyms(
@@ -712,11 +775,7 @@ class SearchEngine:
         scorer = _make_shard_scorer(
             flat, idf_map, k, kmode, avgdl_sc, prune=False,
             tomb_counts=self._tomb_counts, groups=kernel_classes)
-        per_shard = self._apply_shard_scorer(cand, scorer)
-        if self._tomb_counts:
-            per_shard = per_shard.join(
-                F.broadcast(self.deletes), "doc_id", "left_anti")
-        return per_shard.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return self._ranked(cand, scorer, k)
 
     #: Lucene top_terms_N rewrite cap for prefix expansion (ES default 50)
     MAX_PREFIX_EXPANSIONS = 50
@@ -728,15 +787,14 @@ class SearchEngine:
         `top_terms_N` multi-term rewrite (keeps the scored term set
         bounded no matter how hot the prefix).
 
-        Scale shape: a driver-side term-dictionary scan of only the row
-        groups whose term range overlaps the prefix
-        (:meth:`TermDictionary.prefix`), then the top `max_expansions` by
-        (df desc, term asc)."""
+        Scale shape: a driver-side scan of only the term-dictionary row
+        groups whose term range overlaps the prefix, folded into a
+        running top `max_expansions` by (df desc, term asc)
+        (:meth:`TermDictionary.top`) — one row group plus n rows in
+        memory, however many terms share the prefix."""
         n = self.MAX_PREFIX_EXPANSIONS if max_expansions is None \
             else max_expansions
-        tbl = self.termdict.prefix(prefix).sort_by(
-            [("df", "descending"), ("term", "ascending")])
-        return tbl.column("term").slice(0, n).to_pylist()
+        return self.termdict.top(prefix, n, BY_DF).column("term").to_pylist()
 
     def expand_prefix_alpha(self, prefix: str,
                             max_expansions: int | None = None) -> list[str]:
@@ -746,30 +804,27 @@ class SearchEngine:
         unlike the top_terms_N df-ranked rewrite of :meth:`expand_prefix`;
         this is the documented ES match_phrase_prefix gotcha where a hot
         completion can fall outside the first-50 window — reproduced
-        faithfully, not 'fixed'). Same row-group-pruned dictionary scan."""
+        faithfully, not 'fixed'). Same row-group-pruned scan, folded into
+        a running first n by term."""
         n = self.MAX_PREFIX_EXPANSIONS if max_expansions is None \
             else max_expansions
-        return self.termdict.prefix(prefix).sort_by("term") \
-            .column("term").slice(0, n).to_pylist()
+        return self.termdict.top(prefix, n, BY_TERM).column("term") \
+            .to_pylist()
 
     def _top_matching(self, prefix: str, rx: str, n: int) -> list[str]:
         """The `n` highest-df (ties -> term asc) content-dictionary terms
         under `prefix` that the RE2 pattern `rx` matches — the wildcard
-        and regexp sweep. Row groups arrive one at a time
-        (:meth:`TermDictionary.scan`) and fold into a running top n, so
-        the driver holds one row group plus n rows. Field-namespaced
-        `\\x1f` terms are never candidates (`*ark` must not match
-        `\\x1furl\\x1fspark`)."""
-        best = EMPTY
-        for tbl in self.termdict.scan(prefix):
+        and regexp sweep, a filtered :meth:`TermDictionary.top`.
+        Field-namespaced `\\x1f` terms are never candidates (`*ark` must
+        not match `\\x1furl\\x1fspark`)."""
+
+        def keep(tbl):
             t = tbl.column("term")
-            hit = tbl.filter(pc.and_(pc.invert(pc.starts_with(t, "\x1f")),
-                                     pc.match_substring_regex(t, rx)))
-            if hit.num_rows:
-                best = pa.concat_tables([best, hit]).sort_by(
-                    [("df", "descending"), ("term", "ascending")]
-                ).slice(0, n)
-        return best.column("term").to_pylist()
+            return pc.and_(pc.invert(pc.starts_with(t, "\x1f")),
+                           pc.match_substring_regex(t, rx))
+
+        return self.termdict.top(prefix, n, BY_DF, keep).column("term") \
+            .to_pylist()
 
     def expand_wildcard(self, pattern: str,
                         max_expansions: int | None = None) -> list[str]:
@@ -862,12 +917,7 @@ class SearchEngine:
             fixed, idf_map, k, "phrase_prefix", self.avgdl_scoring, prune,
             self._tomb_counts, after=after, alts=alts,
         )
-        per_shard = self._apply_shard_scorer(cand, scorer)
-        if self._tomb_counts:
-            per_shard = per_shard.join(
-                F.broadcast(self.deletes), "doc_id", "left_anti"
-            )
-        return per_shard.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return self._ranked(cand, scorer, k)
 
     def expand_fuzzy(self, term: str, max_edits: int = 2,
                      max_expansions: int | None = None,
@@ -890,16 +940,21 @@ class SearchEngine:
 
         Scale shape: the row groups that can hold `prefix` (all of them
         without one) are read one at a time (:meth:`TermDictionary.
-        scan`); the length band `l-d .. l+d` (valid for OSA: |len diff|
-        <= OSA) and the `\\x1f` field namespace are filtered out in
-        Arrow, the vectorized numpy kernel (osa_distances) computes the
-        exact distance of the rest, and the hits fold into a running top
-        n — the driver holds one row group plus n rows."""
+        scan`). Two exact lower bounds on the OSA distance drop rows in
+        Arrow before any Python sees them: the length difference (the
+        band `l-d .. l+d`) and half the L1 distance between character
+        histograms (an insertion or deletion moves the histogram by 1, a
+        substitution by at most 2, a transposition not at all). The
+        `\\x1f` field namespace is filtered out too; the vectorized numpy
+        kernel (osa_distances) computes the exact distance of the rest,
+        and the hits fold into a running top n — the driver holds one
+        row group plus n rows."""
         n = self.MAX_PREFIX_EXPANSIONS if max_expansions is None \
             else max_expansions
         if max_edits not in (1, 2):
             raise ValueError("max_edits must be 1 or 2")
         lo, hi = len(term) - max_edits, len(term) + max_edits
+        qhist = Counter(term)
         best: list[tuple[int, int, str]] = []
         for tbl in self.termdict.scan(prefix or ""):
             t = tbl.column("term")
@@ -911,6 +966,16 @@ class SearchEngine:
                 # namespace (two \x1f insertions) and score url postings
                 # with content-field statistics
                 pc.invert(pc.starts_with(t, "\x1f"))))
+            # L1(hist(t), hist(term)) = sum over the term's chars c of
+            # |count_c(t) - count_c(term)|, plus t's other chars
+            # (len(t) minus the counts above)
+            t = band.column("term")
+            l1 = pc.utf8_length(t)
+            for c, m in qhist.items():
+                cnt = pc.count_substring(t, c)
+                l1 = pc.add(l1, pc.subtract(pc.abs(pc.subtract(cnt, m)),
+                                            cnt))
+            band = band.filter(pc.less_equal(l1, 2 * max_edits))
             if not band.num_rows:
                 continue
             t_arr = np.array(band.column("term").to_pylist())
@@ -2439,12 +2504,7 @@ class SearchEngine:
             return pd.DataFrame({"doc_id": ids[order],
                                  "score": scores[order]})
 
-        per_shard = self._apply_shard_scorer(cand, mm_shard)
-        if tomb_counts:
-            per_shard = per_shard.join(
-                F.broadcast(self.deletes), "doc_id", "left_anti"
-            )
-        return per_shard.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return self._ranked(cand, mm_shard, k)
 
     def span_first(self, term: str, end: int, k: int = 10) -> DataFrame:
         """ES `span_first` query: the term must occur within the first
@@ -2640,23 +2700,21 @@ class SearchEngine:
           doc edges, never re-centered).
 
         Returns (doc_id, score, best_term, first_pos, snippet) ordered
-        (score desc, doc_id asc). The top-k hit list is collected ONCE
-        (k rows — the ES coordinator hop; bounded by k, never by corpus)
-        and re-broadcast to both the offsets decode and the snippet join:
+        (score desc, doc_id asc). The top-k hit list is computed ONCE,
+        in process (:meth:`search_topk`; k rows — the ES coordinator hop,
+        bounded by k, never by corpus), and broadcast to both the offsets
+        decode and the snippet join:
         re-executing the lazy search plan in two branches would score the
         query twice and risk the branches disagreeing at a tie boundary."""
         from pyspark.sql import Window
 
-        hit_rows = self.search(terms, mode, k).collect()
+        hit_rows = self.search_topk(terms, mode, k)
         if not hit_rows:
             return self.spark.createDataFrame(
                 [], "doc_id long, score double, best_term string, "
                     "first_pos long, snippet string"
             )
-        hits = self.spark.createDataFrame(
-            [(int(r["doc_id"]), float(r["score"])) for r in hit_rows],
-            RESULT_SCHEMA,
-        )
+        hits = self.spark.createDataFrame(hit_rows, RESULT_SCHEMA)
         offs = self.term_offsets(terms, hits.select("doc_id"))
         uniq = sorted(set(terms))
         dfs = self.term_dfs(uniq)
@@ -2730,13 +2788,10 @@ class SearchEngine:
 
         out_schema = ("doc_id long, score double, frag_rank int, "
                       "term string, first_pos long, fragment string")
-        hit_rows = self.search(terms, mode, k).collect()
+        hit_rows = self.search_topk(terms, mode, k)
         if not hit_rows:
             return self.spark.createDataFrame([], out_schema)
-        hits = self.spark.createDataFrame(
-            [(int(r["doc_id"]), float(r["score"])) for r in hit_rows],
-            RESULT_SCHEMA,
-        )
+        hits = self.spark.createDataFrame(hit_rows, RESULT_SCHEMA)
         offs = self.term_offsets(terms, hits.select("doc_id"))
         uniq = sorted(set(terms))
         dfs = self.term_dfs(uniq)
@@ -3059,13 +3114,58 @@ class SearchEngine:
                                       k, mode, negative_boost)
 
     def search_topk(self, terms, mode="disjunctive", k=10, prune=True,
-                    after=None):
-        """Collected [(doc_id, score)], the oracle-comparable form.
-        `after`: search_after cursor, see :meth:`search`."""
-        return [
-            (int(r["doc_id"]), float(r["score"]))
-            for r in self.search(terms, mode, k, prune, after=after).collect()
-        ]
+                    after=None, **opts) -> list[tuple[int, float]]:
+        """Collected [(doc_id, score)], (score desc, doc_id asc) — the
+        oracle-comparable form of :meth:`search` (same arguments, same
+        rows, scores included), executed in process with no Spark job.
+
+        The query's set-up is :meth:`search`'s (:meth:`_prepare`). Then
+        pyarrow reads only the posting row groups whose footer term range
+        can hold a query term (:class:`~picdexer_spark.query.local.
+        PostingsReader`, footers read once per engine), keeps the terms'
+        blocks, and runs the same per-shard kernel on each shard's blocks
+        with the same k + |shard tombstones| over-fetch. Tombstoned
+        candidates are dropped by a `deletes` scan filtered to the
+        candidate ids, and the shard results merge by (score desc,
+        doc_id asc). When the candidate row groups hold more than
+        :data:`LOCAL_TOPK_MAX_BYTES` (a head term at web scale), the
+        Spark plan of :meth:`search` runs instead, for its parallel
+        decode."""
+        q = self._prepare(terms, mode, k, prune, after, **opts)
+        if q is None:
+            return []
+        reader = self._postings_reader(q.url)
+        cols = PAY_COLS + (("pos_enc",) if q.pos else ())
+        groups, nbytes = reader.plan(q.terms, cols)
+        if nbytes > LOCAL_TOPK_MAX_BYTES:
+            rows = self._ranked(self._candidates(q.terms, q.url, q.pos),
+                                q.scorer, k).collect()
+            return [(int(r["doc_id"]), float(r["score"])) for r in rows]
+        pdf = reader.blocks(groups, q.terms, cols).to_pandas()
+        parts = [q.scorer(g) for _, g in pdf.groupby("shard_id", sort=False)]
+        if not parts:
+            return []
+        ids = np.concatenate([p["doc_id"].to_numpy(np.int64) for p in parts])
+        scores = np.concatenate(
+            [p["score"].to_numpy(np.float64) for p in parts])
+        if self._tomb_counts:
+            live = ~np.isin(ids, tombstoned(
+                self.cat.existing_chain_paths("deletes", self.snapshot_id),
+                ids))
+            ids, scores = ids[live], scores[live]
+        top = np.lexsort((ids, -scores))[:k]
+        return list(zip(ids[top].tolist(), scores[top].tolist()))
+
+    def _postings_reader(self, url: bool) -> PostingsReader:
+        """Footer term ranges of the content (or url) posting files of
+        this engine's snapshot chain, read on first use."""
+        r = self._readers.get(url)
+        if r is None:
+            table = "postings_url" if url else "postings"
+            r = PostingsReader(
+                self.cat.existing_chain_paths(table, self.snapshot_id))
+            self._readers[url] = r
+        return r
 
     def search_batch(
         self,

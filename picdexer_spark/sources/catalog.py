@@ -13,7 +13,13 @@ analogue owns four tables plus a manifest:
                      — directory-partitioned by FIELD (one write):
                      field=text/ is the `postings` table, field=url/ the
                      `postings_url` table (Lucene's per-field terms
-                     dictionary; content scans never read url blocks)
+                     dictionary; content scans never read url blocks).
+                     Every writer (builds, appends, merge_chain) lays
+                     each file out sorted by (term, shard_id,
+                     first_doc) in ~1 MB row groups, so each group's
+                     footer term range indexes the blocks: a query,
+                     in process (query/local.py) or as a Spark scan,
+                     reads only the row groups that can hold its terms
         term_stats/  term, df, cf — one row per term of both fields; each
                      file sorted by term in fixed ~1 MB row groups
                      (index/termdict.py writes every copy), so the

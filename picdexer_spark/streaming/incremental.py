@@ -39,7 +39,8 @@ from picdexer_spark.index.build import (
     _write_small_table,
     build_index,
 )
-from picdexer_spark.index.termdict import TERM_STATS_SCHEMA, write_term_stats
+from picdexer_spark.index.termdict import (ROW_GROUP_BYTES,
+                                           TERM_STATS_SCHEMA, write_term_stats)
 from picdexer_spark.sources.catalog import IndexCatalog
 
 
@@ -372,8 +373,16 @@ def merge_chain(spark: SparkSession, index_dir: str,
                  if os.path.isdir(p)]
         if not paths:
             continue
-        spark.read.schema(CHAINED_SCHEMAS[table]).parquet(*paths) \
-            .write.parquet(_dst(table))
+        df = spark.read.schema(CHAINED_SCHEMAS[table]).parquet(*paths)
+        w = df.write
+        if table in ("postings", "postings_url"):
+            # the postings layout every writer keeps (catalog docstring):
+            # each file sorted by (term, shard_id, first_doc) in
+            # ROW_GROUP_BYTES row groups — a per-partition sort, no
+            # exchange; rows are unchanged, only their order in a file
+            w = df.sortWithinPartitions("term", "shard_id", "first_doc") \
+                .write.option("parquet.block.size", ROW_GROUP_BYTES)
+        w.parquet(_dst(table))
     # term_stats/stats are immutable once committed: a file copy keeps
     # them byte-for-byte (term_stats' sorted row-group layout included)
     # without a Spark read+write job each

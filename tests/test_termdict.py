@@ -12,7 +12,10 @@ Pins:
   file (the footer term ranges prune the rest), and every sweep reads
   one row group per read, so the driver holds one group at a time;
 - the builder's own files are sorted by term and keep footer term ranges;
-- those lookups, and engine construction, submit no Spark job at all.
+- those lookups, and engine construction, submit no Spark job at all;
+- prefix expansions with capped n, and fuzzy expansions and term
+  suggestions behind the character-histogram bound, equal a brute force
+  over the builder's own table.
 """
 
 import glob
@@ -199,3 +202,70 @@ def test_uncached_lookups_submit_no_spark_job(spark, built):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def _vocab(idx):
+    tbl = IndexCatalog.read_arrow(
+        IndexCatalog(idx).nearest_table_path("term_stats"))
+    return dict(zip(tbl.column("term").to_pylist(),
+                    tbl.column("df").to_pylist()))
+
+
+def test_prefix_top_n_matches_brute_force(spark, built):
+    """expand_prefix / expand_prefix_alpha fold the prefix scan into a
+    running top n: the answers equal a brute force over the whole table
+    for short prefixes and capped n."""
+    vocab = _vocab(built)
+    eng = SearchEngine(spark, built)
+    for p in ("w", "w1", ""):
+        under = sorted((t, d) for t, d in vocab.items() if t.startswith(p))
+        by_df = [t for t, _ in sorted(under, key=lambda td: (-td[1], td[0]))]
+        assert len(under) > 50, p
+        for n in (0, 1, 7, 50, len(under) + 5):
+            assert eng.expand_prefix(p, n) == by_df[:n], (p, n)
+            assert eng.expand_prefix_alpha(p, n) == \
+                [t for t, _ in under][:n], (p, n)
+
+
+def test_fuzzy_histogram_bound_matches_brute_force(spark, built,
+                                                   monkeypatch):
+    """The character-histogram lower bound only drops rows the OSA
+    kernel would reject: expand_fuzzy and suggest_term equal a brute
+    force with damerau_capped, while fewer rows reach the kernel than
+    the length band holds."""
+    import picdexer_spark.query.bm25 as bm25
+
+    vocab = _vocab(built)
+    eng = SearchEngine(spark, built)
+    cases = [(t, d, pre) for t in ("w1", "w123", "w45", "rareterm7", "w1x")
+             for d in (1, 2) for pre in (None, t[:1], t[:2])]
+    for term, d, pre in cases:
+        want = _fuzzy(vocab, term, d, pre)
+        assert eng.expand_fuzzy(term, d, prefix=pre) == want, (term, d, pre)
+        assert eng.expand_fuzzy(term, d, 3, prefix=pre) == want[:3]
+    for t, size, pl, mode in (("w1x", 5, 1, "missing"),
+                              ("w12", 5, 0, "always"),
+                              ("w12", 3, 1, "popular"),
+                              ("rareterm7x", 4, 2, "missing")):
+        in_df = vocab.get(t, 0)
+        cands = [c for c in _fuzzy(vocab, t, 2, t[:pl] or None,
+                                   max(50, size * 10)) if c != t]
+        hits = sorted((damerau_capped(t, c, 2), -vocab[c], c) for c in cands
+                      if mode != "popular" or vocab[c] > in_df)
+        want = [] if mode == "missing" and in_df else \
+            [(c, -ndf, dd) for dd, ndf, c in hits[:size]]
+        assert eng.suggest_term(t, size, prefix_length=pl,
+                                suggest_mode=mode) == want, t
+
+    rows = []
+    real = bm25.osa_distances
+
+    def spy(term, mat, lens):
+        rows.append(mat.shape[0])
+        return real(term, mat, lens)
+
+    monkeypatch.setattr(bm25, "osa_distances", spy)
+    assert eng.expand_fuzzy("w123", 2)
+    band = sum(1 for t in vocab
+               if not t.startswith("\x1f") and 2 <= len(t) <= 6)
+    assert 0 < sum(rows) < band / 2
