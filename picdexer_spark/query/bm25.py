@@ -20,7 +20,7 @@ scorer) feeds two executions of the same kernels:
     lexsort (score desc, doc_id)    -- merge, first k
 
   A query whose candidate row groups exceed LOCAL_TOPK_MAX_BYTES runs
-  the Spark plan below instead, for the executors' parallel decode;
+  the Spark plan below instead, which bounds the driver's memory;
 
 - as a lazy Spark plan, for the DataFrame that compositions build on
   (:meth:`SearchEngine.search`: filters, shaping, search_indices, ...):
@@ -89,13 +89,15 @@ PAY_COLS = ("term", "shard_id", "first_doc", "last_doc", "max_tf", "min_dl",
 
 #: candidate posting bytes (compressed, summed from the footers of the
 #: row groups a query would read) above which :meth:`SearchEngine.
-#: search_topk` runs the Spark plan instead of scoring in process: the
-#: in-process path decodes and scores on one driver thread, the Spark
-#: plan on every executor core after a fixed ~0.4 s job cost. Measured
-#: crossover (local[4], 4 vCPUs, a 90k-doc 3-snapshot chain whose head
-#: terms fill 32 MB of row groups): there, 64-head-term queries tie (in
-#: process 0.9-1.1 s, Spark 0.83-1.05 s) and 8-term ones still run 2.5x
-#: faster in process; below it the in-process path won every query.
+#: search_topk` runs the Spark plan instead of scoring in process. A
+#: bound on driver memory, not a speed crossover: the in-process path
+#: holds the candidate row groups decoded on the driver, and one query's
+#: peak driver RSS growth measured 2.7-3.5x these bytes (90k-doc
+#: 3-snapshot chain, 1 to 64 head terms, 8 to 31 MB of row groups), so
+#: 32 MB caps it near 110 MB; above that the executors, which stream
+#: row groups, hold the work. No measured query ran faster on the Spark
+#: plan below the bound (local[4], 4 vCPUs: 64 head terms over 31 MB
+#: took 0.86-1.1 s in process and 0.83-1.35 s on Spark).
 LOCAL_TOPK_MAX_BYTES = 32 << 20
 
 
@@ -228,10 +230,12 @@ def _make_shard_scorer(terms, idf_map, k, mode, avgdl, prune,
                        alts=None, msm=1):
     """Per-shard exact top-k_eff scorer. `tomb_counts` maps shard_id -> its
     tombstone COUNT (metadata-sized): each shard over-fetches
-    k + |its tombstones|, and the caller anti-joins the chained `deletes`
-    table afterwards — EXACT, because any live doc in a shard's true top-k
-    sits within the top-(k + |shard tombstones|) of its unfiltered ranking.
-    The tombstone IDS never leave the cluster (no driver collect)."""
+    k + |its tombstones|, and the caller drops the tombstoned ids afterwards
+    — EXACT, because any live doc in a shard's true top-k sits within the
+    top-(k + |shard tombstones|) of its unfiltered ranking. The Spark plan
+    anti-joins the chained `deletes` frame; the in-process top-k reads only
+    the tombstoned ids among its candidates (query/local.py). Neither loads
+    the whole tombstone set."""
     asc = sorted(set(terms))
     ordered = list(terms)  # phrase mode needs the original order
     tomb_counts = tomb_counts or {}
@@ -329,7 +333,16 @@ class SearchEngine:
         self.analyzed_fields = frozenset(analyzed_fields)
         self.cat = IndexCatalog(index_dir)
         self.snapshot_id = snapshot_id or self.cat.current_snapshot()
-        self.postings = self.cat.read(spark, "postings", self.snapshot_id)
+        #: the chain directories of the tables queries scan, resolved
+        #: from the manifest once: the Spark frames below and the
+        #: in-process top-k both read exactly these, so a later
+        #: merge_chain(expire=True) — which drops the folded snapshots
+        #: from the manifest while their directories drain — changes
+        #: neither execution's answer
+        self._dirs = {t: self.cat.existing_chain_paths(t, self.snapshot_id)
+                      for t in ("postings", "postings_url", "deletes")}
+        self.postings = self.cat.read_dirs(spark, "postings",
+                                           self._dirs["postings"])
         self.term_stats = self.cat.read(spark, "term_stats", self.snapshot_id)
         # stats is a 1-row driver-written table: read it driver-side
         # (pyarrow) instead of paying a Spark job per engine construction
@@ -366,18 +379,20 @@ class SearchEngine:
         self.stopwords: tuple[str, ...] = tuple(
             (st_d.get("stopwords") or "").split()
         )
-        # tombstones (upserted/deleted docs) stay DISTRIBUTED: only the
-        # per-shard COUNTS come to the driver (metadata-sized — one row per
-        # shard with tombstones). Each shard scorer over-fetches
-        # k + |its tombstones|; the results are then anti-joined against the
-        # chained `deletes` table (broadcast — tombstone volume is bounded
-        # by compaction cadence) — exact, with zero collect of ids.
-        self.deletes = self.cat.read(spark, "deletes", self.snapshot_id) \
-            .select("doc_id")
+        # tombstones (upserted/deleted docs): only the per-shard COUNTS
+        # come to the driver (metadata-sized — one row per shard with
+        # tombstones). Each shard scorer over-fetches k + |its
+        # tombstones|; the Spark plan then anti-joins the chained
+        # `deletes` frame (broadcast — tombstone volume is bounded by
+        # compaction cadence), and the in-process top-k reads only the
+        # tombstoned ids among its candidates. Neither loads the whole
+        # tombstone set onto the driver.
+        self.deletes = self.cat.read_dirs(
+            spark, "deletes", self._dirs["deletes"]).select("doc_id")
         # a chain with no upsert/delete snapshots provably has no
         # tombstones — skip the counting job entirely (it was a full Spark
         # job over an empty frame, ~0.3 s of every engine construction)
-        if not self.cat.existing_chain_paths("deletes", self.snapshot_id):
+        if not self._dirs["deletes"]:
             self._tomb_counts: dict[int, int] = {}
         else:
             self._tomb_counts = {
@@ -409,7 +424,8 @@ class SearchEngine:
         #: per-field posting tables (Lucene's per-field terms dictionary):
         #: url blocks live apart so content scans never read past them
         self.postings_url = (
-            self.cat.read(spark, "postings_url", self.snapshot_id)
+            self.cat.read_dirs(spark, "postings_url",
+                               self._dirs["postings_url"])
             if self.has_url_field else None
         )
         n_tomb_total = sum(self._tomb_counts.values())
@@ -3129,14 +3145,16 @@ class SearchEngine:
         candidate ids, and the shard results merge by (score desc,
         doc_id asc). When the candidate row groups hold more than
         :data:`LOCAL_TOPK_MAX_BYTES` (a head term at web scale), the
-        Spark plan of :meth:`search` runs instead, for its parallel
-        decode."""
+        Spark plan of :meth:`search` runs instead, so the driver never
+        holds more than that much of decoded postings for one query."""
         q = self._prepare(terms, mode, k, prune, after, **opts)
         if q is None:
             return []
         reader = self._postings_reader(q.url)
         cols = PAY_COLS + (("pos_enc",) if q.pos else ())
         groups, nbytes = reader.plan(q.terms, cols)
+        if not groups:
+            return []
         if nbytes > LOCAL_TOPK_MAX_BYTES:
             rows = self._ranked(self._candidates(q.terms, q.url, q.pos),
                                 q.scorer, k).collect()
@@ -3149,9 +3167,7 @@ class SearchEngine:
         scores = np.concatenate(
             [p["score"].to_numpy(np.float64) for p in parts])
         if self._tomb_counts:
-            live = ~np.isin(ids, tombstoned(
-                self.cat.existing_chain_paths("deletes", self.snapshot_id),
-                ids))
+            live = ~np.isin(ids, tombstoned(self._dirs["deletes"], ids))
             ids, scores = ids[live], scores[live]
         top = np.lexsort((ids, -scores))[:k]
         return list(zip(ids[top].tolist(), scores[top].tolist()))
@@ -3161,9 +3177,8 @@ class SearchEngine:
         this engine's snapshot chain, read on first use."""
         r = self._readers.get(url)
         if r is None:
-            table = "postings_url" if url else "postings"
             r = PostingsReader(
-                self.cat.existing_chain_paths(table, self.snapshot_id))
+                self._dirs["postings_url" if url else "postings"])
             self._readers[url] = r
         return r
 

@@ -28,15 +28,6 @@ import pyarrow.compute as pc
 import pyarrow.dataset as ds
 
 from picdexer_spark.index.termdict import TermRanges
-from picdexer_spark.sources.catalog import POSTINGS_SCHEMA
-
-_ARROW = {"string": pa.string(), "long": pa.int64(), "int": pa.int32(),
-          "binary": pa.binary()}
-#: arrow type of every posting column (the catalog's POSTINGS_SCHEMA):
-#: every read is unified with these, so a column a file lacks comes back
-#: null, as the pinned-schema Spark read returns it
-_TYPES = {name: _ARROW[typ] for name, typ in
-          (f.split() for f in POSTINGS_SCHEMA.split(","))}
 
 
 def _parquet_files(dirs: list[str]) -> list[str]:
@@ -67,9 +58,10 @@ class PostingsReader(TermRanges):
         return groups, nbytes
 
     def blocks(self, groups, terms, columns) -> pa.Table:
-        """`columns` of the posting blocks of `terms` in `groups`."""
-        empty = pa.table({c: pa.array([], _TYPES[c]) for c in columns})
-        tbl = pa.concat_tables([empty, *self.read(groups, columns)],
+        """`columns` of the posting blocks of `terms` in `groups` (at
+        least one). A column some files lack comes back null, as the
+        pinned-schema Spark read returns it."""
+        tbl = pa.concat_tables(self.read(groups, columns),
                                promote_options="default")
         return tbl.filter(pc.is_in(
             tbl.column("term"),

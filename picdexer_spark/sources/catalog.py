@@ -263,20 +263,24 @@ class IndexCatalog:
             [pq.read_table(f) for f in files]
         )
 
+    @staticmethod
+    def read_dirs(spark: SparkSession, table: str,
+                  dirs: list[str]) -> DataFrame:
+        """The chained `table` as the union of `dirs` (one
+        :meth:`existing_chain_paths` resolution), read with the pinned
+        schema."""
+        if not dirs and table in ("deletes", "postings_url"):
+            # optional tables: a chain with no upserts has no
+            # tombstones; one built without the url field has no url
+            # postings
+            return spark.createDataFrame([], CHAINED_SCHEMAS[table])
+        return spark.read.schema(CHAINED_SCHEMAS[table]).parquet(*dirs)
+
     def read(self, spark: SparkSession, table: str,
              snapshot_id: str | None = None) -> DataFrame:
         if table in CHAINED_TABLES:
-            paths = [
-                self.table_path(table, sid)
-                for sid in self.parent_chain(snapshot_id)
-            ]
-            paths = [p for p in paths if os.path.isdir(p)]
-            if not paths and table in ("deletes", "postings_url"):
-                # optional tables: a chain with no upserts has no
-                # tombstones; one built without the url field has no url
-                # postings
-                return spark.createDataFrame([], CHAINED_SCHEMAS[table])
-            return spark.read.schema(CHAINED_SCHEMAS[table]).parquet(*paths)
+            return self.read_dirs(
+                spark, table, self.existing_chain_paths(table, snapshot_id))
         # non-chained tables (term_stats, stats) resolve to the NEAREST
         # ancestor holding the table: a delete-only snapshot records a
         # parent POINTER (its manifest `parent` entry) instead of copying a

@@ -11,6 +11,8 @@ Pins:
   single-shard index, a two-snapshot chain with upserts (tombstones)
   before and after merge_chain, and postings files whose footers carry
   no `term` statistics (and lack columns the kernels never read);
+- an engine built before merge_chain(expire=True) keeps reading the
+  chain it was built on, every ancestor's tombstones included;
 - every call submits no Spark job;
 - the builder's and merge_chain's postings files are sorted by (term,
   shard_id, first_doc), so a one-term lookup reads at most one postings
@@ -169,6 +171,35 @@ def test_parity_chain_with_tombstones_and_after_merge(spark, chain,
         _assert_sorted(f)
     assert all(g[2] is not None
                for g in meng._postings_reader(False)._groups)
+
+
+def test_engine_keeps_its_chain_across_merge_expire(spark, chain,
+                                                   tmp_path):
+    """merge_chain(expire=True) drops the folded snapshots from the
+    manifest but keeps their directories for engines pinned to them. Such
+    an engine's search_topk must go on reading the chain it was built on
+    — every snapshot's postings and every snapshot's tombstones — and
+    equal its Spark plan, also when its first in-process call comes after
+    the merge."""
+    idx = str(tmp_path / "expire")
+    shutil.copytree(chain, idx)
+    up = gen_pages(200, seed=59).iloc[40:60].copy()   # upserts of s1 docs
+    up["text"] = gen_pages(20, seed=73)["text"].to_numpy()
+    up["html"] = None
+    build_incremental(spark, spark.createDataFrame(up), idx,
+                      IndexConfig(shard_range=64), "s3")
+    eng = SearchEngine(spark, idx)
+    assert len(eng.cat.parent_chain()) == 3
+    assert sum(eng._tomb_counts.values()) == 60   # 40 in s2, 20 in s3
+    before = {str(q) + str(k): _spark_rows(eng, q, k)
+              for q in QUERIES for k in KS}
+    assert not eng._readers   # no footers read before the merge
+
+    assert merge_chain(spark, idx, max_segments=1, expire=True)
+    assert eng.cat.parent_chain(eng.snapshot_id) == [eng.snapshot_id]
+    _check_parity(eng, QUERIES)
+    assert {str(q) + str(k): eng.search_topk(k=k, **q)
+            for q in QUERIES for k in KS} == before
 
 
 def test_parity_footers_without_term_ranges(spark, multi, tmp_path):
