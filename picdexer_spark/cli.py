@@ -227,8 +227,7 @@ def cmd_search(conf: dict, q: str, k: int,
     eng = SearchEngine(spark, _index_dir(conf), snapshot_id=snapshot)
     res = (eng.simple_query_string(q, k) if simple
            else eng.search_query_string(q, k))
-    docs = eng.cat.read_live_docs(spark, eng.snapshot_id) \
-        .select("doc_id", "url")
+    docs = eng.live_docs().select("doc_id", "url")
     for r in res.join(docs, "doc_id", "left") \
             .orderBy(F.desc("score"), F.asc("doc_id")).collect():
         print(f"{r['doc_id']}\t{r['score']:.4f}\t{r['url']}")

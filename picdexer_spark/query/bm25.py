@@ -3,27 +3,40 @@
 The query-side analogue of ES `_search` that the reference's Kibana saved
 objects issue (reference: internal/setup/assets/kibana.ndjson:1,8 — analyzed
 `text` fields scored with BM25, `_score` field). One query set-up
-(:meth:`SearchEngine._prepare`: validation, df/idf, the per-shard
-scorer) feeds two executions of the same kernels:
+(:meth:`SearchEngine._prepare` and its synonym and phrase-prefix forms:
+validation, df/idf, the kernel arguments) feeds two executions of the
+same kernels:
 
-- in process, for a collected top-k (:meth:`SearchEngine.search_topk`,
-  and the hit lists of the highlighters) — how an ES shard scores a
-  query inside the process that holds it, with no Spark job:
+- in process, for every collected call — :meth:`SearchEngine.search_topk`
+  (and the hit lists of the highlighters), the kuery strings
+  (:meth:`~SearchEngine.search_query_string`),
+  :meth:`~SearchEngine.search_filtered`, :meth:`~SearchEngine.search_batch`
+  and the match sets of :meth:`~SearchEngine.match_ids` — how an ES shard
+  scores a query inside the process that holds it
+  (:meth:`SearchEngine._score_local`):
 
     footers (once per engine)       -- each postings row group's term
                                        [min, max] range (query/local.py)
     read_row_groups(candidates)     -- pyarrow reads only the row groups
-                                       that can hold a query term
+                                       that can hold a query term (a
+                                       batch reads its union once)
+    [filter's doc ids]              -- a filtered call's one Spark job:
+                                       the matching ids, split per shard
+                                       and applied inside the kernel
     filter(is_in) + per shard_id    -- exact block-max top-k_eff per
                                        doc-range shard (query/wand.py)
     deletes scan of the candidates  -- tombstones, filtered to the ids
     lexsort (score desc, doc_id)    -- merge, first k
 
-  A query whose candidate row groups exceed LOCAL_TOPK_MAX_BYTES runs
-  the Spark plan below instead, which bounds the driver's memory;
+  No other Spark job runs. The calls that return a DataFrame return one
+  built from an Arrow table (sources/catalog.py `arrow_frame`): a local
+  relation whose collect runs no job and which joins as a small input. A
+  call whose candidate row groups (plus 8 B per filtered id) exceed
+  LOCAL_TOPK_MAX_BYTES runs the Spark plan below instead, which bounds
+  the driver's memory;
 
 - as a lazy Spark plan, for the DataFrame that compositions build on
-  (:meth:`SearchEngine.search`: filters, shaping, search_indices, ...):
+  (:meth:`SearchEngine.search`: shaping, search_indices, streaming, ...):
 
     postings.filter(term IN q)      -- parquet row-group pruning: postings
                                        files are sorted by term in ~1 MB
@@ -56,14 +69,21 @@ from typing import Callable, NamedTuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+from pyspark.sql.types import (
+    DoubleType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 from picdexer_spark.index.termdict import BY_DF, BY_TERM, TermDictionary
 from picdexer_spark.oracle.reference import B, K1
-from picdexer_spark.query.local import PostingsReader, tombstoned
+from picdexer_spark.query.local import PostingsReader, num_rows, tombstoned
 from picdexer_spark.query.wand import (
     TermBlocks,
     field_match_scores,
@@ -74,12 +94,25 @@ from picdexer_spark.query.wand import (
     score_phrase_prefix,
     score_synonyms,
 )
-from picdexer_spark.sources.catalog import URL_FIELD_NS, IndexCatalog
+from picdexer_spark.sources.catalog import (
+    URL_FIELD_NS,
+    IndexCatalog,
+    arrow_frame,
+)
 
 #: (doc_id, score) — a StructType, not a DDL string: a string is parsed
 #: through the JVM on every query plan that names it
 RESULT_SCHEMA = StructType([StructField("doc_id", LongType()),
                             StructField("score", DoubleType())])
+
+#: (doc_id) — a match set without scores (:meth:`SearchEngine.match_ids`)
+IDS_SCHEMA = StructType([StructField("doc_id", LongType())])
+
+#: (query_id, rank, doc_id, score) — :meth:`SearchEngine.search_batch`
+BATCH_SCHEMA = StructType([StructField("query_id", LongType()),
+                           StructField("rank", IntegerType()),
+                           StructField("doc_id", LongType()),
+                           StructField("score", DoubleType())])
 
 #: posting-block columns the shard kernels read (proximity queries add
 #: pos_enc)
@@ -102,12 +135,56 @@ LOCAL_TOPK_MAX_BYTES = 32 << 20
 
 
 class _Scoring(NamedTuple):
-    """A prepared top-k: the posting terms to read, from which field's
-    table (`url`), with positions (`pos`), and the per-shard scorer."""
+    """A prepared query: the posting terms whose blocks it reads
+    (`terms`), from which field's table (`url`), with positions (`pos`),
+    and the kernel arguments every execution shares — the Spark plans
+    (:func:`_make_shard_scorer`, :func:`_make_filtered_shard_scorer`) and
+    the in-process one (:meth:`SearchEngine._score_local`). `kterms` are
+    the kernel's terms: the phrase in order, the fixed words of a phrase
+    prefix, else `terms`."""
     terms: list
     url: bool
     pos: bool
-    scorer: Callable
+    mode: str
+    kterms: list
+    idf_map: dict
+    avgdl: float
+    prune: bool = True
+    after: tuple | None = None
+    groups: list | None = None
+    slop: int = 0
+    msm: int = 1
+    alts: list | None = None
+
+    def score(self, blocks, k_eff, allowed=None):
+        """(doc_ids, scores): this query's exact top `k_eff` over one
+        shard's `blocks`, restricted to the sorted uint64 `allowed` ids
+        when given."""
+        return _score_blocks(self.mode, sorted(set(self.kterms)),
+                             list(self.kterms), blocks, self.idf_map,
+                             self.avgdl, k_eff, self.prune, allowed=allowed,
+                             after=self.after, groups=self.groups,
+                             slop=self.slop, alts=self.alts, msm=self.msm)
+
+
+#: no hits: (doc_ids, scores) of an in-process execution
+_NO_HITS = (np.zeros(0, np.int64), np.zeros(0, np.float64))
+
+
+class _Kuery(NamedTuple):
+    """A rewritten kuery string (:meth:`SearchEngine._rewrite_kuery`):
+    `kind` "none" matches nothing; "match" is :meth:`SearchEngine.
+    search_filtered`'s terms, mode, filters (a flat list or a boolean
+    AST; empty = none), groups, slop and boosts; "synonyms" and
+    "phrase_prefix" are the blended-synonym and phrase-autocomplete
+    queries over `terms`."""
+    kind: str
+    terms: tuple | list = ()
+    mode: str = "disjunctive"
+    filters: object = ()
+    groups: list | None = None
+    slop: int = 0
+    boosts: dict | None = None
 
 
 def idf(n_docs: int, df: int) -> float:
@@ -225,43 +302,32 @@ def _score_blocks(mode, asc, ordered, blocks, idf_map, avgdl, k_eff, prune,
                              msm=msm)
 
 
-def _make_shard_scorer(terms, idf_map, k, mode, avgdl, prune,
-                       tomb_counts=None, after=None, groups=None, slop=0,
-                       alts=None, msm=1):
+def _make_shard_scorer(q: _Scoring, k: int, tomb_counts=None):
     """Per-shard exact top-k_eff scorer. `tomb_counts` maps shard_id -> its
     tombstone COUNT (metadata-sized): each shard over-fetches
     k + |its tombstones|, and the caller drops the tombstoned ids afterwards
     — EXACT, because any live doc in a shard's true top-k sits within the
     top-(k + |shard tombstones|) of its unfiltered ranking. The Spark plan
-    anti-joins the chained `deletes` frame; the in-process top-k reads only
-    the tombstoned ids among its candidates (query/local.py). Neither loads
+    anti-joins the chained `deletes` frame; the in-process execution reads
+    only the tombstoned ids among its hits (query/local.py). Neither loads
     the whole tombstone set."""
-    asc = sorted(set(terms))
-    ordered = list(terms)  # phrase mode needs the original order
     tomb_counts = tomb_counts or {}
 
     def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        blocks = _blocks_from_pdf(pdf)
         k_eff = k + tomb_counts.get(int(pdf["shard_id"].iat[0]), 0)
-        ids, scores = _score_blocks(mode, asc, ordered, blocks, idf_map,
-                                    avgdl, k_eff, prune, after=after,
-                                    groups=groups, slop=slop, alts=alts,
-                                    msm=msm)
+        ids, scores = q.score(_blocks_from_pdf(pdf), k_eff)
         return pd.DataFrame({"doc_id": ids, "score": scores})
 
     return score_shard
 
 
-def _make_filtered_shard_scorer(terms, idf_map, k, mode, avgdl, prune,
-                                after=None, groups=None, slop=0, msm=1):
+def _make_filtered_shard_scorer(q: _Scoring, k: int):
     """Cogrouped scorer: (candidate blocks of one shard, allowed doc_ids of
     the same shard) -> exact top-k over the allowed set only. The whitelist
     is applied INSIDE the kernels before top-k selection (a post-filter
     over a top-k would be inexact for selective filters); it is bounded per
     task by shard_range. Tombstoned docs never appear in the whitelist
     (it is computed from the LIVE docs view), so no over-fetch is needed."""
-    asc = sorted(set(terms))
-    ordered = list(terms)
 
     def score_shard(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if len(left) == 0 or len(right) == 0:
@@ -270,14 +336,17 @@ def _make_filtered_shard_scorer(terms, idf_map, k, mode, avgdl, prune,
                  "score": np.zeros(0, np.float64)}
             )
         allowed = np.sort(right["doc_id"].to_numpy(np.uint64))
-        blocks = _blocks_from_pdf(left)
-        ids, scores = _score_blocks(mode, asc, ordered, blocks, idf_map,
-                                    avgdl, k, prune, allowed=allowed,
-                                    after=after, groups=groups, slop=slop,
-                                    msm=msm)
+        ids, scores = q.score(_blocks_from_pdf(left), k, allowed)
         return pd.DataFrame({"doc_id": ids, "score": scores})
 
     return score_shard
+
+
+def _top(ids: np.ndarray, scores: np.ndarray, k: int):
+    """The first `k` of (ids, scores) in rank order: score desc, doc_id
+    asc (Spark's sort-key order)."""
+    o = np.lexsort((ids, -scores))[:k]
+    return ids[o], scores[o]
 
 
 #: sessions whose broadcast/agg execution machinery has been warmed (keyed
@@ -333,14 +402,15 @@ class SearchEngine:
         self.analyzed_fields = frozenset(analyzed_fields)
         self.cat = IndexCatalog(index_dir)
         self.snapshot_id = snapshot_id or self.cat.current_snapshot()
-        #: the chain directories of the tables queries scan, resolved
-        #: from the manifest once: the Spark frames below and the
-        #: in-process top-k both read exactly these, so a later
-        #: merge_chain(expire=True) — which drops the folded snapshots
-        #: from the manifest while their directories drain — changes
-        #: neither execution's answer
+        #: the chain directories of the tables queries read, resolved
+        #: from the manifest once: the Spark frames below (the live-docs
+        #: view among them) and the in-process reads all read exactly
+        #: these, so a later merge_chain(expire=True) — which drops the
+        #: folded snapshots from the manifest while their directories
+        #: drain — changes no answer of this engine
         self._dirs = {t: self.cat.existing_chain_paths(t, self.snapshot_id)
-                      for t in ("postings", "postings_url", "deletes")}
+                      for t in ("docs", "postings", "postings_url",
+                                "deletes")}
         self.postings = self.cat.read_dirs(spark, "postings",
                                            self._dirs["postings"])
         self.term_stats = self.cat.read(spark, "term_stats", self.snapshot_id)
@@ -463,10 +533,45 @@ class SearchEngine:
         self.termdict = TermDictionary(tsp)
         self._payload: dict[tuple[bool, bool], DataFrame] = {}
         self._readers: dict[bool, PostingsReader] = {}
+        self._docs: DataFrame | None = None
+        self._docs_rows = 0
+        self._live: DataFrame | None = None
         _warm_exec_paths(spark)
 
+    def live_docs(self) -> DataFrame:
+        """The doc store minus tombstoned rows, over this engine's pinned
+        `docs` and `deletes` directories; the view is built on first use
+        (one file listing) and reused by every later call."""
+        if self._live is None:
+            self._live = self._all_docs().join(self.deletes, "doc_id",
+                                               "left_anti")
+        return self._live
+
+    def _all_docs(self) -> DataFrame:
+        """The pinned doc store, tombstoned rows included. The collected
+        filters scan it and drop tombstoned ids on the driver
+        (:meth:`_live_ids`), so no broadcast of `deletes` adds a job."""
+        if self._docs is None:
+            self._docs = self.cat.read_dirs(self.spark, "docs",
+                                            self._dirs["docs"])
+            self._docs_rows = num_rows(self._dirs["docs"])
+        return self._docs
+
+    def _live_ids(self, ids: np.ndarray) -> np.ndarray:
+        """`ids` without the tombstoned ones (a `deletes` scan filtered to
+        them, query/local.py)."""
+        if not self._tomb_counts:
+            return ids
+        return ids[~np.isin(ids, tombstoned(self._dirs["deletes"], ids))]
+
     def _empty(self) -> DataFrame:
-        return self.spark.createDataFrame([], RESULT_SCHEMA)
+        return arrow_frame(self.spark, RESULT_SCHEMA)
+
+    def _frame(self, ids: np.ndarray, scores: np.ndarray) -> DataFrame:
+        """(doc_id, score) rows held on the driver as an Arrow-backed
+        frame (collecting it runs no Spark job)."""
+        return arrow_frame(self.spark, RESULT_SCHEMA,
+                           pa.table({"doc_id": ids, "score": scores}))
 
     def _candidates(self, terms, url: bool = False,
                     pos: bool = False) -> DataFrame:
@@ -604,21 +709,21 @@ class SearchEngine:
         group (a duplicated clause would double-count in ES but not
         here — refused, not guessed). Degenerate shapes reduce to the
         flat modes so their plans and latencies are identical."""
-        q = self._prepare(terms, mode, k, prune, after, groups, slop,
+        q = self._prepare(terms, mode, prune, after, groups, slop,
                           min_should_match, field, boosts, stats_override)
         if q is None:
             return self._empty()
-        return self._ranked(self._candidates(q.terms, q.url, q.pos),
-                            q.scorer, k)
+        return self._spark_topk(q, k)
 
-    def _prepare(self, terms, mode="disjunctive", k=10, prune=True,
+    def _prepare(self, terms, mode="disjunctive", prune=True,
                  after=None, groups=None, slop=0, min_should_match=1,
                  field=None, boosts=None,
                  stats_override=None) -> _Scoring | None:
-        """Validate a top-k query, look up its dfs and build its
-        per-shard scorer: the set-up both executions share — the Spark
-        plan of :meth:`search` and the in-process :meth:`search_topk`.
-        Arguments as :meth:`search`; None when no doc can match."""
+        """Validate a top-k query, look up its dfs and build its kernel
+        arguments: the set-up every execution shares — the Spark plans of
+        :meth:`search` and the filtered search, and the in-process
+        :meth:`search_topk` and :meth:`search_filtered`. Arguments as
+        :meth:`search`; None when no doc can match."""
         if after is not None:
             after = (float(after[0]), int(after[1]))
         if slop < 0 or (slop and mode != "phrase"):
@@ -707,13 +812,36 @@ class SearchEngine:
             idf_dfs = {t: stats_override[0][t] for t in present}
         idf_map = self._idf_map(present, idf_dfs, n_docs_sc, ns, boosts)
 
-        scorer_terms = list(terms) if mode == "phrase" else present
-        scorer = _make_shard_scorer(scorer_terms, idf_map, k, mode,
-                                    avgdl_sc, prune, self._tomb_counts,
-                                    after=after, groups=groups, slop=slop,
-                                    msm=min_should_match)
         # proximity payload (pos_enc) only when needed
-        return _Scoring(present, bool(ns), mode == "phrase", scorer)
+        return _Scoring(present, bool(ns), mode == "phrase", mode,
+                        list(terms) if mode == "phrase" else present,
+                        idf_map, avgdl_sc, prune, after, groups, slop,
+                        min_should_match)
+
+    def _spark_topk(self, q: _Scoring, k: int, cond=None) -> DataFrame:
+        """The lazy Spark top-k plan of `q`, restricted to the live docs
+        matching the filter `cond` when given (:meth:`_cogrouped`)."""
+        if cond is None:
+            return self._ranked(self._candidates(q.terms, q.url, q.pos),
+                                _make_shard_scorer(q, k, self._tomb_counts),
+                                k)
+        return self._cogrouped(q, k, cond).orderBy(
+            F.desc("score"), F.asc("doc_id")).limit(k)
+
+    def _cogrouped(self, q: _Scoring, k: int, cond) -> DataFrame:
+        """Per-shard top `k` of `q` over the live docs matching `cond`, as
+        a Spark plan: the candidate posting blocks and the filtered
+        doc_ids are COGROUPED by shard — the whitelist never leaves the
+        cluster and is bounded per task by shard_range."""
+        allowed = self.live_docs().filter(cond).select(
+            F.expr(f"doc_id div {self.shard_range}").alias("shard_id"),
+            "doc_id",
+        )
+        return (
+            self._candidates(q.terms, q.url, q.pos).groupBy("shard_id")
+            .cogroup(allowed.groupBy("shard_id"))
+            .applyInPandas(_make_filtered_shard_scorer(q, k), RESULT_SCHEMA)
+        )
 
     def _ranked(self, cand: DataFrame, scorer, k: int) -> DataFrame:
         """The Spark top-k plan over candidate blocks: per-shard kernel,
@@ -751,6 +879,13 @@ class SearchEngine:
         is `term IN (all members)` (bloom + row-group pruned), the
         per-shard kernel is score_synonyms' bulk path, results reduce
         to one k-row driver merge."""
+        q = self._prepare_synonyms(terms, synonyms, mode, field)
+        return self._empty() if q is None else self._spark_topk(q, k)
+
+    def _prepare_synonyms(self, terms, synonyms, mode="disjunctive",
+                          field=None) -> _Scoring | None:
+        """:meth:`search_synonyms`'s set-up (arguments as there): the
+        blended clauses and their idfs; None when no doc can match."""
         from picdexer_spark.functions.analysis import synonym_classes
 
         if mode not in ("disjunctive", "conjunctive"):
@@ -766,7 +901,7 @@ class SearchEngine:
                 seen.add(cls)
                 classes.append(cls)
         if not classes:
-            return self._empty()
+            return None
         members_all = sorted({ns + m for cls in classes for m in cls})
         dfs = self.term_dfs(members_all)
         kernel_classes: list[tuple[str, tuple[str, ...]]] = []
@@ -775,7 +910,7 @@ class SearchEngine:
             present = tuple(ns + m for m in cls if (ns + m) in dfs)
             if not present:
                 if mode == "conjunctive":
-                    return self._empty()  # a required clause matches nothing
+                    return None  # a required clause matches nothing
                 continue
             rep = present[0]
             # Lucene SynonymQuery#docFreq: the blended clause's df is the
@@ -784,14 +919,11 @@ class SearchEngine:
             idf_map[rep] = idf(n_docs_sc, max(dfs[m] for m in present))
             kernel_classes.append((rep, present))
         if not kernel_classes:
-            return self._empty()
+            return None
         flat = [m for _, ms in kernel_classes for m in ms]
-        cand = self._candidates(flat, url=bool(ns))
         kmode = "synonyms_conj" if mode == "conjunctive" else "synonyms"
-        scorer = _make_shard_scorer(
-            flat, idf_map, k, kmode, avgdl_sc, prune=False,
-            tomb_counts=self._tomb_counts, groups=kernel_classes)
-        return self._ranked(cand, scorer, k)
+        return _Scoring(flat, bool(ns), False, kmode, flat, idf_map,
+                        avgdl_sc, prune=False, groups=kernel_classes)
 
     #: Lucene top_terms_N rewrite cap for prefix expansion (ES default 50)
     MAX_PREFIX_EXPANSIONS = 50
@@ -909,6 +1041,14 @@ class SearchEngine:
         sums the fixed occurrences plus ALL expansion terms (see
         wand.score_phrase_prefix for the full pin). slop and filters are
         refused (not silently approximated). Returns (doc_id, score)."""
+        q = self._prepare_phrase_prefix(terms, max_expansions, prune, after)
+        return self._empty() if q is None else self._spark_topk(q, k)
+
+    def _prepare_phrase_prefix(self, terms, max_expansions=None, prune=True,
+                               after=None) -> _Scoring | None:
+        """:meth:`match_phrase_prefix`'s set-up (arguments as there): the
+        stem's expansions and the phrase weights; None when no doc can
+        match."""
         if not self.has_positions:
             raise ValueError(
                 "phrase search needs an index built with "
@@ -921,19 +1061,16 @@ class SearchEngine:
         fixed = list(terms[:-1])
         alts = self.expand_prefix_alpha(terms[-1], max_expansions)
         if not alts:
-            return self._empty()
+            return None
         uniq_fixed = sorted(set(fixed))
         dfs = self.term_dfs(sorted(set(uniq_fixed) | set(alts)))
         if any(t not in dfs for t in uniq_fixed):
-            return self._empty()  # a required fixed term matches nothing
+            return None  # a required fixed term matches nothing
         idf_map = {t: idf(self.n_docs_scoring, d) for t, d in dfs.items()}
         qterms = sorted(set(uniq_fixed) | set(alts))
-        cand = self._candidates(qterms, pos=True)
-        scorer = _make_shard_scorer(
-            fixed, idf_map, k, "phrase_prefix", self.avgdl_scoring, prune,
-            self._tomb_counts, after=after, alts=alts,
-        )
-        return self._ranked(cand, scorer, k)
+        return _Scoring(qterms, False, True, "phrase_prefix", fixed,
+                        idf_map, self.avgdl_scoring, prune, after,
+                        alts=alts)
 
     def expand_fuzzy(self, term: str, max_edits: int = 2,
                      max_expansions: int | None = None,
@@ -1336,7 +1473,41 @@ class SearchEngine:
         the single docs-table condition, scored OR-groups become CNF
         clauses (mode='groups'); prefix/fuzzy markers expand WITHIN their
         group. Without parens, `lang:en OR lang:de` alternates the two
-        filters (parse_kuery folds the chain into one or-entry)."""
+        filters (parse_kuery folds the chain into one or-entry).
+
+        Two steps: :meth:`_rewrite_kuery` turns the string into scored
+        terms and filters (driver-side dictionary work only), and the
+        execution scores them in process, as :meth:`search_filtered`
+        does. The result is an Arrow-backed frame: collecting it runs no
+        Spark job, and the call itself runs none without a filter and
+        one (the filter's live-docs match set) with one."""
+        return self._execute(self._plan_kuery(q, prune), k)
+
+    def _plan_kuery(self, q: str, prune: bool = True) -> tuple:
+        """Everything :meth:`search_query_string` does before execution:
+        the rewrite (:meth:`_rewrite_kuery`), then the set-up of the shape
+        it names. Returns :meth:`_plan_filtered`'s (scoring, filter
+        condition, filter-only) triple; runs no Spark job and reads no
+        postings, so :meth:`validate_query` is this call."""
+        rw = self._rewrite_kuery(q)
+        if rw.kind == "none":
+            return None, None, False
+        if rw.kind == "synonyms":
+            return self._prepare_synonyms(rw.terms, self._syn_groups,
+                                          rw.mode), None, False
+        if rw.kind == "phrase_prefix":
+            return self._prepare_phrase_prefix(rw.terms,
+                                               prune=prune), None, False
+        return self._plan_filtered(rw.terms, rw.mode, rw.filters, prune,
+                                   groups=rw.groups, slop=rw.slop,
+                                   boosts=rw.boosts)
+
+    def _rewrite_kuery(self, q: str) -> _Kuery:
+        """The rewrite step of :meth:`search_query_string`: parse, drop
+        stopwords, route synonym-class terms, split `term^N` boosts and
+        expand the prefix, fuzzy, wildcard and regexp words through the
+        term dictionary. Raises ValueError on every refused shape; runs
+        no Spark job and reads no postings."""
         from picdexer_spark.query.parser import parse_kuery, parse_kuery_tree
 
         if "(" in q or ")" in q:
@@ -1362,9 +1533,8 @@ class SearchEngine:
                 groups = [g for g in groups if g]
                 if not groups:
                     if fast is None:
-                        return self._empty()
-                    return self.search_filtered([], "disjunctive", fast,
-                                                k, prune)
+                        return _Kuery("none")
+                    return _Kuery("match", filters=fast)
             if self._syn_classes and any(
                     t in self._syn_classes for g in groups for t in g):
                 # boolean-tree queries don't ride the blended kernel —
@@ -1375,21 +1545,9 @@ class SearchEngine:
                     "search_synonyms directly")
             expanded: list[list[str]] = []
             for g in groups:
-                exp: set[str] = set()
-                for t in g:
-                    if len(t) >= 3 and t.startswith("/") and t.endswith("/"):
-                        exp.update(self.expand_regexp(t[1:-1]))
-                    elif t.endswith("*") and "*" not in t[:-1]:
-                        exp.update(self.expand_prefix(t[:-1]))
-                    elif "*" in t:
-                        exp.update(self.expand_wildcard(t))
-                    elif "~" in t:
-                        stem, d = t.rsplit("~", 1)
-                        exp.update(self.expand_fuzzy(stem, int(d)))
-                    else:
-                        exp.add(t)
+                exp = {e for t in g for e in self._expand_word(t)}
                 if not exp:
-                    return self._empty()  # a required group matches nothing
+                    return _Kuery("none")  # a required group matches nothing
                 expanded.append(sorted(exp))
             flat = [t for g in expanded for t in g]
             if len(flat) != len(set(flat)):
@@ -1399,13 +1557,10 @@ class SearchEngine:
                 )
             if not expanded:
                 if fast is None:
-                    return self._empty()
-                return self.search_filtered([], "disjunctive", fast, k,
-                                            prune)
-            if fast is not None:
-                return self.search_filtered(flat, "groups", fast, k, prune,
-                                            groups=expanded)
-            return self.search(flat, "groups", k, prune, groups=expanded)
+                    return _Kuery("none")
+                return _Kuery("match", filters=fast)
+            return _Kuery("match", flat, "groups",
+                          () if fast is None else fast, groups=expanded)
 
         terms, mode, filters = parse_kuery(q)
         if self.stopwords:
@@ -1428,7 +1583,7 @@ class SearchEngine:
                         "the stopwords")
                 terms = plain
                 if not terms:
-                    return self._empty()
+                    return _Kuery("none")
         if self._syn_classes and mode in ("conjunctive", "disjunctive") \
                 and any(t in self._syn_classes for t in terms):
             # a synonym-class term in a FLAT query: Lucene rewrites the
@@ -1446,8 +1601,7 @@ class SearchEngine:
                 raise ValueError(
                     "synonym-expanded terms cannot combine with "
                     "wildcard/fuzzy/boost operators in one query")
-            return self.search_synonyms(terms, self._syn_groups,
-                                        mode=mode, k=k)
+            return _Kuery("synonyms", terms, mode)
         if mode == "phrase_prefix":
             # '"part fil*"' — ES match_phrase_prefix; filters with it are
             # refused (not approximated) until the whitelist path learns
@@ -1457,7 +1611,7 @@ class SearchEngine:
                     "field filters are not supported with a phrase "
                     "prefix query"
                 )
-            return self.match_phrase_prefix(terms, k, prune=prune)
+            return _Kuery("phrase_prefix", terms)
         slop = 0
         if mode.startswith("phrase~"):
             # `"a b"~N` — the query_string sloppy-phrase syntax; the
@@ -1494,28 +1648,29 @@ class SearchEngine:
                for t in terms):
             # parser guarantees prefix/wildcard/fuzzy/regexp only reach
             # here in OR context
-            exp: set[str] = set()
-            for t in terms:
-                if len(t) >= 3 and t.startswith("/") and t.endswith("/"):
-                    exp.update(self.expand_regexp(t[1:-1]))
-                elif t.endswith("*") and "*" not in t[:-1]:
-                    exp.update(self.expand_prefix(t[:-1]))
-                elif "*" in t:
-                    exp.update(self.expand_wildcard(t))
-                elif "~" in t:
-                    stem, d = t.rsplit("~", 1)
-                    exp.update(self.expand_fuzzy(stem, int(d)))
-                else:
-                    exp.add(t)
-            terms = sorted(exp)
+            terms = sorted({e for t in terms for e in self._expand_word(t)})
             if not terms:
                 # every expansion came back empty and no bare terms
-                return self._empty()
-        if filters:
-            return self.search_filtered(terms, mode, filters, k, prune,
-                                        slop=slop, boosts=boosts or None)
-        return self.search(terms, mode, k, prune, slop=slop,
-                           boosts=boosts or None)
+                return _Kuery("none")
+        return _Kuery("match", terms, mode, filters, slop=slop,
+                      boosts=boosts or None)
+
+    def _expand_word(self, t: str) -> list[str]:
+        """The dictionary terms of one analyzed kuery word: `/re/`
+        (:meth:`expand_regexp`), a trailing-`*` prefix
+        (:meth:`expand_prefix`), an inner `*` wildcard
+        (:meth:`expand_wildcard`) and `~N` fuzzy (:meth:`expand_fuzzy`)
+        words expand; a plain word is itself."""
+        if len(t) >= 3 and t.startswith("/") and t.endswith("/"):
+            return self.expand_regexp(t[1:-1])
+        if t.endswith("*") and "*" not in t[:-1]:
+            return self.expand_prefix(t[:-1])
+        if "*" in t:
+            return self.expand_wildcard(t)
+        if "~" in t:
+            stem, d = t.rsplit("~", 1)
+            return self.expand_fuzzy(stem, int(d))
+        return [t]
 
     #: docs-table column types a kuery filter may target, by capability.
     #: Mirrors the ES mapping contract (reference
@@ -1536,9 +1691,7 @@ class SearchEngine:
         if f is None:
             f = {
                 fld.name: fld.dataType.simpleString()
-                for fld in self.cat.read_live_docs(
-                    self.spark, self.snapshot_id
-                ).schema.fields
+                for fld in self.live_docs().schema.fields
             }
             self._docs_fields_cache = f
         return f
@@ -1732,109 +1885,159 @@ class SearchEngine:
         `warc_ts >= "..."` discover-panel constructs; '!=' is ES must_not:
         docs missing the field match). BM25 statistics stay corpus-wide
         (the ES filter-context contract: filters restrict candidates,
-        never reweight scores).
+        never reweight scores). Other arguments as :meth:`search`.
 
-        Plan: the candidate posting blocks and the filtered doc_ids are
-        COGROUPED by shard — the whitelist never leaves the cluster and is
-        bounded per task by shard_range; the kernels apply it before top-k
-        selection, so results are exact at any filter selectivity."""
-        if not filters:
-            return self.search(terms, mode, k, prune, after=after,
-                               groups=groups, slop=slop,
-                               min_should_match=min_should_match,
-                               field=field, boosts=boosts)
+        Executed in process, like :meth:`search_topk`, and returned as an
+        Arrow-backed frame (collecting it runs no Spark job). Spark
+        evaluates the filter once over the live docs and returns the
+        matching ids (the call's one job; none without filters). The
+        driver splits them per shard and hands each shard's ids to the
+        kernel, which applies them before top-k selection, so results
+        are exact at any filter selectivity. Above the byte guard
+        (:meth:`_local`) the Spark plan runs instead: candidate blocks
+        and filtered ids COGROUPED by shard (:meth:`_cogrouped`)."""
+        return self._execute(self._plan_filtered(
+            terms, mode, filters, prune, after, groups, slop,
+            min_should_match, field, boosts), k, after)
+
+    def _plan_filtered(self, terms, mode="disjunctive", filters=(),
+                       prune=True, after=None, groups=None, slop=0,
+                       min_should_match=1, field=None, boosts=None) -> tuple:
+        """:meth:`search_filtered`'s set-up (arguments as there):
+        (the :meth:`_prepare`d scoring or None, the compiled filter or
+        None, whether the query is filter-only). A filter-only query
+        (filters, no terms) is match_all within the filter."""
+        cond = self._filter_cond(filters) if filters else None
+        q = self._prepare(terms, mode, prune, after, groups, slop,
+                          min_should_match, field, boosts)
+        return q, cond, cond is not None and mode != "groups" and not terms
+
+    def _execute(self, plan: tuple, k: int, after=None) -> DataFrame:
+        """The top k of a :meth:`_plan_filtered` triple."""
+        q, cond, filter_only = plan
+        if filter_only:
+            return self._filter_only(cond, k, after)
+        return self._collected(q, k, cond)
+
+    def _filter_only(self, cond, k: int, after=None) -> DataFrame:
+        """A filter-only discover query: match_all within the filter (the
+        Lucene constant-score contract, _score = 1.0); all scores tie, so
+        the search_after cursor reduces to doc_id. One Spark job collects
+        the first k + |tombstones| matching ids, of which at least k are
+        live when k live docs match. When those ids would exceed
+        :data:`LOCAL_TOPK_MAX_BYTES`, the result is the lazy plan over the
+        live docs instead, which holds k rows."""
+        over = k + sum(self._tomb_counts.values())
+        lazy = over * 8 > LOCAL_TOPK_MAX_BYTES
+        base = self.live_docs().filter(cond).select("doc_id") if lazy \
+            else self._allowed_frame(cond)
         if after is not None:
-            after = (float(after[0]), int(after[1]))
-        cond = self._filter_cond(filters)  # validates fields/ops/values
-        if slop < 0 or (slop and mode != "phrase"):
-            raise ValueError("slop is only valid (>= 0) for phrase queries")
-        if isinstance(min_should_match, str):
-            from picdexer_spark.query.parser import parse_min_should_match
-            min_should_match = parse_min_should_match(
-                min_should_match, len(set(terms)))
-        if min_should_match < 1:
-            raise ValueError("min_should_match must be >= 1")
-        if min_should_match > 1 and mode != "disjunctive":
-            raise ValueError(
-                "min_should_match only applies to disjunctive queries")
-        ns, n_docs_sc, avgdl_sc = self._field_stats(field)
-        if ns:
-            terms = [ns + t for t in terms]
-            if groups is not None:
-                groups = [[ns + t for t in g] for g in groups]
-        if (groups is not None) != (mode == "groups"):
-            raise ValueError("`groups` is required for (exactly) mode='groups'")
-        if mode == "groups":
-            groups = [sorted(set(g)) for g in groups if g]
-            if not groups:
-                return self._empty()
-            flat = [t for g in groups for t in g]
-            if len(flat) != len(set(flat)):
-                raise ValueError(
-                    "a term may appear in only one boolean group"
-                )
-            terms = flat
-        if mode not in ("conjunctive", "disjunctive", "phrase", "groups"):
-            raise ValueError(f"unknown mode {mode!r}")
-        if mode == "phrase" and not self.has_positions:
-            raise ValueError(
-                "phrase search needs an index built with "
-                "store_positions=True (this snapshot has positions=False)"
-            )
-        live = self.cat.read_live_docs(self.spark, self.snapshot_id)
-        uniq = sorted(set(terms))
-        if not uniq:
-            # filter-only discover query: match_all within the filter
-            # (the Lucene constant-score contract, _score = 1.0); all
-            # scores tie so the search_after cursor reduces to doc_id
-            base = live.filter(cond)
-            if after is not None:
-                base = base.filter(F.col("doc_id") > F.lit(int(after[1])))
-            return (
-                base.select("doc_id", F.lit(1.0).alias("score"))
-                .orderBy(F.asc("doc_id"))
-                .limit(k)
-            )
-        dfs = self.term_dfs(uniq)
-        if mode in ("conjunctive", "phrase") and any(
-            t not in dfs for t in uniq
-        ):
-            return self._empty()
-        if mode == "groups":
-            gpres = [[t for t in g if t in dfs] for g in groups]
-            if any(not g for g in gpres):
-                return self._empty()  # a required group matches nothing
-            if len(gpres) == 1:
-                mode, groups = "disjunctive", None
-            elif all(len(g) == 1 for g in gpres):
-                mode, groups = "conjunctive", None
-                uniq = sorted(g[0] for g in gpres)
-            else:
-                groups = gpres
-        present = [t for t in uniq if t in dfs]
-        if not present:
-            return self._empty()
-        if min_should_match > len(present):
-            return self._empty()  # unsatisfiable, see search()
-        idf_map = self._idf_map(present, dfs, n_docs_sc, ns, boosts)
+            base = base.filter(F.col("doc_id") > F.lit(int(after[1])))
+        base = base.orderBy("doc_id")
+        if lazy:
+            return base.limit(k).withColumn("score", F.lit(1.0))
+        ids = base.limit(over).toArrow().column("doc_id").to_numpy()
+        ids = self._live_ids(ids)[:k]
+        return self._frame(ids, np.ones(ids.size))
 
-        allowed = live.filter(cond).select(
-            F.expr(f"doc_id div {self.shard_range}").alias("shard_id"),
-            "doc_id",
-        )
-        cand = self._candidates(present, url=bool(ns), pos=mode == "phrase")
-        scorer_terms = list(terms) if mode == "phrase" else present
-        scorer = _make_filtered_shard_scorer(scorer_terms, idf_map, k, mode,
-                                             avgdl_sc, prune,
-                                             after=after, groups=groups,
-                                             slop=slop,
-                                             msm=min_should_match)
-        per_shard = (
-            cand.groupBy("shard_id")
-            .cogroup(allowed.groupBy("shard_id"))
-            .applyInPandas(scorer, RESULT_SCHEMA)
-        )
-        return per_shard.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    def _allowed_frame(self, cond) -> DataFrame:
+        """The doc_ids of the pinned doc store, tombstoned rows included,
+        that match the filter `cond`: the one Spark job of a filtered
+        collected call (the driver drops tombstoned ids after it)."""
+        return self._all_docs().filter(cond).select("doc_id")
+
+    def _collected(self, q: _Scoring | None, k: int, cond=None) -> DataFrame:
+        """The top k of `q` (over the live docs matching the filter `cond`
+        when given), scored in process (:meth:`_local`), as an
+        Arrow-backed frame; above the byte guard, the lazy Spark plan."""
+        if q is None:
+            return self._empty()
+        hits = self._local(q, k, cond)
+        if hits is None:
+            return self._spark_topk(q, k, cond)
+        return self._frame(*_top(*hits, k))
+
+    def _local(self, q: _Scoring, k: int, cond=None):
+        """(doc_ids, scores) of `q` executed in process: each shard's top
+        `k`, tombstones dropped (:meth:`_score_local`), over the live docs
+        matching the filter `cond` when given. None when the call would
+        hold more than :data:`LOCAL_TOPK_MAX_BYTES` on the driver: the
+        candidate row groups' compressed bytes (priced from the footers
+        before any read) plus 8 B per allowed id. The filter's ids come
+        from one Spark job; when the doc store holds more rows than the
+        remaining budget's worth of ids, the job collects at most that
+        many, plus one id to tell that it overflowed."""
+        reader = self._postings_reader(q.url)
+        cols = PAY_COLS + (("pos_enc",) if q.pos else ())
+        groups, nbytes = reader.plan(q.terms, cols)
+        budget = LOCAL_TOPK_MAX_BYTES - nbytes
+        if budget < 0:
+            return None
+        if not groups:
+            return _NO_HITS
+        allowed = None
+        if cond is not None:
+            ids = self._allowed_frame(cond)
+            if self._docs_rows * 8 > budget:
+                # a limit adds a single-partition exchange to the job:
+                # only where the filter could overflow the budget
+                ids = ids.limit(budget // 8 + 1)
+            ids = ids.toArrow().column("doc_id").to_numpy()
+            if ids.size * 8 > budget:
+                return None
+            allowed = np.sort(self._live_ids(ids))
+        shards = self._read_shards(reader, groups, q.terms, cols)
+        return self._score_local([(q, k)], shards, allowed)[0]
+
+    @staticmethod
+    def _read_shards(reader: PostingsReader, groups, terms,
+                     cols) -> dict[int, dict[str, TermBlocks]]:
+        """The posting blocks of `terms` in the row groups `groups`, read
+        with pyarrow: {shard_id: {term: TermBlocks}}."""
+        pdf = reader.blocks(groups, terms, cols).to_pandas()
+        return {int(s): _blocks_from_pdf(g)
+                for s, g in pdf.groupby("shard_id", sort=False)}
+
+    def _score_local(self, jobs, shards, allowed=None) -> list[tuple]:
+        """The in-process execution every collected call shares. `jobs`
+        is [(_Scoring, k)]; each query's kernel runs on each shard's
+        blocks of its own terms and keeps that shard's top k. Without
+        `allowed` a shard keeps k + |its tombstones| and one `deletes`
+        scan, filtered to every job's hits, drops the tombstoned ones
+        (the over-fetch of :func:`_make_shard_scorer`). `allowed` (sorted
+        int64 ids of live docs, a filter's match set) is split per shard
+        with searchsorted and applied inside the kernel; it holds no
+        tombstoned id. Returns [(doc_ids, scores)] per job, unordered
+        across shards."""
+        out = []
+        for q, k in jobs:
+            ids, scores = [], []
+            for shard, blocks in shards.items():
+                own = {t: blocks[t] for t in q.terms if t in blocks}
+                if not own:
+                    continue
+                sub, k_eff = None, k + self._tomb_counts.get(shard, 0)
+                if allowed is not None:
+                    lo, hi = np.searchsorted(
+                        allowed, (shard * self.shard_range,
+                                  (shard + 1) * self.shard_range))
+                    if lo == hi:
+                        continue
+                    sub, k_eff = allowed[lo:hi].astype(np.uint64), k
+                i, sc = q.score(own, k_eff, sub)
+                ids.append(np.asarray(i, np.int64))
+                scores.append(np.asarray(sc, np.float64))
+            out.append((np.concatenate(ids), np.concatenate(scores))
+                       if ids else _NO_HITS)
+        if allowed is None and self._tomb_counts:
+            dead = tombstoned(self._dirs["deletes"],
+                              np.concatenate([i for i, _ in out]))
+            live = []
+            for i, sc in out:
+                keep = ~np.isin(i, dead)
+                live.append((i[keep], sc[keep]))
+            out = live
+        return out
 
     def match_ids(
         self,
@@ -1852,10 +2055,15 @@ class SearchEngine:
 
         Reuses the exact per-shard kernels with k_eff = shard_range: a
         shard holds at most shard_range docs, so the shard "top-k" IS its
-        full match set (bit-tested kernels, no second matching code path),
-        and per-task work stays bounded by shard_range at any corpus size.
-        No global order/limit — the match set never funnels to one node.
-        Empty `terms` = match_all (within `filters` if given).
+        full match set (bit-tested kernels, no second matching code path).
+        The kernels run in process (:meth:`_local`, no pruning) and the
+        match set comes back as an Arrow-backed frame, so a panel
+        aggregates it as a small local relation instead of re-running a
+        scoring plan; with `filters`, the filter's live-docs match set is
+        the call's one Spark job. Above the byte guard, and for
+        match_all (empty `terms`, within `filters` if given), the result
+        is a lazy Spark plan whose per-task work stays bounded by
+        shard_range.
 
         mode "groups" (+ `groups`, the CNF clauses of a boolean kuery —
         see :meth:`search`): a parenthesized query-bar query drives the
@@ -1863,10 +2071,11 @@ class SearchEngine:
 
         `field`: scored field to match on (see :meth:`_field_stats`).
         `with_scores=True` returns DataFrame[doc_id, score] — the FULL
-        scored match set, still never globally sorted or collected (the
-        multi_match combiner consumes this shape)."""
+        scored match set, never globally sorted (the multi_match
+        combiner consumes this shape)."""
         if (groups is not None) != (mode == "groups"):
             raise ValueError("`groups` is required for (exactly) mode='groups'")
+        schema = RESULT_SCHEMA if with_scores else IDS_SCHEMA
         ns, n_docs_sc, avgdl_sc = self._field_stats(field)
         if ns:
             terms = [ns + t for t in terms]
@@ -1875,7 +2084,7 @@ class SearchEngine:
         if mode == "groups":
             groups = [sorted(set(g)) for g in groups if g]
             if not groups:
-                return self.spark.createDataFrame([], "doc_id long")
+                return arrow_frame(self.spark, schema)
             terms = [t for g in groups for t in g]
         if mode not in ("conjunctive", "disjunctive", "phrase", "groups"):
             raise ValueError(f"unknown mode {mode!r}")
@@ -1885,18 +2094,11 @@ class SearchEngine:
                 "store_positions=True (this snapshot has positions=False)"
             )
         cond = self._filter_cond(filters) if filters else None
-        # the live-docs view costs a driver-side file listing per
-        # construction — build it only on the branches that consume it
-        # (filters / match_all), not for every term query
-        live = None
-        if cond is not None or not sorted(set(terms)):
-            live = self.cat.read_live_docs(self.spark, self.snapshot_id)
-        out_cols = ["doc_id", "score"] if with_scores else ["doc_id"]
-        empty_schema = ("doc_id long, score double" if with_scores
-                        else "doc_id long")
         uniq = sorted(set(terms))
         if not uniq:
-            base = live.filter(cond) if cond is not None else live
+            base = self.live_docs()
+            if cond is not None:
+                base = base.filter(cond)
             if with_scores:
                 # match_all is constant-score (Lucene _score = 1.0)
                 return base.select("doc_id", F.lit(1.0).alias("score"))
@@ -1905,11 +2107,11 @@ class SearchEngine:
         if mode in ("conjunctive", "phrase") and any(
             t not in dfs for t in uniq
         ):
-            return self.spark.createDataFrame([], empty_schema)
+            return arrow_frame(self.spark, schema)
         if mode == "groups":
             gpres = [[t for t in g if t in dfs] for g in groups]
             if any(not g for g in gpres):
-                return self.spark.createDataFrame([], empty_schema)
+                return arrow_frame(self.spark, schema)
             if len(gpres) == 1:
                 mode, groups = "disjunctive", None
             elif all(len(g) == 1 for g in gpres):
@@ -1919,29 +2121,23 @@ class SearchEngine:
                 groups = gpres
         present = [t for t in uniq if t in dfs]
         if not present:
-            return self.spark.createDataFrame([], empty_schema)
+            return arrow_frame(self.spark, schema)
         idf_map = {t: idf(n_docs_sc, dfs[t]) for t in present}
-        cand = self._candidates(present, url=bool(ns), pos=mode == "phrase")
-        scorer_terms = list(terms) if mode == "phrase" else present
+        q = _Scoring(present, bool(ns), mode == "phrase", mode,
+                     list(terms) if mode == "phrase" else present, idf_map,
+                     avgdl_sc, prune=False, groups=groups, slop=slop)
+        hits = self._local(q, self.shard_range, cond)
+        if hits is not None:
+            # (doc_id) or (doc_id, score), as the schema names
+            return arrow_frame(self.spark, schema, pa.table(
+                dict(zip(schema.names, hits))))
         if cond is not None:
-            allowed = live.filter(cond).select(
-                F.expr(f"doc_id div {self.shard_range}").alias("shard_id"),
-                "doc_id",
-            )
-            scorer = _make_filtered_shard_scorer(
-                scorer_terms, idf_map, self.shard_range, mode, avgdl_sc,
-                prune=False, groups=groups, slop=slop)
-            per_shard = (
-                cand.groupBy("shard_id")
-                .cogroup(allowed.groupBy("shard_id"))
-                .applyInPandas(scorer, RESULT_SCHEMA)
-            )
-            return per_shard.select(*out_cols)  # whitelist is already live
-        scorer = _make_shard_scorer(scorer_terms, idf_map, self.shard_range,
-                                    mode, avgdl_sc, prune=False,
-                                    groups=groups, slop=slop)
-        per_shard = self._apply_shard_scorer(cand, scorer)
-        out = per_shard.select(*out_cols)
+            # the whitelist is already live
+            return self._cogrouped(q, self.shard_range, cond) \
+                .select(*schema.names)
+        out = self._apply_shard_scorer(
+            self._candidates(q.terms, q.url, q.pos),
+            _make_shard_scorer(q, self.shard_range)).select(*schema.names)
         if self._tomb_counts:
             out = out.join(F.broadcast(self.deletes), "doc_id", "left_anti")
         return out
@@ -1951,8 +2147,9 @@ class SearchEngine:
               ) -> int:
         """ES `_count` (the hit total Kibana shows above every result
         list): the SIZE of the full match set, scored nothing. Rides
-        match_ids — per-task work bounded by shard_range, count reduced
-        distributed-side."""
+        match_ids: the match set is computed in process (a lazy plan
+        bounded per task by shard_range above the byte guard) and
+        counted."""
         return self.match_ids(terms, mode, filters, groups=groups).count()
 
     def field_caps(self) -> list[dict]:
@@ -2001,29 +2198,26 @@ class SearchEngine:
         point_lookup takes; batch size is caller-bounded."""
         ids = sorted({int(i) for i in doc_ids})
         if not ids:
-            return self.cat.read_live_docs(self.spark, self.snapshot_id) \
-                .limit(0)
-        return self.cat.read_live_docs(self.spark, self.snapshot_id) \
-            .filter(F.col("doc_id").isin(ids))
+            return self.live_docs().limit(0)
+        return self.live_docs().filter(F.col("doc_id").isin(ids))
 
     def validate_query(self, q: str) -> dict:
         """ES ``_validate/query``: dry run of a kuery string —
         ``{"valid": bool, "error": str | None}``, never an exception (the
         ES endpoint returns explanations, not 400s).
 
-        Round 7 (ADVICE r6): instead of re-implementing the refusal
-        matrix (which had drifted — it missed phrase-with-stopped-term,
-        synonym-with-operators and synonym-in-tree, and wrongly flagged
-        phrase+filters+synonym), validation now BUILDS the real query
-        plan via :meth:`search_query_string`. DataFrames are lazy, so no
-        scoring job runs; every driver-side refusal (parser, schema,
-        positions, stop/synonym rules) surfaces exactly as execution
-        would raise it — the two code paths cannot disagree because they
-        are the same path. Dictionary expansions (prefix/fuzzy/wildcard)
-        do run, the ES ``rewrite: true`` behavior — bounded by the term
-        dictionary, never corpus-sized."""
+        Validation is :meth:`search_query_string`'s planning step
+        (:meth:`_plan_kuery`) and nothing after it: the rewrite, the
+        scoring set-up (:meth:`_prepare` and its synonym and phrase-prefix
+        forms) and the filter compiler (:meth:`_filter_cond`), through the
+        same dispatch execution uses. Every driver-side refusal (parser, schema, positions, stop/synonym
+        rules) therefore surfaces exactly as execution would raise it,
+        while no Spark job runs and no postings are read. Dictionary
+        lookups and expansions (prefix/fuzzy/wildcard) do run, the ES
+        ``rewrite: true`` behavior — bounded by the term dictionary,
+        never corpus-sized."""
         try:
-            self.search_query_string(q, k=1)
+            self._plan_kuery(q)
         except ValueError as e:
             return {"valid": False, "error": str(e)}
         return {"valid": True, "error": None}
@@ -2054,7 +2248,7 @@ class SearchEngine:
         ids = [int(i) for i in doc_ids]
         if not ids:
             raise ValueError("mtermvectors needs at least one doc_id")
-        live = self.cat.read_live_docs(self.spark, self.snapshot_id)
+        live = self.live_docs()
         docs = live.filter(F.col("doc_id").isin(ids))
         tok = (stopped_tokens_col("text", self.stopwords)
                if self.stopwords else tokens_col("text"))
@@ -2102,10 +2296,10 @@ class SearchEngine:
           normalized by the ideal ordering of the JUDGED docs.
 
         Returns [(query_id, metric, value), ..., ('_overall', metric,
-        mean)]. ALL requests run as ONE distributed search_batch job;
-        the metric arithmetic happens on the collected k-row top lists
-        — the same coordinator reduction the ES rank_eval endpoint
-        performs."""
+        mean)]. ALL requests run as ONE :meth:`search_batch` call, in
+        process; the metric arithmetic happens on the collected k-row
+        top lists — the same coordinator reduction the ES rank_eval
+        endpoint performs."""
         import math
 
         metrics = (metric,) if isinstance(metric, str) else tuple(metric)
@@ -2286,7 +2480,7 @@ class SearchEngine:
             u = u.unionAll(s)
         agg = u.groupBy("doc_id").agg(
             F.sum("score").alias("score"), F.count("*").alias("_m"))
-        live = self.cat.read_live_docs(self.spark, self.snapshot_id)
+        live = self.live_docs()
         req = live.select("doc_id",
                           min_match_col.cast("long").alias("_req"))
         return (
@@ -2603,10 +2797,10 @@ class SearchEngine:
         count. Returns (key, n) in declaration order.
 
         Each named query compiles through parse_kuery and rides
-        match_ids (exact per-shard kernels, counts reduced
-        distributed-side); the union is one plan, so collecting the
-        result is a single action. Bucket count is panel-config-sized
-        (a handful), never data-sized."""
+        match_ids (exact per-shard kernels, in process); the counts of
+        the match sets union into one plan, so collecting the result is
+        a single action. Bucket count is panel-config-sized (a handful),
+        never data-sized."""
         from picdexer_spark.query.parser import parse_kuery
 
         if not named_queries:
@@ -2730,7 +2924,7 @@ class SearchEngine:
                 [], "doc_id long, score double, best_term string, "
                     "first_pos long, snippet string"
             )
-        hits = self.spark.createDataFrame(hit_rows, RESULT_SCHEMA)
+        hits = self._frame(*map(np.array, zip(*hit_rows)))
         offs = self.term_offsets(terms, hits.select("doc_id"))
         uniq = sorted(set(terms))
         dfs = self.term_dfs(uniq)
@@ -2749,8 +2943,7 @@ class SearchEngine:
             .filter(F.col("rn") == 1)
             .select("doc_id", F.col("term").alias("best_term"), "first_pos")
         )
-        docs = self.cat.read_live_docs(self.spark, self.snapshot_id) \
-            .select("doc_id", "text")
+        docs = self.live_docs().select("doc_id", "text")
         from picdexer_spark.functions.tokenize import tokens_col
 
         start0 = F.greatest(F.col("first_pos") - window, F.lit(0))
@@ -2807,7 +3000,7 @@ class SearchEngine:
         hit_rows = self.search_topk(terms, mode, k)
         if not hit_rows:
             return self.spark.createDataFrame([], out_schema)
-        hits = self.spark.createDataFrame(hit_rows, RESULT_SCHEMA)
+        hits = self._frame(*map(np.array, zip(*hit_rows)))
         offs = self.term_offsets(terms, hits.select("doc_id"))
         uniq = sorted(set(terms))
         dfs = self.term_dfs(uniq)
@@ -2859,8 +3052,7 @@ class SearchEngine:
                 "p_start", "p_end",
             )
         )
-        docs = self.cat.read_live_docs(self.spark, self.snapshot_id) \
-            .select("doc_id", "text")
+        docs = self.live_docs().select("doc_id", "text")
         from picdexer_spark.functions.tokenize import tokens_col
 
         qterms = F.array(*[F.lit(t) for t in present])
@@ -2906,7 +3098,7 @@ class SearchEngine:
         from picdexer_spark.functions.tokenize import tokenize_py
 
         row = (
-            self.cat.read_live_docs(self.spark, self.snapshot_id)
+            self.live_docs()
             .filter(F.col("doc_id") == int(doc_id))
             .select("text")
             .first()
@@ -2951,10 +3143,11 @@ class SearchEngine:
         from picdexer_spark.operators.dashboards import significant_terms
 
         m = self.match_ids(terms, mode, filters)
-        docs = self.cat.read_live_docs(self.spark, self.snapshot_id)
+        docs = self.live_docs()
         # the match set is consumed twice (fg-size count + the semi-join
-        # below) and match_ids is the heaviest job in the query — persist
-        # so the shard kernels run once, not twice
+        # below); when match_ids falls back to its Spark plan that is the
+        # heaviest job in the query — persist so the shard kernels run
+        # once, not twice
         m = m.persist()
         try:
             n_fg = m.count()  # ES knows the fg size too
@@ -3014,8 +3207,7 @@ class SearchEngine:
         if max_docs_per_value is not None:
             if max_docs_per_value < 1:
                 raise ValueError("max_docs_per_value must be >= 1")
-            vals = self.cat.read_live_docs(self.spark, self.snapshot_id) \
-                .select("doc_id", F.col(field_col).alias("_v"))
+            vals = self.live_docs().select("doc_id", F.col(field_col).alias("_v"))
             wv = Window.partitionBy("_shard", "_v").orderBy(*rank)
             m = (m.join(vals, "doc_id")
                  .withColumn("_r", F.row_number().over(wv))
@@ -3057,7 +3249,7 @@ class SearchEngine:
                              shard_size=sample_shard_size).select("doc_id")
         else:
             m = self.match_ids(terms, mode, filters)
-        docs = self.cat.read_live_docs(self.spark, self.snapshot_id)
+        docs = self.live_docs()
         if filter_duplicate_text:
             wd = Window.partitionBy(F.md5(F.col("text"))) \
                 .orderBy(F.asc("doc_id"))
@@ -3140,37 +3332,23 @@ class SearchEngine:
         can hold a query term (:class:`~picdexer_spark.query.local.
         PostingsReader`, footers read once per engine), keeps the terms'
         blocks, and runs the same per-shard kernel on each shard's blocks
-        with the same k + |shard tombstones| over-fetch. Tombstoned
-        candidates are dropped by a `deletes` scan filtered to the
-        candidate ids, and the shard results merge by (score desc,
-        doc_id asc). When the candidate row groups hold more than
-        :data:`LOCAL_TOPK_MAX_BYTES` (a head term at web scale), the
-        Spark plan of :meth:`search` runs instead, so the driver never
-        holds more than that much of decoded postings for one query."""
-        q = self._prepare(terms, mode, k, prune, after, **opts)
+        with the same k + |shard tombstones| over-fetch
+        (:meth:`_score_local`). Tombstoned candidates are dropped by a
+        `deletes` scan filtered to the candidate ids, and the shard
+        results merge by (score desc, doc_id asc). When the candidate row
+        groups hold more than :data:`LOCAL_TOPK_MAX_BYTES` (a head term at
+        web scale), the Spark plan of :meth:`search` runs instead, so the
+        driver never holds more than that much of decoded postings for
+        one query."""
+        q = self._prepare(terms, mode, prune, after, **opts)
         if q is None:
             return []
-        reader = self._postings_reader(q.url)
-        cols = PAY_COLS + (("pos_enc",) if q.pos else ())
-        groups, nbytes = reader.plan(q.terms, cols)
-        if not groups:
-            return []
-        if nbytes > LOCAL_TOPK_MAX_BYTES:
-            rows = self._ranked(self._candidates(q.terms, q.url, q.pos),
-                                q.scorer, k).collect()
-            return [(int(r["doc_id"]), float(r["score"])) for r in rows]
-        pdf = reader.blocks(groups, q.terms, cols).to_pandas()
-        parts = [q.scorer(g) for _, g in pdf.groupby("shard_id", sort=False)]
-        if not parts:
-            return []
-        ids = np.concatenate([p["doc_id"].to_numpy(np.int64) for p in parts])
-        scores = np.concatenate(
-            [p["score"].to_numpy(np.float64) for p in parts])
-        if self._tomb_counts:
-            live = ~np.isin(ids, tombstoned(self._dirs["deletes"], ids))
-            ids, scores = ids[live], scores[live]
-        top = np.lexsort((ids, -scores))[:k]
-        return list(zip(ids[top].tolist(), scores[top].tolist()))
+        hits = self._local(q, k)
+        if hits is None:
+            return [(int(r["doc_id"]), float(r["score"]))
+                    for r in self._spark_topk(q, k).collect()]
+        ids, scores = _top(*hits, k)
+        return list(zip(ids.tolist(), scores.tolist()))
 
     def _postings_reader(self, url: bool) -> PostingsReader:
         """Footer term ranges of the content (or url) posting files of
@@ -3187,32 +3365,24 @@ class SearchEngine:
         queries: list[dict],
         prune: bool = True,
     ) -> DataFrame:
-        """Run a whole query SET as one Spark job (the query-throughput
-        path: at cluster scale you don't schedule a job per query).
+        """Run a whole query SET in one call (the query-throughput path).
 
         `queries`: [{"query_id": int, "terms": [...], "mode": ..., "k": n,
         "slop": s?}], mode one of conjunctive/disjunctive/phrase (phrase
         terms in order; needs a positional index — validated driver-side;
-        optional "slop" relaxes adjacency per wand.score_phrase). One postings scan
-        filtered to the union of all query terms; a broadcast join against
-        the tiny (query_id, term) table replicates each candidate block to
-        the queries that need it; ONE shuffle to (shard_id, query_id) so
-        every query x shard pair is its own task — the parallelism is
-        n_shards * n_queries, not n_shards (the round-1 shape scored all
-        queries serially inside each shard task: 6 queries on a 2-shard
-        corpus used 2 of 32 cores and ran slower than 6 sequential jobs).
-        Per-query global top-k via a second grouped kernel over the
-        (queries x shards x k)-sized candidate union — round 7: replaces
-        a window-rank + broadcast-joined per-query k + filter tail whose
-        rank cut could never push below the exchange (the k bound was a
-        joined COLUMN, not a literal, so WindowGroupLimit did not apply
-        and every per-shard row crossed the window), and whose
-        WindowExec/join codegen dominated one-shot latency. Returns
-        (query_id, rank, doc_id, score), row-identical to the window
-        formulation.
-        """
-        import pandas as pd
+        optional "slop" relaxes adjacency per wand.score_phrase). Returns
+        (query_id, rank, doc_id, score) as an Arrow-backed frame:
+        collecting it runs no Spark job.
 
+        Executed in process with no Spark job: one term-dictionary
+        lookup for the union of the batch's terms, one pyarrow read of
+        the union's posting row groups (each row group read once, however
+        many queries share it), then each query's kernel on each shard's
+        blocks of its own terms, with the k + |shard tombstones|
+        over-fetch and one `deletes` scan for the whole batch
+        (:meth:`_score_local`). When the union's row groups exceed
+        :data:`LOCAL_TOPK_MAX_BYTES`, the batch runs as one Spark plan
+        instead (:meth:`_spark_batch`)."""
         modes = {q.get("mode") for q in queries}
         bad = modes - {"conjunctive", "disjunctive", "phrase"}
         if bad:
@@ -3225,14 +3395,13 @@ class SearchEngine:
             )
         all_terms = sorted({t for q in queries for t in set(q["terms"])})
         if not all_terms:
-            return self.spark.createDataFrame(
-                [], "query_id long, rank int, doc_id long, score double"
-            )
+            return arrow_frame(self.spark, BATCH_SCHEMA)
         dfs = self.term_dfs(all_terms)
         idf_map = {t: idf(self.n_docs_scoring, d) for t, d in dfs.items()}
-        qspecs = []
+        jobs = []   # (query_id, _Scoring, k)
         for q in queries:
-            if int(q.get("slop") or 0) and q["mode"] != "phrase":
+            slop = int(q.get("slop") or 0)
+            if slop and q["mode"] != "phrase":
                 raise ValueError("slop is only valid for phrase queries")
             uniq = sorted(set(q["terms"]))
             present = [t for t in uniq if t in dfs]
@@ -3242,92 +3411,83 @@ class SearchEngine:
             if present:
                 # phrase scoring needs the original term ORDER; conj/disj
                 # score over the deduped ascending set
-                sterms = list(q["terms"]) if q["mode"] == "phrase" else present
-                slop = int(q.get("slop") or 0)
-                qspecs.append(
-                    (int(q["query_id"]), present, sterms, q["mode"],
-                     int(q["k"]), slop)
-                )
-        if not qspecs:
-            return self.spark.createDataFrame(
-                [], "query_id long, rank int, doc_id long, score double"
-            )
-        avgdl = self.avgdl_scoring
-        spec_by_qid = {qid: (sterms, mode, k, slop)
-                       for qid, _present, sterms, mode, k, slop in qspecs}
+                phrase = q["mode"] == "phrase"
+                jobs.append((int(q["query_id"]), _Scoring(
+                    present, False, phrase, q["mode"],
+                    list(q["terms"]) if phrase else present, idf_map,
+                    self.avgdl_scoring, prune, slop=slop), int(q["k"])))
+        if not jobs:
+            return arrow_frame(self.spark, BATCH_SCHEMA)
+        terms = sorted({t for _qid, sq, _k in jobs for t in sq.terms})
+        reader = self._postings_reader(False)
+        cols = PAY_COLS + (("pos_enc",) if any_phrase else ())
+        groups, nbytes = reader.plan(terms, cols)
+        if nbytes > LOCAL_TOPK_MAX_BYTES:
+            return self._spark_batch(jobs, any_phrase)
+        shards = self._read_shards(reader, groups, terms, cols) \
+            if groups else {}
+        hits = self._score_local([(sq, k) for _qid, sq, k in jobs], shards)
+        parts = []
+        for (qid, _sq, k), (ids, scores) in zip(jobs, hits):
+            ids, scores = _top(ids, scores, k)
+            parts.append(pa.table({
+                "query_id": np.full(ids.size, qid, np.int64),
+                "rank": np.arange(1, ids.size + 1, dtype=np.int32),
+                "doc_id": ids,
+                "score": scores,
+            }))
+        return arrow_frame(self.spark, BATCH_SCHEMA, pa.concat_tables(parts))
+
+    def _spark_batch(self, jobs, any_phrase: bool) -> DataFrame:
+        """:meth:`search_batch`'s Spark plan over its [(query_id,
+        _Scoring, k)] jobs: one postings scan filtered to the union of
+        the query terms; a broadcast join against the tiny (query_id,
+        term) table replicates each candidate block to the queries that
+        need it; ONE shuffle to (shard_id, query_id), so every query x
+        shard pair is its own task (parallelism n_shards * n_queries);
+        a second grouped kernel takes each query's global top-k from the
+        (queries x shards x k)-sized candidate union."""
+        spec = {qid: (sq, k) for qid, sq, k in jobs}
         tomb_counts = self._tomb_counts
 
         def score_query_shard(pdf: pd.DataFrame) -> pd.DataFrame:
             qid = int(pdf["query_id"].iat[0])
-            terms, mode, k, slop = spec_by_qid[qid]
-            blocks = _blocks_from_pdf(pdf)
+            sq, k = spec[qid]
             k_eff = k + tomb_counts.get(int(pdf["shard_id"].iat[0]), 0)
-            ids, scores = _score_blocks(
-                mode, sorted(set(terms)), list(terms), blocks, idf_map,
-                avgdl, k_eff, prune, slop=slop,
-            )
+            ids, scores = sq.score(_blocks_from_pdf(pdf), k_eff)
             return pd.DataFrame(
                 {"query_id": qid, "doc_id": ids, "score": scores}
             )
 
-        qterms = self.spark.createDataFrame(
-            [(qid, t) for qid, present, _s, _m, _k, _sl in qspecs
-             for t in present],
-            "query_id long, term string",
-        )
-        grouped = (
-            self._candidates(all_terms, pos=any_phrase)
+        pairs = [(qid, t) for qid, sq, _k in jobs for t in sq.terms]
+        qterms = arrow_frame(self.spark, "query_id long, term string",
+                             pa.table({"query_id": [p[0] for p in pairs],
+                                       "term": [p[1] for p in pairs]}))
+        per_shard = (
+            self._candidates(sorted({t for _q, t in pairs}), pos=any_phrase)
             .join(F.broadcast(qterms), "term")
             .groupBy("shard_id", "query_id")
-        )
-        out_schema = "query_id long, rank int, doc_id long, score double"
-        if self._single_shard and not tomb_counts:
-            # one shard, no tombstones: each (shard, query) kernel's output
-            # IS that query's exact global top-k, already in final order
-            # (the kernels end in _topk's (score desc, doc_id asc)
-            # lexsort) — emit ranks directly and skip the per-query merge
-            # kernel and its exchange entirely
-            def score_query_ranked(pdf: pd.DataFrame) -> pd.DataFrame:
-                qid = int(pdf["query_id"].iat[0])
-                terms, mode, k, slop = spec_by_qid[qid]
-                blocks = _blocks_from_pdf(pdf)
-                ids, scores = _score_blocks(
-                    mode, sorted(set(terms)), list(terms), blocks, idf_map,
-                    avgdl, k, prune, slop=slop,
-                )
-                return pd.DataFrame({
-                    "query_id": qid,
-                    "rank": np.arange(1, ids.size + 1, dtype=np.int32),
-                    "doc_id": ids,
-                    "score": scores,
-                })
-
-            return grouped.applyInPandas(score_query_ranked, out_schema)
-        per_shard = grouped.applyInPandas(
-            score_query_shard, "query_id long, doc_id long, score double"
+            .applyInPandas(score_query_shard,
+                           "query_id long, doc_id long, score double")
         )
         if tomb_counts:
             per_shard = per_shard.join(
                 F.broadcast(self.deletes), "doc_id", "left_anti"
             )
-        k_by_qid = {qid: k for qid, _p, _s, _m, k, _sl in qspecs}
 
         def topk_query(pdf: pd.DataFrame) -> pd.DataFrame:
             qid = int(pdf["query_id"].iat[0])
-            k = k_by_qid[qid]
-            ids = pdf["doc_id"].to_numpy(np.int64)
-            sc = pdf["score"].to_numpy(np.float64)
-            # exact Spark sort-key order: score desc, doc_id asc
-            order = np.lexsort((ids, -sc))[:k]
+            ids, sc = _top(pdf["doc_id"].to_numpy(np.int64),
+                           pdf["score"].to_numpy(np.float64), spec[qid][1])
             return pd.DataFrame({
                 "query_id": qid,
-                "rank": np.arange(1, order.size + 1, dtype=np.int32),
-                "doc_id": ids[order],
-                "score": sc[order],
+                "rank": np.arange(1, ids.size + 1, dtype=np.int32),
+                "doc_id": ids,
+                "score": sc,
             })
 
         return per_shard.groupBy("query_id").applyInPandas(
-            topk_query, out_schema
+            topk_query, BATCH_SCHEMA
         )
 
 

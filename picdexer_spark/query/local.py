@@ -26,6 +26,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 
 from picdexer_spark.index.termdict import TermRanges
 
@@ -66,6 +67,12 @@ class PostingsReader(TermRanges):
         return tbl.filter(pc.is_in(
             tbl.column("term"),
             value_set=pa.array(sorted(set(terms)), pa.string())))
+
+
+def num_rows(dirs: list[str]) -> int:
+    """Rows of the parquet files in `dirs`, summed from their footers."""
+    return sum(pq.ParquetFile(f).metadata.num_rows
+               for f in _parquet_files(dirs))
 
 
 def tombstoned(dirs: list[str], ids: np.ndarray) -> np.ndarray:

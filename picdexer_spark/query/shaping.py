@@ -42,8 +42,7 @@ def collapse_top_k(
     if collapse_field not in eng._docs_fields:
         raise ValueError(f"unknown collapse field {collapse_field!r}")
     scored = eng.match_ids(terms, mode, filters, with_scores=True)
-    docs = eng.cat.read_live_docs(eng.spark, eng.snapshot_id) \
-        .select("doc_id", collapse_field)
+    docs = eng.live_docs().select("doc_id", collapse_field)
     best = (
         scored.join(docs, "doc_id")
         .groupBy(collapse_field)
@@ -166,8 +165,7 @@ def function_score(
             f"{ftype})"
         )
     scored = eng.match_ids(terms, mode, filters, with_scores=True)
-    docs = eng.cat.read_live_docs(eng.spark, eng.snapshot_id) \
-        .select("doc_id", field)
+    docs = eng.live_docs().select("doc_id", field)
     fv = F.coalesce(F.col(field).cast("double"),
                     F.lit(float(missing))) * F.lit(float(factor))
     if modifier == "ln1p":
@@ -207,8 +205,7 @@ def sort_by_field(
     if sort_field not in eng._docs_fields:
         raise ValueError(f"unknown sort field {sort_field!r}")
     m = eng.match_ids(terms, mode, filters)
-    docs = eng.cat.read_live_docs(eng.spark, eng.snapshot_id) \
-        .select("doc_id", sort_field)
+    docs = eng.live_docs().select("doc_id", sort_field)
     key = (F.asc_nulls_last(sort_field) if ascending
            else F.desc_nulls_last(sort_field))
     return (

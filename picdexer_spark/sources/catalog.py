@@ -46,12 +46,15 @@ the resumability contract (north rule).
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
 import time
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 from picdexer_spark.index.termdict import TERM_STATS_SCHEMA
 
@@ -114,6 +117,33 @@ CHAINED_SCHEMAS = {
     "metrics": METRICS_SCHEMA,
     "lineage": LINEAGE_SCHEMA,
 }
+
+
+@functools.lru_cache(maxsize=32)
+def _struct(ddl: str) -> StructType:
+    """A DDL schema string parsed once (each parse is a JVM round trip)."""
+    return _parse_datatype_string(ddl)
+
+
+def arrow_frame(spark: SparkSession, schema: StructType | str,
+                table: pa.Table | None = None) -> DataFrame:
+    """Driver-held rows (`table`; none when omitted) as a DataFrame built
+    from Arrow. Spark plans it as a LocalRelation: collecting it runs no
+    Spark job, and an empty one lets the optimizer drop the joins it
+    feeds (an anti-join against no tombstones disappears). A frame built
+    from a Python list is an RDD scan instead: one job per action, even
+    when empty.
+
+    The table is combined into one chunk first: pyspark 4.1 ends the
+    frame at the first zero-length record batch it is handed, so the
+    rows of every chunk after an empty one would be lost."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = _struct(schema)
+    if table is None:
+        table = to_arrow_schema(schema).empty_table()
+    return spark.createDataFrame(table.combine_chunks(), schema)
 
 
 class IndexCatalog:
@@ -273,7 +303,7 @@ class IndexCatalog:
             # optional tables: a chain with no upserts has no
             # tombstones; one built without the url field has no url
             # postings
-            return spark.createDataFrame([], CHAINED_SCHEMAS[table])
+            return arrow_frame(spark, CHAINED_SCHEMAS[table])
         return spark.read.schema(CHAINED_SCHEMAS[table]).parquet(*dirs)
 
     def read(self, spark: SparkSession, table: str,

@@ -21,6 +21,7 @@ from picdexer_spark.plans.audit import (
     has_pushed_filter,
     read_schema_columns,
 )
+import picdexer_spark.query.bm25 as bm25
 from picdexer_spark.query.bm25 import SearchEngine
 from picdexer_spark.sources.catalog import IndexCatalog
 
@@ -118,13 +119,21 @@ def test_groups_search_plan_shape(spark, built):
     assert count_exchanges(plan) <= 2, explain_str(plan, "simple")
 
 
-def test_typed_filter_pushes_docs_predicate(spark, built):
-    """Schema-driven filters reach the docs parquet scan: the whitelist
-    side of the cogroup reads only filtered rows (doc_len range pushed as
-    GreaterThanOrEqual), never the full doc store."""
+def test_typed_filter_pushes_docs_predicate(spark, built, monkeypatch):
+    """Schema-driven filters reach the docs parquet scan (doc_len range
+    pushed as GreaterThanOrEqual), never the full doc store: in the
+    allowed-id job a filtered search runs in process, and on the whitelist
+    side of the cogroup, the Spark plan it runs above the in-process byte
+    guard (below it the result is a local relation)."""
     eng = SearchEngine(spark, built)
-    plan = eng.search_filtered(["w0", "w1"], "disjunctive",
-                               [("doc_len", ">=", "50")], 10)
+    args = (["w0", "w1"], "disjunctive", [("doc_len", ">=", "50")], 10)
+    assert "LocalTableScan" in explain_str(eng.search_filtered(*args),
+                                           "simple")
+    ids = explain_str(eng._allowed_frame(eng._filter_cond(args[2])),
+                      "formatted")
+    assert "GreaterThanOrEqual(doc_len" in ids, ids
+    monkeypatch.setattr(bm25, "LOCAL_TOPK_MAX_BYTES", 0)
+    plan = eng.search_filtered(*args)
     s = explain_str(plan, "formatted")
     assert "GreaterThanOrEqual(doc_len" in s, s
     assert "In(term" in s
@@ -185,14 +194,20 @@ def test_cosine_topk_window_group_limit_below_exchange(spark):
     assert partial, plan
 
 
-def test_search_batch_parallelism_is_shard_times_query(spark, built):
+def test_search_batch_parallelism_is_shard_times_query(spark, built,
+                                                     monkeypatch):
     """The batch scorer groups by (shard_id, query_id) — one task per
-    query x shard, not one serial loop per shard."""
+    query x shard, not one serial loop per shard. That is the Spark plan
+    a batch runs above the in-process byte guard (below it the result is
+    a local relation)."""
     eng = SearchEngine(spark, built)
     batch = [
         {"query_id": 0, "terms": ["w0"], "mode": "disjunctive", "k": 3},
         {"query_id": 1, "terms": ["w1"], "mode": "disjunctive", "k": 3},
     ]
+    assert "LocalTableScan" in explain_str(eng.search_batch(batch),
+                                           "simple")
+    monkeypatch.setattr(bm25, "LOCAL_TOPK_MAX_BYTES", 0)
     res = eng.search_batch(batch)
     plan = explain_str(res, "simple")
     assert "shard_id" in plan and "query_id" in plan

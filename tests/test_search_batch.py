@@ -1,9 +1,10 @@
-"""Batch search (whole query set in one Spark job) — rank-identical to the
+"""Batch search (whole query set in one call) — rank-identical to the
 per-query path and the oracle; plus WAND pruning effectiveness."""
 
 import numpy as np
 import pytest
 
+import picdexer_spark.query.bm25 as bm25
 from picdexer_spark.fixtures.pages import gen_pages, gen_queries
 from picdexer_spark.index.build import IndexConfig, build_index
 from picdexer_spark.oracle.reference import OracleIndex
@@ -218,16 +219,18 @@ def test_rank_eval_metrics_match_python_reference(spark, built):
         [("_overall", "precision", 0.0)]
 
 
-def test_batch_single_shard_fast_path_identical(spark, tmp_path_factory):
-    """On a single-shard tombstone-free index the batch path emits ranks
-    straight from the (shard, query) kernels (no per-query merge kernel);
-    rows must be identical to the general two-kernel path."""
+def test_batch_single_shard_fast_path_identical(spark, tmp_path_factory,
+                                                monkeypatch):
+    """On a single-shard tombstone-free index the in-process batch (each
+    query's kernel over the one shard's blocks, no per-query merge) must
+    return the rows of the general two-kernel Spark plan (the byte guard
+    set to 0 forces that plan)."""
     pdf = gen_pages(400, seed=5)
     idx = str(tmp_path_factory.mktemp("ssbatch"))
     build_index(spark, spark.createDataFrame(pdf), idx,
                 IndexConfig(shard_range=1 << 16))
     eng = SearchEngine(spark, idx)
-    assert eng._single_shard
+    assert eng._single_shard and not eng._tomb_counts
     queries = [
         {"query_id": 0, "terms": ["w0", "w1"], "mode": "disjunctive", "k": 5},
         {"query_id": 1, "terms": ["w0", "w2"], "mode": "conjunctive", "k": 4},
@@ -241,6 +244,6 @@ def test_batch_single_shard_fast_path_identical(spark, tmp_path_factory):
         )
 
     fast = rows(eng.search_batch(queries))
-    eng._single_shard = False
+    monkeypatch.setattr(bm25, "LOCAL_TOPK_MAX_BYTES", 0)
     general = rows(eng.search_batch(queries))
     assert fast == general and len(fast) == 12
