@@ -4,9 +4,18 @@ Each function mirrors one saved-object query the reference installs into
 Kibana (reference: internal/setup/assets/kibana.ndjson, record lines cited
 per function) — the aggregation semantics ES executes for picdexer,
 re-expressed as DataFrame plans over the engine's tables (or any table with
-the same shape). All are pure built-in ops: groupBy/window/orderBy stay in
-whole-stage codegen; top-k is TakeOrdered; the Other bucket is the classic
-"total minus top-k" union.
+the same shape). The plans are pure built-in ops: groupBy/window/orderBy
+stay in whole-stage codegen; top-k is TakeOrdered; the Other bucket is the
+classic "total minus top-k" union.
+
+In process: the two query-bar panels, :func:`date_histogram` and
+:func:`top_terms_with_other` (no options), aggregate with pyarrow on the
+driver, and run no Spark job, when their input is a frame whose rows the
+driver already bounds (sources/catalog.py `ArrowFrame`: an Arrow-backed
+frame, or the live docs semi-joined with a held match set) and the
+session time zone is UTC. They return an Arrow-backed frame with the
+plan's schema, rows and order — Elasticsearch, too, aggregates a query's
+match set inside the shard process. Every other input runs the plan.
 
 Determinism: every ordered result carries an explicit total tie-break so
 row sets are stable across engines (ES uses doc order; we pin key order).
@@ -14,8 +23,21 @@ row sets are stable across engines (ES uses doc order; we pin key order).
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DateType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
+
+from picdexer_spark.sources.catalog import ArrowFrame, arrow_frame
 
 
 def epoch_seconds(c: Column) -> Column:
@@ -36,6 +58,9 @@ def date_histogram(df: DataFrame, ts_col: str, bucket: str) -> DataFrame:
     naturally absent from groupBy output (= min_doc_count:1). Bucket key is
     epoch seconds for '12h' (engine-neutral) and ISO date for week/year.
     """
+    got = _local_rows(df, ts_col, _TIMESTAMPS) if bucket in _FLOOR else None
+    if got is not None:
+        return _local_histogram(df, got.column(ts_col), bucket)
     c = F.col(ts_col)
     if bucket == "12h":
         key = (F.floor(epoch_seconds(c) / F.lit(43200)) * 43200).alias("bucket")
@@ -67,6 +92,10 @@ def top_terms_with_other(
     under the given value instead of dropping them. All three are
     pre-aggregation row filters/substitutions — they narrow the scan,
     never add a pass."""
+    got = None if explode or include or exclude or missing or k < 0 \
+        else _local_rows(df, col, StringType)
+    if got is not None:
+        return _local_top_terms(df, got.column(col), col, k)
     vals = df.select(F.explode(F.col(col)).alias("key")) if explode else df.select(
         F.col(col).alias("key")
     )
@@ -93,6 +122,78 @@ def top_terms_with_other(
         .filter(F.col("n") > 0)
     )
     return topk.unionByName(other)
+
+
+#: date_histogram bucket -> pyarrow floor_temporal (multiple, unit): the
+#: same bucket starts as the plan's floor / date_trunc in UTC
+_FLOOR = {"12h": (12, "hour"), "week": (1, "week"), "year": (1, "year")}
+
+
+#: the Spark types of a date_histogram column the driver buckets
+_TIMESTAMPS = (TimestampType, TimestampNTZType)
+
+
+def _local_rows(df: DataFrame, col: str, types) -> pa.Table | None:
+    """`col` of every row of `df`, read on the driver, when `df` can
+    produce its rows there, `col` is of one of the Spark `types` and the
+    session time zone is UTC (the buckets below are UTC's); else None."""
+    if not (isinstance(df, ArrowFrame) and col in df.columns
+            and isinstance(df.schema[col].dataType, types)
+            and df.sparkSession.conf.get(
+                "spark.sql.session.timeZone") == "UTC"):
+        return None
+    return df.local_rows([col])
+
+
+def _sorted_counts(keys: pa.ChunkedArray, sort_keys: list) -> pa.Table:
+    """(key, n) for each distinct value of `keys` (null included, like a
+    Spark groupBy), sorted by `sort_keys` with null keys first."""
+    agg = pa.table({"key": keys}).group_by("key").aggregate(
+        [([], "count_all")])
+    counts = pa.table({"key": agg.column("key"),
+                       "n": agg.column("count_all")})
+    return counts.take(pc.sort_indices(counts, sort_keys=sort_keys,
+                                       null_placement="at_start"))
+
+
+def _local_histogram(df: DataFrame, ts: pa.ChunkedArray,
+                     bucket: str) -> DataFrame:
+    """date_histogram of the driver-held timestamps `ts` of `df`."""
+    if ts.type.tz is not None:
+        ts = ts.cast(pa.timestamp(ts.type.unit))
+    multiple, unit = _FLOOR[bucket]
+    start = pc.floor_temporal(ts, multiple, unit, week_starts_monday=True)
+    if bucket == "12h":
+        key, key_type = start.cast(pa.timestamp("s")).cast(pa.int64()), \
+            LongType()
+    else:
+        key, key_type = start.cast(pa.date32()), DateType()
+    # the plan's bucket is nullable whatever its input: a division and
+    # date_trunc both are
+    return arrow_frame(df.sparkSession, StructType([
+        StructField("bucket", key_type, True),
+        StructField("n", LongType(), False),
+    ]), _sorted_counts(key, [("key", "ascending")])
+        .rename_columns(["bucket", "n"]))
+
+
+def _local_top_terms(df: DataFrame, vals: pa.ChunkedArray, col: str,
+                     k: int) -> DataFrame:
+    """top_terms_with_other of the driver-held values `vals` of `df`'s
+    `col`: count desc, key asc with null first, then Other when it is
+    above 0."""
+    top = _sorted_counts(vals, [("n", "descending"),
+                                ("key", "ascending")]).slice(0, k)
+    keys, ns = top.column("key").to_pylist(), top.column("n").to_pylist()
+    other = len(vals) - sum(ns)
+    if other > 0:
+        keys.append("__other__")
+        ns.append(other)
+    return arrow_frame(df.sparkSession, StructType([
+        StructField("key", StringType(), df.schema[col].nullable),
+        StructField("n", LongType(), True),
+    ]), pa.table({"key": pa.array(keys, pa.string()),
+                  "n": pa.array(ns, pa.int64())}))
 
 
 def terms_key_ordered(df: DataFrame, col: str, limit: int = 900) -> DataFrame:

@@ -96,8 +96,10 @@ from picdexer_spark.query.wand import (
 )
 from picdexer_spark.sources.catalog import (
     URL_FIELD_NS,
+    ArrowFrame,
     IndexCatalog,
     arrow_frame,
+    live_docs_frame,
 )
 
 #: (doc_id, score) — a StructType, not a DDL string: a string is parsed
@@ -535,16 +537,18 @@ class SearchEngine:
         self._readers: dict[bool, PostingsReader] = {}
         self._docs: DataFrame | None = None
         self._docs_rows = 0
-        self._live: DataFrame | None = None
+        self._live: ArrowFrame | None = None
         _warm_exec_paths(spark)
 
-    def live_docs(self) -> DataFrame:
+    def live_docs(self) -> ArrowFrame:
         """The doc store minus tombstoned rows, over this engine's pinned
-        `docs` and `deletes` directories; the view is built on first use
-        (one file listing) and reused by every later call."""
+        `docs` and `deletes` directories (sources/catalog.py
+        `live_docs_frame`, which IndexCatalog.read_live_docs builds
+        too); the view is built on first use (one file listing) and
+        reused by every later call."""
         if self._live is None:
-            self._live = self._all_docs().join(self.deletes, "doc_id",
-                                               "left_anti")
+            self._live = live_docs_frame(self.spark, self._dirs["docs"],
+                                         self._dirs["deletes"])
         return self._live
 
     def _all_docs(self) -> DataFrame:
@@ -2149,8 +2153,11 @@ class SearchEngine:
         list): the SIZE of the full match set, scored nothing. Rides
         match_ids: the match set is computed in process (a lazy plan
         bounded per task by shard_range above the byte guard) and
-        counted."""
-        return self.match_ids(terms, mode, filters, groups=groups).count()
+        counted: a match set held on the driver is counted there."""
+        ids = self.match_ids(terms, mode, filters, groups=groups)
+        if isinstance(ids, ArrowFrame) and ids.arrow_table is not None:
+            return ids.arrow_table.num_rows
+        return ids.count()
 
     def field_caps(self) -> list[dict]:
         """ES `_field_caps` API: one row per queryable field with its
@@ -2774,7 +2781,8 @@ class SearchEngine:
             F.coalesce(F.sum("postings_emitted"), F.lit(0)).alias("pr"),
             F.coalesce(F.sum("bytes_compressed"), F.lit(0)).alias("pb"),
         ).first()
-        n_deleted = int(self.deletes.count())
+        # the per-shard tombstone counts the constructor already took
+        n_deleted = sum(self._tomb_counts.values())
         return {
             "snapshot_id": self.snapshot_id,
             # maxDoc (as-built, incl. tombstones — the Lucene contract)

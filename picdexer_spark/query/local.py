@@ -1,11 +1,12 @@
-"""In-process reads of posting blocks and tombstones for collected top-k.
+"""In-process reads of posting blocks, tombstones and matched docs.
 
 A collected top-k (:meth:`SearchEngine.search_topk`) needs the posting
 blocks of a handful of terms and, on a chain with upserts, whether a few
-dozen candidate ids are tombstoned. Both are small reads of files the
-catalog keeps POSIX-visible, so they run on the driver with pyarrow and
-no Spark job — the way an Elasticsearch shard scores a query inside the
-process that holds it.
+dozen candidate ids are tombstoned; a dashboard panel over a query's
+match set needs a column or two of just the matched docs. All are small
+reads of files the catalog keeps POSIX-visible, so they run on the
+driver with pyarrow and no Spark job — the way an Elasticsearch shard
+scores and aggregates a query inside the process that holds it.
 
 Every postings writer lays each file out sorted by (term, shard_id,
 first_doc) in row groups of
@@ -86,3 +87,21 @@ def tombstoned(dirs: list[str], ids: np.ndarray) -> np.ndarray:
     got = ds.dataset(files, format="parquet").to_table(
         columns=["doc_id"], filter=ds.field("doc_id").isin(ids))
     return got.column("doc_id").to_numpy().astype(np.int64)
+
+
+def live_docs_rows(docs_dirs: list[str], deletes_dirs: list[str],
+                   ids: pa.ChunkedArray, columns: list[str]) -> pa.Table:
+    """`columns` of the live docs whose doc_id is among `ids`: the docs
+    files in `docs_dirs` scanned through an `isin` filter, minus the ids
+    the `deletes` tables in `deletes_dirs` tombstone. The rows are those
+    of the Spark semi-join of the live-docs view with `ids`, in no
+    particular order."""
+    ids = pc.drop_null(ids).to_numpy().astype(np.int64)
+    got = ds.dataset(_parquet_files(docs_dirs), format="parquet").to_table(
+        columns=list(dict.fromkeys(["doc_id", *columns])),
+        filter=ds.field("doc_id").isin(ids))
+    dead = tombstoned(deletes_dirs, got.column("doc_id").to_numpy())
+    if dead.size:
+        got = got.filter(pc.invert(pc.is_in(got.column("doc_id"),
+                                            value_set=pa.array(dead))))
+    return got.select(columns)

@@ -51,9 +51,11 @@ import json
 import os
 import shutil
 import time
+from typing import Callable
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.classic.dataframe import DataFrame as ClassicFrame
 from pyspark.sql.types import StructType, _parse_datatype_string
 
 from picdexer_spark.index.termdict import TERM_STATS_SCHEMA
@@ -125,14 +127,69 @@ def _struct(ddl: str) -> StructType:
     return _parse_datatype_string(ddl)
 
 
+class ArrowFrame(ClassicFrame):
+    """A DataFrame whose rows the driver can also produce with pyarrow,
+    and no Spark job. Two kinds come from this module:
+
+    - :func:`arrow_frame` holds its rows (`arrow_table`);
+    - the live-docs view (:func:`live_docs_frame`) holds nothing, but
+      its `join(other, "doc_id", "semi")` with a frame that holds
+      doc_ids returns one whose recipe reads just those docs: the docs
+      files filtered to the held ids, tombstones dropped. `doc_id` is
+      unique in the live docs, so that frame has at most as many rows
+      as the ids the driver already holds.
+
+    The Spark plan is unchanged beside the recipe, and every
+    transformation of either returns a plain DataFrame: only these exact
+    frames say their rows are bounded on the driver, so a consumer that
+    aggregates them in process (operators/dashboards.py) keeps the Spark
+    plan for every other input."""
+
+    #: the rows, held on the driver (frames built by arrow_frame)
+    arrow_table: pa.Table | None = None
+    #: columns -> those columns of every row, read on the driver
+    _recipe: Callable[[list[str]], pa.Table] | None = None
+    #: (docs directories, deletes directories) of a live-docs view
+    _live_dirs: tuple[list[str], list[str]] | None = None
+
+    @classmethod
+    def of(cls, df: DataFrame, table: pa.Table | None = None,
+           recipe: Callable[[list[str]], pa.Table] | None = None,
+           live_dirs: tuple[list[str], list[str]] | None = None
+           ) -> ArrowFrame:
+        out = cls(df._jdf, df.sparkSession)
+        out.arrow_table = table
+        out._recipe = recipe if table is None else table.select
+        out._live_dirs = live_dirs
+        return out
+
+    def local_rows(self, columns: list[str]) -> pa.Table | None:
+        """`columns` of every row, read on the driver; None when the
+        frame has no recipe."""
+        return None if self._recipe is None else self._recipe(columns)
+
+    def join(self, other, on=None, how=None) -> DataFrame:
+        out = super().join(other, on, how)
+        if (self._live_dirs is not None and isinstance(other, ArrowFrame)
+                and other.arrow_table is not None
+                and on in ("doc_id", ["doc_id"])
+                and how in ("semi", "leftsemi", "left_semi")):
+            from picdexer_spark.query.local import live_docs_rows
+
+            ids = other.arrow_table.column("doc_id")
+            return ArrowFrame.of(out, recipe=functools.partial(
+                live_docs_rows, *self._live_dirs, ids))
+        return out
+
+
 def arrow_frame(spark: SparkSession, schema: StructType | str,
-                table: pa.Table | None = None) -> DataFrame:
+                table: pa.Table | None = None) -> ArrowFrame:
     """Driver-held rows (`table`; none when omitted) as a DataFrame built
     from Arrow. Spark plans it as a LocalRelation: collecting it runs no
     Spark job, and an empty one lets the optimizer drop the joins it
-    feeds (an anti-join against no tombstones disappears). A frame built
-    from a Python list is an RDD scan instead: one job per action, even
-    when empty.
+    feeds. A frame built from a Python list is an RDD scan instead: one
+    job per action, even when empty. The frame keeps the table
+    (`arrow_table`).
 
     The table is combined into one chunk first: pyspark 4.1 ends the
     frame at the first zero-length record batch it is handed, so the
@@ -143,7 +200,21 @@ def arrow_frame(spark: SparkSession, schema: StructType | str,
         schema = _struct(schema)
     if table is None:
         table = to_arrow_schema(schema).empty_table()
-    return spark.createDataFrame(table.combine_chunks(), schema)
+    table = table.combine_chunks()
+    return ArrowFrame.of(spark.createDataFrame(table, schema), table)
+
+
+def live_docs_frame(spark: SparkSession, docs_dirs: list[str],
+                    deletes_dirs: list[str]) -> ArrowFrame:
+    """The doc store of `docs_dirs` minus the doc_ids tombstoned in
+    `deletes_dirs` — what a user means by 'the documents' after
+    upserts. A chain with no `deletes` directory is the docs frame
+    itself. See :class:`ArrowFrame` for its semi-join."""
+    docs = IndexCatalog.read_dirs(spark, "docs", docs_dirs)
+    if deletes_dirs:
+        dels = IndexCatalog.read_dirs(spark, "deletes", deletes_dirs)
+        docs = docs.join(dels.select("doc_id"), "doc_id", "left_anti")
+    return ArrowFrame.of(docs, live_dirs=(docs_dirs, deletes_dirs))
 
 
 class IndexCatalog:
@@ -330,12 +401,11 @@ class IndexCatalog:
         )
 
     def read_live_docs(self, spark: SparkSession,
-                       snapshot_id: str | None = None) -> DataFrame:
-        """The doc store minus tombstoned rows — what a user means by
-        'the documents' after upserts."""
-        docs = self.read(spark, "docs", snapshot_id)
-        dels = self.read(spark, "deletes", snapshot_id).select("doc_id")
-        return docs.join(dels, "doc_id", "left_anti")
+                       snapshot_id: str | None = None) -> ArrowFrame:
+        """The live docs of the snapshot's chain (:func:`live_docs_frame`)."""
+        return live_docs_frame(
+            spark, self.existing_chain_paths("docs", snapshot_id),
+            self.existing_chain_paths("deletes", snapshot_id))
 
     def register_views(self, spark: SparkSession,
                        snapshot_id: str | None = None) -> None:

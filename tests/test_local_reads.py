@@ -9,7 +9,8 @@ Pins:
   positional index with a stop filter, a single-shard index, and a chain
   with tombstones before and after merge_chain;
 - the unfiltered calls submit no Spark job, collecting the result
-  included; the filtered ones submit at most one;
+  included, and neither does a dashboard panel over a match set; the
+  filtered ones submit at most one;
 - search_batch reads each postings row group at most once;
 - validate_query submits no Spark job and reads no postings;
 - a filter-only query falls back to the lazy plan above the byte guard;
@@ -30,6 +31,7 @@ import picdexer_spark.query.bm25 as bm25
 from picdexer_spark.fixtures.pages import gen_pages
 from picdexer_spark.index.build import IndexConfig, build_index
 from picdexer_spark.index.termdict import TermRanges
+from picdexer_spark.operators import dashboards
 from picdexer_spark.query.bm25 import RESULT_SCHEMA, SearchEngine
 from picdexer_spark.query.local import PostingsReader
 from picdexer_spark.sources.catalog import arrow_frame
@@ -275,8 +277,9 @@ def test_filter_only_guard_falls_back_to_lazy_plan(spark, chain):
 
 
 def test_job_counts(spark, multi, chain):
-    """Unfiltered calls run no Spark job, collect included; a filtered
-    call runs at most one (the filter's live-docs match set)."""
+    """Unfiltered calls run no Spark job, collect included, and neither
+    does a dashboard panel over the match set; a filtered call runs at
+    most one (the filter's live-docs match set)."""
     engines = [SearchEngine(spark, multi), SearchEngine(spark, chain)]
     for eng in engines:
         eng.search_topk(["w0"], "disjunctive", 5)  # footers read once
@@ -293,6 +296,15 @@ def test_job_counts(spark, multi, chain):
                 .collect()
             eng.match_ids(["w0", "w9"], "conjunctive").collect()
             eng.match_ids(["w3", "rareterm2"], with_scores=True).collect()
+            eng.count(["w0", "w9"], "conjunctive")
+            # the dashboard panel: match set -> live docs semi-join ->
+            # both aggregations, collected
+            for live in (eng.live_docs(),
+                         eng.cat.read_live_docs(spark, eng.snapshot_id)):
+                docs = live.join(eng.match_ids(["w0", "w9"], "conjunctive"),
+                                 "doc_id", "semi")
+                dashboards.date_histogram(docs, "warc_ts", "week").collect()
+                dashboards.top_terms_with_other(docs, "lang", 3).collect()
 
     assert _jobs_of(spark, calls) == []
 
