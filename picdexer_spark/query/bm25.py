@@ -33,7 +33,8 @@ same kernels:
   relation whose collect runs no job and which joins as a small input. A
   call whose candidate row groups (plus 8 B per filtered id) exceed
   LOCAL_TOPK_MAX_BYTES runs the Spark plan below instead, which bounds
-  the driver's memory;
+  the driver's memory (:meth:`SearchEngine._spark_shards`, one helper
+  for every call; a batch falls back query by query);
 
 - as a lazy Spark plan, for the DataFrame that compositions build on
   (:meth:`SearchEngine.search`: shaping, search_indices, streaming, ...):
@@ -46,6 +47,7 @@ same kernels:
       .applyInPandas(score_shard)   -- the same per-shard kernel; global
                                        top-k is a subset of the union of
                                        shard top-ks
+      .join(deletes, left_anti)     -- tombstones (broadcast)
       .orderBy(score desc, doc_id)  -- TakeOrdered k (driver merge)
 
 Global statistics (N, avgdl, per-term global df) come from the tiny
@@ -137,13 +139,16 @@ LOCAL_TOPK_MAX_BYTES = 32 << 20
 
 
 class _Scoring(NamedTuple):
-    """A prepared query: the posting terms whose blocks it reads
-    (`terms`), from which field's table (`url`), with positions (`pos`),
-    and the kernel arguments every execution shares — the Spark plans
-    (:func:`_make_shard_scorer`, :func:`_make_filtered_shard_scorer`) and
-    the in-process one (:meth:`SearchEngine._score_local`). `kterms` are
-    the kernel's terms: the phrase in order, the fixed words of a phrase
-    prefix, else `terms`."""
+    """A prepared query, built only by the set-ups (:meth:`SearchEngine.
+    _prepare` and its synonym and phrase-prefix forms): the posting
+    terms whose blocks it reads (`terms`), from which field's table
+    (`url`), with positions (`pos`), and the kernel arguments both
+    executions share — the in-process one (:meth:`SearchEngine.
+    _score_local`) and the Spark one (:meth:`SearchEngine._spark_shards`,
+    through :func:`_make_shard_scorer` or
+    :func:`_make_filtered_shard_scorer`). `kterms` are the kernel's
+    terms: the phrase in order, the fixed words of a phrase prefix, else
+    `terms`."""
     terms: list
     url: bool
     pos: bool
@@ -361,8 +366,9 @@ def _warm_exec_paths(spark: SparkSession) -> None:
     HashAggregate once per session. The FIRST broadcast exchange of a
     session pays ~1.2 s of one-time machinery (broadcast thread pool,
     join codegen) and the first hash aggregate ~0.4 s — measured landing
-    inside the first search_batch / multi_match call of every session.
-    Warming here moves that cost out of query latency. No table data is
+    inside the first Spark-plan query of every session (multi_match, the
+    tombstone anti-join of a lazy :meth:`SearchEngine.search`). Warming
+    here moves that cost out of query latency. No table data is
     read; nothing is cached."""
     key = spark.sparkContext.applicationId
     if key in _WARMED_APPS:
@@ -593,7 +599,9 @@ class SearchEngine:
         return proj.filter(F.col("term").isin(list(terms)))
 
     def _apply_shard_scorer(self, cand: DataFrame, scorer) -> DataFrame:
-        """Run a per-shard kernel over the candidate blocks. Multi-shard:
+        """Run a per-shard kernel over the candidate blocks and drop the
+        tombstoned hits (a broadcast anti-join of the `deletes` frame,
+        never collected; the kernel over-fetches). Multi-shard:
         groupBy(shard_id).applyInPandas — the exchange is the scoring
         parallelism. Single-shard (see _single_shard): the same kernel
         over the whole candidate set in one task WITHOUT the exchange
@@ -607,16 +615,19 @@ class SearchEngine:
         parallelism too, not just the exchange. Cheap while a query's
         candidate scan is small; a single-shard index with a large
         postings table or many snapshot files reads it all in one task."""
-        if not self._single_shard:
-            return cand.groupBy("shard_id").applyInPandas(
+        if self._single_shard:
+            def one_shard(batches):
+                chunks = [c for c in batches if len(c)]
+                if chunks:
+                    yield scorer(pd.concat(chunks, ignore_index=True))
+
+            hits = cand.coalesce(1).mapInPandas(one_shard, RESULT_SCHEMA)
+        else:
+            hits = cand.groupBy("shard_id").applyInPandas(
                 scorer, RESULT_SCHEMA)
-
-        def one_shard(batches):
-            chunks = [c for c in batches if len(c)]
-            if chunks:
-                yield scorer(pd.concat(chunks, ignore_index=True))
-
-        return cand.coalesce(1).mapInPandas(one_shard, RESULT_SCHEMA)
+        if self._tomb_counts:
+            hits = hits.join(F.broadcast(self.deletes), "doc_id", "left_anti")
+        return hits
 
     def term_dfs(self, terms: list[str]) -> dict[str, int]:
         return self.termdict.dfs(terms)
@@ -721,13 +732,15 @@ class SearchEngine:
 
     def _prepare(self, terms, mode="disjunctive", prune=True,
                  after=None, groups=None, slop=0, min_should_match=1,
-                 field=None, boosts=None,
-                 stats_override=None) -> _Scoring | None:
-        """Validate a top-k query, look up its dfs and build its kernel
-        arguments: the set-up every execution shares — the Spark plans of
-        :meth:`search` and the filtered search, and the in-process
-        :meth:`search_topk` and :meth:`search_filtered`. Arguments as
-        :meth:`search`; None when no doc can match."""
+                 field=None, boosts=None, stats_override=None,
+                 dfs=None) -> _Scoring | None:
+        """Validate a query, look up its dfs and build its kernel
+        arguments: the set-up every scored call shares, in process or on
+        Spark — :meth:`search`, :meth:`search_topk`, the kuery and
+        filtered searches, :meth:`search_batch` and :meth:`match_ids`.
+        Arguments as :meth:`search`; `dfs` is a df map already looked up
+        for a superset of the query's terms (a batch looks up its union
+        once). None when no doc can match."""
         if after is not None:
             after = (float(after[0]), int(after[1]))
         if slop < 0 or (slop and mode != "phrase"):
@@ -781,7 +794,8 @@ class SearchEngine:
         uniq = sorted(set(terms))
         if not uniq:
             return None
-        dfs = self.term_dfs(uniq)
+        if dfs is None:
+            dfs = self.term_dfs(uniq)
         if mode in ("conjunctive", "phrase") and any(
             t not in dfs for t in uniq
         ):
@@ -823,39 +837,31 @@ class SearchEngine:
                         min_should_match)
 
     def _spark_topk(self, q: _Scoring, k: int, cond=None) -> DataFrame:
-        """The lazy Spark top-k plan of `q`, restricted to the live docs
-        matching the filter `cond` when given (:meth:`_cogrouped`)."""
-        if cond is None:
-            return self._ranked(self._candidates(q.terms, q.url, q.pos),
-                                _make_shard_scorer(q, k, self._tomb_counts),
-                                k)
-        return self._cogrouped(q, k, cond).orderBy(
+        """The lazy Spark top-k plan of `q` (:meth:`_spark_shards`), in
+        (score desc, doc_id asc) order."""
+        return self._spark_shards(q, k, cond).orderBy(
             F.desc("score"), F.asc("doc_id")).limit(k)
 
-    def _cogrouped(self, q: _Scoring, k: int, cond) -> DataFrame:
-        """Per-shard top `k` of `q` over the live docs matching `cond`, as
-        a Spark plan: the candidate posting blocks and the filtered
-        doc_ids are COGROUPED by shard — the whitelist never leaves the
-        cluster and is bounded per task by shard_range."""
+    def _spark_shards(self, q: _Scoring, k: int, cond=None) -> DataFrame:
+        """Each shard's top `k` live hits of `q`, unordered, as a Spark
+        plan: the Spark execution of every scored call. Without a filter
+        the per-shard kernel over-fetches and the tombstones are
+        anti-joined (:meth:`_apply_shard_scorer`). With the filter `cond`
+        the candidate blocks and the live docs matching it are COGROUPED
+        by shard — the whitelist never leaves the cluster and is bounded
+        per task by shard_range."""
+        cand = self._candidates(q.terms, q.url, q.pos)
+        if cond is None:
+            return self._apply_shard_scorer(
+                cand, _make_shard_scorer(q, k, self._tomb_counts))
         allowed = self.live_docs().filter(cond).select(
             F.expr(f"doc_id div {self.shard_range}").alias("shard_id"),
             "doc_id",
         )
         return (
-            self._candidates(q.terms, q.url, q.pos).groupBy("shard_id")
-            .cogroup(allowed.groupBy("shard_id"))
+            cand.groupBy("shard_id").cogroup(allowed.groupBy("shard_id"))
             .applyInPandas(_make_filtered_shard_scorer(q, k), RESULT_SCHEMA)
         )
-
-    def _ranked(self, cand: DataFrame, scorer, k: int) -> DataFrame:
-        """The Spark top-k plan over candidate blocks: per-shard kernel,
-        tombstone anti-join (a broadcast of the `deletes` frame, never
-        collected), global (score desc, doc_id asc) order, limit k."""
-        per_shard = self._apply_shard_scorer(cand, scorer)
-        if self._tomb_counts:
-            per_shard = per_shard.join(
-                F.broadcast(self.deletes), "doc_id", "left_anti")
-        return per_shard.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def search_synonyms(
         self,
@@ -1899,7 +1905,7 @@ class SearchEngine:
         kernel, which applies them before top-k selection, so results
         are exact at any filter selectivity. Above the byte guard
         (:meth:`_local`) the Spark plan runs instead: candidate blocks
-        and filtered ids COGROUPED by shard (:meth:`_cogrouped`)."""
+        and filtered ids COGROUPED by shard (:meth:`_spark_shards`)."""
         return self._execute(self._plan_filtered(
             terms, mode, filters, prune, after, groups, slop,
             min_should_match, field, boosts), k, after)
@@ -2060,14 +2066,16 @@ class SearchEngine:
         Reuses the exact per-shard kernels with k_eff = shard_range: a
         shard holds at most shard_range docs, so the shard "top-k" IS its
         full match set (bit-tested kernels, no second matching code path).
-        The kernels run in process (:meth:`_local`, no pruning) and the
-        match set comes back as an Arrow-backed frame, so a panel
+        The set-up is :meth:`search`'s (:meth:`_prepare`, no pruning), so
+        the same arguments are refused (`slop` on a non-phrase mode, a
+        term in two groups). The kernels run in process (:meth:`_local`)
+        and the match set comes back as an Arrow-backed frame, so a panel
         aggregates it as a small local relation instead of re-running a
         scoring plan; with `filters`, the filter's live-docs match set is
         the call's one Spark job. Above the byte guard, and for
         match_all (empty `terms`, within `filters` if given), the result
-        is a lazy Spark plan whose per-task work stays bounded by
-        shard_range.
+        is a lazy Spark plan (:meth:`_spark_shards`) whose per-task work
+        stays bounded by shard_range.
 
         mode "groups" (+ `groups`, the CNF clauses of a boolean kuery —
         see :meth:`search`): a parenthesized query-bar query drives the
@@ -2077,29 +2085,11 @@ class SearchEngine:
         `with_scores=True` returns DataFrame[doc_id, score] — the FULL
         scored match set, never globally sorted (the multi_match
         combiner consumes this shape)."""
-        if (groups is not None) != (mode == "groups"):
-            raise ValueError("`groups` is required for (exactly) mode='groups'")
         schema = RESULT_SCHEMA if with_scores else IDS_SCHEMA
-        ns, n_docs_sc, avgdl_sc = self._field_stats(field)
-        if ns:
-            terms = [ns + t for t in terms]
-            if groups is not None:
-                groups = [[ns + t for t in g] for g in groups]
-        if mode == "groups":
-            groups = [sorted(set(g)) for g in groups if g]
-            if not groups:
-                return arrow_frame(self.spark, schema)
-            terms = [t for g in groups for t in g]
-        if mode not in ("conjunctive", "disjunctive", "phrase", "groups"):
-            raise ValueError(f"unknown mode {mode!r}")
-        if mode == "phrase" and not self.has_positions:
-            raise ValueError(
-                "phrase search needs an index built with "
-                "store_positions=True (this snapshot has positions=False)"
-            )
         cond = self._filter_cond(filters) if filters else None
-        uniq = sorted(set(terms))
-        if not uniq:
+        q = self._prepare(terms, mode, prune=False, groups=groups, slop=slop,
+                          field=field)
+        if q is None and mode != "groups" and not terms:
             base = self.live_docs()
             if cond is not None:
                 base = base.filter(cond)
@@ -2107,44 +2097,15 @@ class SearchEngine:
                 # match_all is constant-score (Lucene _score = 1.0)
                 return base.select("doc_id", F.lit(1.0).alias("score"))
             return base.select("doc_id")
-        dfs = self.term_dfs(uniq)
-        if mode in ("conjunctive", "phrase") and any(
-            t not in dfs for t in uniq
-        ):
+        if q is None:
             return arrow_frame(self.spark, schema)
-        if mode == "groups":
-            gpres = [[t for t in g if t in dfs] for g in groups]
-            if any(not g for g in gpres):
-                return arrow_frame(self.spark, schema)
-            if len(gpres) == 1:
-                mode, groups = "disjunctive", None
-            elif all(len(g) == 1 for g in gpres):
-                mode, groups = "conjunctive", None
-                uniq = sorted(g[0] for g in gpres)
-            else:
-                groups = gpres
-        present = [t for t in uniq if t in dfs]
-        if not present:
-            return arrow_frame(self.spark, schema)
-        idf_map = {t: idf(n_docs_sc, dfs[t]) for t in present}
-        q = _Scoring(present, bool(ns), mode == "phrase", mode,
-                     list(terms) if mode == "phrase" else present, idf_map,
-                     avgdl_sc, prune=False, groups=groups, slop=slop)
         hits = self._local(q, self.shard_range, cond)
         if hits is not None:
             # (doc_id) or (doc_id, score), as the schema names
             return arrow_frame(self.spark, schema, pa.table(
                 dict(zip(schema.names, hits))))
-        if cond is not None:
-            # the whitelist is already live
-            return self._cogrouped(q, self.shard_range, cond) \
-                .select(*schema.names)
-        out = self._apply_shard_scorer(
-            self._candidates(q.terms, q.url, q.pos),
-            _make_shard_scorer(q, self.shard_range)).select(*schema.names)
-        if self._tomb_counts:
-            out = out.join(F.broadcast(self.deletes), "doc_id", "left_anti")
-        return out
+        return self._spark_shards(q, self.shard_range, cond) \
+            .select(*schema.names)
 
     def count(self, terms: list[str], mode: str = "disjunctive",
               filters: list = (), groups: list[list[str]] | None = None
@@ -2721,7 +2682,8 @@ class SearchEngine:
             return pd.DataFrame({"doc_id": ids[order],
                                  "score": scores[order]})
 
-        return self._ranked(cand, mm_shard, k)
+        return self._apply_shard_scorer(cand, mm_shard).orderBy(
+            F.desc("score"), F.asc("doc_id")).limit(k)
 
     def span_first(self, term: str, end: int, k: int = 10) -> DataFrame:
         """ES `span_first` query: the term must occur within the first
@@ -2759,10 +2721,10 @@ class SearchEngine:
 
     def index_stats(self) -> dict:
         """ES `_stats` / `_cat/indices` analogue: the operational
-        one-row summary of this engine's pinned snapshot. Everything
-        here is metadata-sized — stats row + manifest + the per-shard
-        metrics rollup (one chained-metrics scan, shard-count rows);
-        nothing data-sized reaches the driver.
+        one-row summary of this engine's pinned snapshot, read on the
+        driver with no Spark job. Everything here is metadata-sized —
+        stats row + manifest + the per-shard metrics rows of the chain
+        (shard-count rows per snapshot, summed with pyarrow).
 
         Keys: snapshot_id, n_docs (as-built maxDoc), live_docs
         (tombstone-adjusted), deleted_docs, avgdl, segments (snapshots
@@ -2777,10 +2739,13 @@ class SearchEngine:
         while cur and cur.get("parent"):
             chain += 1
             cur = snaps.get(cur["parent"])
-        m = self.cat.read(self.spark, "metrics", self.snapshot_id).agg(
-            F.coalesce(F.sum("postings_emitted"), F.lit(0)).alias("pr"),
-            F.coalesce(F.sum("bytes_compressed"), F.lit(0)).alias("pb"),
-        ).first()
+        # the chained per-shard metrics rows, read with pyarrow
+        metrics = [self.cat.read_arrow(d) for d in
+                   self.cat.existing_chain_paths("metrics", self.snapshot_id)]
+
+        def total(col: str) -> int:
+            return sum(pc.sum(t[col]).as_py() or 0 for t in metrics)
+
         # the per-shard tombstone counts the constructor already took
         n_deleted = sum(self._tomb_counts.values())
         return {
@@ -2792,8 +2757,8 @@ class SearchEngine:
             "deleted_docs": n_deleted,
             "avgdl": self.avgdl,
             "segments": chain,
-            "postings_rows": int(m["pr"]),
-            "postings_bytes": int(m["pb"]),
+            "postings_rows": total("postings_emitted"),
+            "postings_bytes": total("bytes_compressed"),
             "positions": self.has_positions,
             "url_field": self.has_url_field,
             "stopwords": list(self.stopwords),
@@ -3351,12 +3316,19 @@ class SearchEngine:
         q = self._prepare(terms, mode, prune, after, **opts)
         if q is None:
             return []
-        hits = self._local(q, k)
-        if hits is None:
-            return [(int(r["doc_id"]), float(r["score"]))
-                    for r in self._spark_topk(q, k).collect()]
-        ids, scores = _top(*hits, k)
+        ids, scores = self._topk_hits(q, k)
         return list(zip(ids.tolist(), scores.tolist()))
+
+    def _topk_hits(self, q: _Scoring, k: int):
+        """(doc_ids, scores) of `q`'s top `k` in rank order: scored in
+        process (:meth:`_local`), or collected from the Spark plan when
+        its row groups exceed :data:`LOCAL_TOPK_MAX_BYTES`."""
+        hits = self._local(q, k)
+        if hits is not None:
+            return _top(*hits, k)
+        rows = self._spark_topk(q, k).collect()
+        return (np.array([r["doc_id"] for r in rows], np.int64),
+                np.array([r["score"] for r in rows], np.float64))
 
     def _postings_reader(self, url: bool) -> PostingsReader:
         """Footer term ranges of the content (or url) posting files of
@@ -3377,8 +3349,9 @@ class SearchEngine:
 
         `queries`: [{"query_id": int, "terms": [...], "mode": ..., "k": n,
         "slop": s?}], mode one of conjunctive/disjunctive/phrase (phrase
-        terms in order; needs a positional index — validated driver-side;
-        optional "slop" relaxes adjacency per wand.score_phrase). Returns
+        terms in order; needs a positional index — validated driver-side
+        by :meth:`_prepare`; optional "slop" relaxes adjacency per
+        wand.score_phrase). Returns
         (query_id, rank, doc_id, score) as an Arrow-backed frame:
         collecting it runs no Spark job.
 
@@ -3388,42 +3361,26 @@ class SearchEngine:
         many queries share it), then each query's kernel on each shard's
         blocks of its own terms, with the k + |shard tombstones|
         over-fetch and one `deletes` scan for the whole batch
-        (:meth:`_score_local`). When the union's row groups exceed
-        :data:`LOCAL_TOPK_MAX_BYTES`, the batch runs as one Spark plan
-        instead (:meth:`_spark_batch`)."""
+        (:meth:`_score_local`). Each query's set-up is :meth:`search`'s
+        (:meth:`_prepare`) over the batch's one df lookup. When the
+        union's row groups exceed :data:`LOCAL_TOPK_MAX_BYTES`, each
+        query runs on its own as :meth:`search_topk` does: in process
+        when its own row groups fit, else its Spark plan."""
         modes = {q.get("mode") for q in queries}
         bad = modes - {"conjunctive", "disjunctive", "phrase"}
         if bad:
             raise ValueError(f"unknown query mode(s) {sorted(bad)!r}")
         any_phrase = "phrase" in modes
-        if any_phrase and not self.has_positions:
-            raise ValueError(
-                "phrase search needs an index built with "
-                "store_positions=True (this snapshot has positions=False)"
-            )
         all_terms = sorted({t for q in queries for t in set(q["terms"])})
         if not all_terms:
             return arrow_frame(self.spark, BATCH_SCHEMA)
         dfs = self.term_dfs(all_terms)
-        idf_map = {t: idf(self.n_docs_scoring, d) for t, d in dfs.items()}
         jobs = []   # (query_id, _Scoring, k)
         for q in queries:
-            slop = int(q.get("slop") or 0)
-            if slop and q["mode"] != "phrase":
-                raise ValueError("slop is only valid for phrase queries")
-            uniq = sorted(set(q["terms"]))
-            present = [t for t in uniq if t in dfs]
-            if q["mode"] in ("conjunctive", "phrase") and \
-                    len(present) < len(uniq):
-                continue  # a required term matches nothing anywhere
-            if present:
-                # phrase scoring needs the original term ORDER; conj/disj
-                # score over the deduped ascending set
-                phrase = q["mode"] == "phrase"
-                jobs.append((int(q["query_id"]), _Scoring(
-                    present, False, phrase, q["mode"],
-                    list(q["terms"]) if phrase else present, idf_map,
-                    self.avgdl_scoring, prune, slop=slop), int(q["k"])))
+            sq = self._prepare(q["terms"], q["mode"], prune,
+                               slop=int(q.get("slop") or 0), dfs=dfs)
+            if sq is not None:
+                jobs.append((int(q["query_id"]), sq, int(q["k"])))
         if not jobs:
             return arrow_frame(self.spark, BATCH_SCHEMA)
         terms = sorted({t for _qid, sq, _k in jobs for t in sq.terms})
@@ -3431,10 +3388,12 @@ class SearchEngine:
         cols = PAY_COLS + (("pos_enc",) if any_phrase else ())
         groups, nbytes = reader.plan(terms, cols)
         if nbytes > LOCAL_TOPK_MAX_BYTES:
-            return self._spark_batch(jobs, any_phrase)
-        shards = self._read_shards(reader, groups, terms, cols) \
-            if groups else {}
-        hits = self._score_local([(sq, k) for _qid, sq, k in jobs], shards)
+            hits = [self._topk_hits(sq, k) for _qid, sq, k in jobs]
+        else:
+            shards = self._read_shards(reader, groups, terms, cols) \
+                if groups else {}
+            hits = self._score_local([(sq, k) for _qid, sq, k in jobs],
+                                     shards)
         parts = []
         for (qid, _sq, k), (ids, scores) in zip(jobs, hits):
             ids, scores = _top(ids, scores, k)
@@ -3445,58 +3404,6 @@ class SearchEngine:
                 "score": scores,
             }))
         return arrow_frame(self.spark, BATCH_SCHEMA, pa.concat_tables(parts))
-
-    def _spark_batch(self, jobs, any_phrase: bool) -> DataFrame:
-        """:meth:`search_batch`'s Spark plan over its [(query_id,
-        _Scoring, k)] jobs: one postings scan filtered to the union of
-        the query terms; a broadcast join against the tiny (query_id,
-        term) table replicates each candidate block to the queries that
-        need it; ONE shuffle to (shard_id, query_id), so every query x
-        shard pair is its own task (parallelism n_shards * n_queries);
-        a second grouped kernel takes each query's global top-k from the
-        (queries x shards x k)-sized candidate union."""
-        spec = {qid: (sq, k) for qid, sq, k in jobs}
-        tomb_counts = self._tomb_counts
-
-        def score_query_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-            qid = int(pdf["query_id"].iat[0])
-            sq, k = spec[qid]
-            k_eff = k + tomb_counts.get(int(pdf["shard_id"].iat[0]), 0)
-            ids, scores = sq.score(_blocks_from_pdf(pdf), k_eff)
-            return pd.DataFrame(
-                {"query_id": qid, "doc_id": ids, "score": scores}
-            )
-
-        pairs = [(qid, t) for qid, sq, _k in jobs for t in sq.terms]
-        qterms = arrow_frame(self.spark, "query_id long, term string",
-                             pa.table({"query_id": [p[0] for p in pairs],
-                                       "term": [p[1] for p in pairs]}))
-        per_shard = (
-            self._candidates(sorted({t for _q, t in pairs}), pos=any_phrase)
-            .join(F.broadcast(qterms), "term")
-            .groupBy("shard_id", "query_id")
-            .applyInPandas(score_query_shard,
-                           "query_id long, doc_id long, score double")
-        )
-        if tomb_counts:
-            per_shard = per_shard.join(
-                F.broadcast(self.deletes), "doc_id", "left_anti"
-            )
-
-        def topk_query(pdf: pd.DataFrame) -> pd.DataFrame:
-            qid = int(pdf["query_id"].iat[0])
-            ids, sc = _top(pdf["doc_id"].to_numpy(np.int64),
-                           pdf["score"].to_numpy(np.float64), spec[qid][1])
-            return pd.DataFrame({
-                "query_id": qid,
-                "rank": np.arange(1, ids.size + 1, dtype=np.int32),
-                "doc_id": ids,
-                "score": sc,
-            })
-
-        return per_shard.groupBy("query_id").applyInPandas(
-            topk_query, BATCH_SCHEMA
-        )
 
 
 def rrf_fuse(inputs: list[DataFrame], k: int = 10,

@@ -9,8 +9,8 @@ Pins:
   positional index with a stop filter, a single-shard index, and a chain
   with tombstones before and after merge_chain;
 - the unfiltered calls submit no Spark job, collecting the result
-  included, and neither does a dashboard panel over a match set; the
-  filtered ones submit at most one;
+  included, and neither do a dashboard panel over a match set and
+  index_stats; the filtered ones submit at most one;
 - search_batch reads each postings row group at most once;
 - validate_query submits no Spark job and reads no postings;
 - a filter-only query falls back to the lazy plan above the byte guard;
@@ -278,8 +278,8 @@ def test_filter_only_guard_falls_back_to_lazy_plan(spark, chain):
 
 def test_job_counts(spark, multi, chain):
     """Unfiltered calls run no Spark job, collect included, and neither
-    does a dashboard panel over the match set; a filtered call runs at
-    most one (the filter's live-docs match set)."""
+    do a dashboard panel over the match set and index_stats; a filtered
+    call runs at most one (the filter's live-docs match set)."""
     engines = [SearchEngine(spark, multi), SearchEngine(spark, chain)]
     for eng in engines:
         eng.search_topk(["w0"], "disjunctive", 5)  # footers read once
@@ -297,6 +297,7 @@ def test_job_counts(spark, multi, chain):
             eng.match_ids(["w0", "w9"], "conjunctive").collect()
             eng.match_ids(["w3", "rareterm2"], with_scores=True).collect()
             eng.count(["w0", "w9"], "conjunctive")
+            eng.index_stats()
             # the dashboard panel: match set -> live docs semi-join ->
             # both aggregations, collected
             for live in (eng.live_docs(),

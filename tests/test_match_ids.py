@@ -79,6 +79,24 @@ def test_match_ids_filters_and_match_all(spark, built):
     assert _ids(eng.match_ids([])) == sorted(toks)
 
 
+def test_match_ids_refuses_what_search_refuses(spark, built):
+    """match_ids shares search's set-up, so it refuses the same
+    arguments: slop on a non-phrase mode, a negative slop, an unknown
+    mode and `groups` without mode "groups" — match_all (empty terms)
+    included. A phrase with slop still matches."""
+    idx, _ = built
+    eng = SearchEngine(spark, idx)
+    for kw in (dict(terms=["w1", "w4"], mode="disjunctive", slop=1),
+               dict(terms=["w1", "w4"], mode="conjunctive", slop=2),
+               dict(terms=["w1", "w4"], mode="phrase", slop=-1),
+               dict(terms=[], mode="bogus"),
+               dict(terms=[], mode="disjunctive", groups=[["w0"]])):
+        with pytest.raises(ValueError):
+            eng.match_ids(**kw)
+    assert set(_ids(eng.match_ids(["w1", "w4"], "phrase"))) <= \
+        set(_ids(eng.match_ids(["w1", "w4"], "phrase", slop=2)))
+
+
 def test_count_matches_match_set_size(spark, built):
     """ES _count == len(match set), every mode/filter combination rides
     the same kernels."""

@@ -194,30 +194,27 @@ def test_cosine_topk_window_group_limit_below_exchange(spark):
     assert partial, plan
 
 
-def test_search_batch_parallelism_is_shard_times_query(spark, built,
-                                                     monkeypatch):
-    """The batch scorer groups by (shard_id, query_id) — one task per
-    query x shard, not one serial loop per shard. That is the Spark plan
-    a batch runs above the in-process byte guard (below it the result is
-    a local relation)."""
+def test_search_batch_above_guard_runs_each_query_alone(spark, built,
+                                                      monkeypatch):
+    """Below the in-process byte guard a batch is a local relation. Above
+    it each query runs on its own, as search_topk does: the batch's rows
+    are each query's search() rows, ranked 1..k."""
     eng = SearchEngine(spark, built)
     batch = [
         {"query_id": 0, "terms": ["w0"], "mode": "disjunctive", "k": 3},
         {"query_id": 1, "terms": ["w1"], "mode": "disjunctive", "k": 3},
+        {"query_id": 2, "terms": ["w0", "w1"], "mode": "conjunctive",
+         "k": 5},
     ]
     assert "LocalTableScan" in explain_str(eng.search_batch(batch),
                                            "simple")
     monkeypatch.setattr(bm25, "LOCAL_TOPK_MAX_BYTES", 0)
-    res = eng.search_batch(batch)
-    plan = explain_str(res, "simple")
-    assert "shard_id" in plan and "query_id" in plan
-    # the SCORER flatMapGroups is keyed by both columns; the round-7
-    # per-query top-k tail is a second grouped kernel keyed by query_id
-    # alone (it replaced a window-rank + joined-k filter whose cut could
-    # not push below the exchange), so no Window node may appear
-    fm = [ln for ln in plan.splitlines() if "FlatMapGroupsInPandas" in ln]
-    assert any("query_id" in ln and "shard_id" in ln for ln in fm), plan
-    assert "Window" not in plan, plan
+    got = [tuple(r) for r in eng.search_batch(batch).collect()]
+    want = [(q["query_id"], rank, r["doc_id"], r["score"])
+            for q in batch
+            for rank, r in enumerate(
+                eng.search(q["terms"], q["mode"], q["k"]).collect(), 1)]
+    assert want and got == want
 
 
 def test_terms_error_bounds_plan_shape(spark, built):
