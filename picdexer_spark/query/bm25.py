@@ -4,16 +4,17 @@ The query-side analogue of ES `_search` that the reference's Kibana saved
 objects issue (reference: internal/setup/assets/kibana.ndjson:1,8 — analyzed
 `text` fields scored with BM25, `_score` field). One query set-up
 (:meth:`SearchEngine._prepare` and its synonym and phrase-prefix forms:
-validation, df/idf, the kernel arguments) feeds two executions of the
-same kernels:
-
-- in process, for every collected call — :meth:`SearchEngine.search_topk`
-  (and the hit lists of the highlighters), the kuery strings
-  (:meth:`~SearchEngine.search_query_string`),
-  :meth:`~SearchEngine.search_filtered`, :meth:`~SearchEngine.search_batch`
-  and the match sets of :meth:`~SearchEngine.match_ids` — how an ES shard
-  scores a query inside the process that holds it
-  (:meth:`SearchEngine._score_local`):
+validation, df/idf, the kernel arguments) feeds one execution of the
+kernels, in process, for every scored call — :meth:`SearchEngine.search`
+and the calls built on it (shaping, search_indices, ...),
+:meth:`~SearchEngine.search_topk` (and the hit lists of the
+highlighters), :meth:`~SearchEngine.search_synonyms`,
+:meth:`~SearchEngine.match_phrase_prefix`, the kuery strings
+(:meth:`~SearchEngine.search_query_string`),
+:meth:`~SearchEngine.search_filtered`, :meth:`~SearchEngine.search_batch`
+and the match sets of :meth:`~SearchEngine.match_ids` — how an ES shard
+scores a query inside the process that holds it
+(:meth:`SearchEngine._score_local`):
 
     footers (once per engine)       -- each postings row group's term
                                        [min, max] range (query/local.py)
@@ -28,16 +29,15 @@ same kernels:
     deletes scan of the candidates  -- tombstones, filtered to the ids
     lexsort (score desc, doc_id)    -- merge, first k
 
-  No other Spark job runs. The calls that return a DataFrame return one
-  built from an Arrow table (sources/catalog.py `arrow_frame`): a local
-  relation whose collect runs no job and which joins as a small input. A
-  call whose candidate row groups (plus 8 B per filtered id) exceed
-  LOCAL_TOPK_MAX_BYTES runs the Spark plan below instead, which bounds
-  the driver's memory (:meth:`SearchEngine._spark_shards`, one helper
-  for every call; a batch falls back query by query);
+No other Spark job runs. The calls that return a DataFrame return one
+built from an Arrow table (sources/catalog.py `arrow_frame`): a local
+relation whose collect runs no job and which joins as a small input.
 
-- as a lazy Spark plan, for the DataFrame that compositions build on
-  (:meth:`SearchEngine.search`: shaping, search_indices, streaming, ...):
+The one fallback bounds the driver's memory: a call whose candidate row
+groups (plus 8 B per filtered id) exceed LOCAL_TOPK_MAX_BYTES runs the
+same kernels as a Spark plan instead (:meth:`SearchEngine._spark_shards`,
+one helper for every call; a batch falls back query by query), as does
+:meth:`~SearchEngine.multi_match`:
 
     postings.filter(term IN q)      -- parquet row-group pruning: postings
                                        files are sorted by term in ~1 MB
@@ -125,8 +125,9 @@ PAY_COLS = ("term", "shard_id", "first_doc", "last_doc", "max_tf", "min_dl",
 
 
 #: candidate posting bytes (compressed, summed from the footers of the
-#: row groups a query would read) above which :meth:`SearchEngine.
-#: search_topk` runs the Spark plan instead of scoring in process. A
+#: row groups a query would read) above which a scored call runs the
+#: Spark plan instead of scoring in process (:meth:`SearchEngine.
+#: _collected`, :meth:`SearchEngine._topk_hits`). A
 #: bound on driver memory, not a speed crossover: the in-process path
 #: holds the candidate row groups decoded on the driver, and one query's
 #: peak driver RSS growth measured 2.7-3.5x these bytes (90k-doc
@@ -142,13 +143,13 @@ class _Scoring(NamedTuple):
     """A prepared query, built only by the set-ups (:meth:`SearchEngine.
     _prepare` and its synonym and phrase-prefix forms): the posting
     terms whose blocks it reads (`terms`), from which field's table
-    (`url`), with positions (`pos`), and the kernel arguments both
-    executions share — the in-process one (:meth:`SearchEngine.
-    _score_local`) and the Spark one (:meth:`SearchEngine._spark_shards`,
-    through :func:`_make_shard_scorer` or
-    :func:`_make_filtered_shard_scorer`). `kterms` are the kernel's
-    terms: the phrase in order, the fixed words of a phrase prefix, else
-    `terms`."""
+    (`url`), with positions (`pos`), and the kernel arguments: the same
+    whether the call scores in process (:meth:`SearchEngine.
+    _score_local`) or, above the byte guard, on Spark
+    (:meth:`SearchEngine._spark_shards`, through
+    :func:`_make_shard_scorer` or :func:`_make_filtered_shard_scorer`).
+    `kterms` are the kernel's terms: the phrase in order, the fixed words
+    of a phrase prefix, else `terms`."""
     terms: list
     url: bool
     pos: bool
@@ -356,36 +357,6 @@ def _top(ids: np.ndarray, scores: np.ndarray, k: int):
     return ids[o], scores[o]
 
 
-#: sessions whose broadcast/agg execution machinery has been warmed (keyed
-#: by applicationId — one warmup per Spark application, not per engine)
-_WARMED_APPS: set[str] = set()
-
-
-def _warm_exec_paths(spark: SparkSession) -> None:
-    """One ~0.2 s literal-data job that exercises BroadcastExchange +
-    HashAggregate once per session. The FIRST broadcast exchange of a
-    session pays ~1.2 s of one-time machinery (broadcast thread pool,
-    join codegen) and the first hash aggregate ~0.4 s — measured landing
-    inside the first Spark-plan query of every session (multi_match, the
-    tombstone anti-join of a lazy :meth:`SearchEngine.search`). Warming
-    here moves that cost out of query latency. No table data is
-    read; nothing is cached."""
-    key = spark.sparkContext.applicationId
-    if key in _WARMED_APPS:
-        return
-    _WARMED_APPS.add(key)
-    try:
-        a = spark.createDataFrame([(1, "x")], "id long, v string")
-        b = spark.createDataFrame([(2, "x")], "k long, v string")
-        (
-            b.join(F.broadcast(a), "v")
-            .groupBy("v").agg(F.count("*").alias("n"))
-            .collect()
-        )
-    except Exception:
-        pass  # warmup must never fail an engine construction
-
-
 class SearchEngine:
     """BM25 top-k query engine bound to one committed index snapshot."""
 
@@ -435,16 +406,6 @@ class SearchEngine:
         self.avgdl = float(st_d["avgdl"])
         self.shard_range = shard_range = int(
             st_d.get("shard_range") or (1 << 20)
-        )
-        #: every assigned doc id sits below shard_range -> the whole index
-        #: is ONE shard, and the per-shard kernels' groupBy(shard_id)
-        #: exchange would co-locate candidates that already end up in a
-        #: single task: the flat query paths then skip the shuffle
-        #: entirely (coalesce into one task — guide "remove shuffles
-        #: outright"). Multi-shard indexes keep the exchange, which IS
-        #: their scoring parallelism.
-        self._single_shard = (
-            0 < int(st_d.get("next_doc_id") or 0) <= shard_range
         )
         #: whether the snapshot chain stores positional postings (phrase
         #: queries are refused DRIVER-side otherwise — not as an opaque
@@ -544,7 +505,6 @@ class SearchEngine:
         self._docs: DataFrame | None = None
         self._docs_rows = 0
         self._live: ArrowFrame | None = None
-        _warm_exec_paths(spark)
 
     def live_docs(self) -> ArrowFrame:
         """The doc store minus tombstoned rows, over this engine's pinned
@@ -599,32 +559,12 @@ class SearchEngine:
         return proj.filter(F.col("term").isin(list(terms)))
 
     def _apply_shard_scorer(self, cand: DataFrame, scorer) -> DataFrame:
-        """Run a per-shard kernel over the candidate blocks and drop the
-        tombstoned hits (a broadcast anti-join of the `deletes` frame,
-        never collected; the kernel over-fetches). Multi-shard:
-        groupBy(shard_id).applyInPandas — the exchange is the scoring
-        parallelism. Single-shard (see _single_shard): the same kernel
-        over the whole candidate set in one task WITHOUT the exchange
-        (coalesce is a narrow dependency — no shuffle write/read, one
-        Spark stage instead of two); row-identical because the one group
-        applyInPandas would form IS the whole frame.
-
-        Being narrow, coalesce(1) also collapses the WHOLE upstream — the
-        postings scan, the term filter, any broadcast join — into that
-        one task, so a single-shard index gives up map-side scan
-        parallelism too, not just the exchange. Cheap while a query's
-        candidate scan is small; a single-shard index with a large
-        postings table or many snapshot files reads it all in one task."""
-        if self._single_shard:
-            def one_shard(batches):
-                chunks = [c for c in batches if len(c)]
-                if chunks:
-                    yield scorer(pd.concat(chunks, ignore_index=True))
-
-            hits = cand.coalesce(1).mapInPandas(one_shard, RESULT_SCHEMA)
-        else:
-            hits = cand.groupBy("shard_id").applyInPandas(
-                scorer, RESULT_SCHEMA)
+        """Run a per-shard kernel over the candidate blocks
+        (groupBy(shard_id).applyInPandas — the exchange is the scoring
+        parallelism) and drop the tombstoned hits (a broadcast anti-join
+        of the `deletes` frame, never collected; the kernel
+        over-fetches)."""
+        hits = cand.groupBy("shard_id").applyInPandas(scorer, RESULT_SCHEMA)
         if self._tomb_counts:
             hits = hits.join(F.broadcast(self.deletes), "doc_id", "left_anti")
         return hits
@@ -688,8 +628,10 @@ class SearchEngine:
         stats_override: tuple[dict, int, float] | None = None,
     ) -> DataFrame:
         """Top-k (doc_id, score), globally ordered (score desc, doc_id asc),
-        as a lazy Spark plan that compositions build on;
-        :meth:`search_topk` returns the same rows, collected, in process.
+        scored in process and returned as an Arrow-backed frame
+        (collecting it runs no Spark job; :meth:`_collected`);
+        :meth:`search_topk` returns the same rows as a list. Above the
+        byte guard the result is the lazy Spark plan of the same kernels.
 
         `stats_override`: optional (dfs, n_docs, avgdl) replacing this
         index's OWN scoring statistics — the coordinator hook
@@ -724,11 +666,10 @@ class SearchEngine:
         group (a duplicated clause would double-count in ES but not
         here — refused, not guessed). Degenerate shapes reduce to the
         flat modes so their plans and latencies are identical."""
-        q = self._prepare(terms, mode, prune, after, groups, slop,
-                          min_should_match, field, boosts, stats_override)
-        if q is None:
-            return self._empty()
-        return self._spark_topk(q, k)
+        return self._collected(
+            self._prepare(terms, mode, prune, after, groups, slop,
+                          min_should_match, field, boosts, stats_override),
+            k)
 
     def _prepare(self, terms, mode="disjunctive", prune=True,
                  after=None, groups=None, slop=0, min_should_match=1,
@@ -838,7 +779,8 @@ class SearchEngine:
 
     def _spark_topk(self, q: _Scoring, k: int, cond=None) -> DataFrame:
         """The lazy Spark top-k plan of `q` (:meth:`_spark_shards`), in
-        (score desc, doc_id asc) order."""
+        (score desc, doc_id asc) order: what a call runs when its
+        candidates exceed the byte guard."""
         return self._spark_shards(q, k, cond).orderBy(
             F.desc("score"), F.asc("doc_id")).limit(k)
 
@@ -885,12 +827,11 @@ class SearchEngine:
         set). `mode`: disjunctive (any clause) or conjunctive (every
         clause — a bool MUST of SynonymQuery clauses).
 
-        Scale shape: identical to :meth:`search` — the candidate scan
-        is `term IN (all members)` (bloom + row-group pruned), the
-        per-shard kernel is score_synonyms' bulk path, results reduce
-        to one k-row driver merge."""
-        q = self._prepare_synonyms(terms, synonyms, mode, field)
-        return self._empty() if q is None else self._spark_topk(q, k)
+        Executed as :meth:`search` is: the candidate read is every
+        member's row groups, the per-shard kernel is score_synonyms'
+        bulk path, and results reduce to one k-row merge."""
+        return self._collected(
+            self._prepare_synonyms(terms, synonyms, mode, field), k)
 
     def _prepare_synonyms(self, terms, synonyms, mode="disjunctive",
                           field=None) -> _Scoring | None:
@@ -1050,9 +991,11 @@ class SearchEngine:
         Lucene MultiPhraseQuery convention: one BM25 weight whose idf
         sums the fixed occurrences plus ALL expansion terms (see
         wand.score_phrase_prefix for the full pin). slop and filters are
-        refused (not silently approximated). Returns (doc_id, score)."""
-        q = self._prepare_phrase_prefix(terms, max_expansions, prune, after)
-        return self._empty() if q is None else self._spark_topk(q, k)
+        refused (not silently approximated). Returns (doc_id, score),
+        executed as :meth:`search` is."""
+        return self._collected(
+            self._prepare_phrase_prefix(terms, max_expansions, prune, after),
+            k)
 
     def _prepare_phrase_prefix(self, terms, max_expansions=None, prune=True,
                                after=None) -> _Scoring | None:

@@ -1,6 +1,7 @@
-"""In-process kuery, filtered, batch and match-set calls
-(SearchEngine.search_query_string, search_filtered, search_batch and
-match_ids) and the Arrow-backed frames they return.
+"""In-process scored calls (SearchEngine.search, search_synonyms,
+match_phrase_prefix, match_bool_prefix, search_query_string,
+search_filtered, search_batch and match_ids) and the Arrow-backed
+frames they return.
 
 Pins:
 
@@ -93,6 +94,35 @@ BATCH_PHRASES = [
      "slop": 2},
 ]
 
+#: search keyword arguments
+SEARCHES = [
+    dict(terms=["w0", "w5"], mode="disjunctive"),
+    dict(terms=["w3", "w17", "w40", "w88"], mode="disjunctive",
+         min_should_match=2),
+    dict(terms=["w0", "w9"], mode="conjunctive", k=100),
+    dict(terms=["w1", "w7", "w3", "rareterm2"], mode="groups",
+         groups=[["w1", "w7"], ["w3", "rareterm2"]]),
+    dict(terms=["w0", "w5"], after=(0.2, 50)),   # mid-ranking cursor
+    dict(terms=["https", "example"], field="url"),
+]
+#: search_synonyms keyword arguments (with SYN_CLASS)
+SYNONYMS = [
+    dict(terms=["w0", "w5"], mode="disjunctive"),
+    dict(terms=["w0", "w9"], mode="conjunctive", k=100),
+]
+#: a one-class synonym set (w5 blends with w7)
+SYN_CLASS = [["w5", "w7"]]
+#: match_bool_prefix keyword arguments
+BOOL_PREFIXES = [
+    dict(terms=["w0", "w1"], operator="or"),
+    dict(terms=["w0", "w1"], operator="and", k=100),
+]
+#: match_phrase_prefix keyword arguments (positional indexes only)
+PHRASE_PREFIXES = [
+    dict(terms=["w0", "w1"]),
+    dict(terms=["w2", "w0", "w"], k=100),
+]
+
 #: match_ids keyword arguments
 MATCHES = [
     dict(terms=["w3", "rareterm2"]),
@@ -126,6 +156,17 @@ def _calls(eng):
     """{label: () -> comparable rows} over every collected call shape."""
     pos = eng.has_positions
     calls = {}
+    for i, kw in enumerate(SEARCHES):
+        calls[f"search {i}"] = lambda kw=kw: _scored(eng.search(**kw))
+    for i, kw in enumerate(SYNONYMS):
+        calls[f"synonyms {i}"] = lambda kw=kw: _scored(
+            eng.search_synonyms(synonyms=SYN_CLASS, **kw))
+    for i, kw in enumerate(BOOL_PREFIXES):
+        calls[f"bool prefix {i}"] = lambda kw=kw: _scored(
+            eng.match_bool_prefix(**kw))
+    for i, kw in enumerate(PHRASE_PREFIXES if pos else []):
+        calls[f"phrase prefix {i}"] = lambda kw=kw: _scored(
+            eng.match_phrase_prefix(**kw))
     for q in KUERIES + (PHRASES if pos else []):
         calls[f"qs {q}"] = lambda q=q: _scored(eng.search_query_string(q))
     for i, kw in enumerate(FILTERED):
@@ -194,7 +235,8 @@ def chain(spark, tmp_path_factory):
 
 def test_parity_multi_shard_positional(spark, multi):
     eng = SearchEngine(spark, multi)
-    assert not eng._single_shard and eng.has_positions and eng.stopwords
+    assert eng.n_docs > eng.shard_range   # more than one shard
+    assert eng.has_positions and eng.stopwords
     rows = _check_parity(eng)
     # the stopword vanishes from its clause, group or query
     assert rows["qs w6"] == [] and rows["qs lang:en w6"] == []
@@ -210,7 +252,7 @@ def test_parity_single_shard(spark, tmp_path):
     build_index(spark, spark.createDataFrame(gen_pages(150, seed=71)), idx,
                 IndexConfig(shard_range=1 << 16))
     eng = SearchEngine(spark, idx)
-    assert eng._single_shard
+    assert eng.n_docs <= eng.shard_range   # every doc in one shard
     _check_parity(eng)
 
 
@@ -277,9 +319,10 @@ def test_filter_only_guard_falls_back_to_lazy_plan(spark, chain):
 
 
 def test_job_counts(spark, multi, chain):
-    """Unfiltered calls run no Spark job, collect included, and neither
-    do a dashboard panel over the match set and index_stats; a filtered
-    call runs at most one (the filter's live-docs match set)."""
+    """Unfiltered calls run no Spark job, collect included (search,
+    search_synonyms, match_bool_prefix and match_phrase_prefix too), and
+    neither do a dashboard panel over the match set and index_stats; a
+    filtered call runs at most one (the filter's live-docs match set)."""
     engines = [SearchEngine(spark, multi), SearchEngine(spark, chain)]
     for eng in engines:
         eng.search_topk(["w0"], "disjunctive", 5)  # footers read once
@@ -292,6 +335,12 @@ def test_job_counts(spark, multi, chain):
             for q in unfiltered if pos else unfiltered[:-len(PHRASES)]:
                 eng.search_query_string(q).collect()
             eng.search_filtered(["w0", "w5"], k=10).collect()
+            eng.search(["w0", "w5"], "disjunctive", 10).collect()
+            eng.search_synonyms(["w0", "w5"], SYN_CLASS).collect()
+            eng.match_bool_prefix(["w0", "w1"]).collect()
+            eng.match_bool_prefix(["w0", "w1"], operator="and").collect()
+            if pos:
+                eng.match_phrase_prefix(["w0", "w1"]).collect()
             eng.search_batch(BATCH + (BATCH_PHRASES if pos else [])) \
                 .collect()
             eng.match_ids(["w0", "w9"], "conjunctive").collect()

@@ -2,11 +2,11 @@
 
 Pins:
 
-- `search_topk` returns exactly the rows of `search(...).collect()`,
-  scores included, for conjunctive, disjunctive (with
-  min_should_match), groups and phrase queries, with and without
-  pruning, across search_after pages, for absent terms and for k above
-  the match count;
+- `search_topk` returns exactly the rows of `search(...).collect()` on
+  its Spark plan (the byte guard set to 0), scores included, for
+  conjunctive, disjunctive (with min_should_match), groups and phrase
+  queries, with and without pruning, across search_after pages, for
+  absent terms and for k above the match count;
 - on a multi-shard positional index written in many small row groups, a
   single-shard index, a two-snapshot chain with upserts (tombstones)
   before and after merge_chain, and postings files whose footers carry
@@ -64,8 +64,11 @@ KS = (1, 10, 400)
 
 
 def _spark_rows(eng, q, k):
-    return [(int(r["doc_id"]), float(r["score"]))
-            for r in eng.search(k=k, **q).collect()]
+    """search()'s rows on its Spark plan (the byte guard set to 0)."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(bm25, "LOCAL_TOPK_MAX_BYTES", 0)
+        return [(int(r["doc_id"]), float(r["score"]))
+                for r in eng.search(k=k, **q).collect()]
 
 
 def _check_parity(eng, queries):
@@ -133,7 +136,8 @@ def chain(spark, tmp_path_factory):
 
 def test_parity_multi_shard_positional(spark, multi):
     eng = SearchEngine(spark, multi)
-    assert not eng._single_shard and eng.has_positions
+    assert eng.n_docs > eng.shard_range   # more than one shard
+    assert eng.has_positions
     _check_parity(eng, QUERIES + PHRASES)
 
 
@@ -142,7 +146,7 @@ def test_parity_single_shard(spark, tmp_path):
     build_index(spark, spark.createDataFrame(gen_pages(150, seed=71)), idx,
                 IndexConfig(shard_range=1 << 16))
     eng = SearchEngine(spark, idx)
-    assert eng._single_shard
+    assert eng.n_docs <= eng.shard_range   # every doc in one shard
     _check_parity(eng, QUERIES)
 
 
@@ -188,11 +192,14 @@ def test_engine_keeps_its_chain_across_merge_expire(spark, chain,
     up["html"] = None
     build_incremental(spark, spark.createDataFrame(up), idx,
                       IndexConfig(shard_range=64), "s3")
+    # the Spark plan's answers before the merge, from a second engine on
+    # the same snapshot: `eng` reads no footer until after the merge
+    other = SearchEngine(spark, idx)
+    before = {str(q) + str(k): _spark_rows(other, q, k)
+              for q in QUERIES for k in KS}
     eng = SearchEngine(spark, idx)
     assert len(eng.cat.parent_chain()) == 3
     assert sum(eng._tomb_counts.values()) == 60   # 40 in s2, 20 in s3
-    before = {str(q) + str(k): _spark_rows(eng, q, k)
-              for q in QUERIES for k in KS}
     assert not eng._readers   # no footers read before the merge
 
     assert merge_chain(spark, idx, max_segments=1, expire=True)
@@ -234,8 +241,7 @@ def test_after_cursor_pages(spark, multi):
         pages, after = [], None
         while len(pages) < 60:
             page = eng.search_topk(k=7, after=after, **q)
-            assert page == [(int(r["doc_id"]), float(r["score"])) for r in
-                            eng.search(k=7, after=after, **q).collect()]
+            assert page == _spark_rows(eng, {**q, "after": after}, 7)
             assert page
             pages += page
             after = (page[-1][1], page[-1][0])

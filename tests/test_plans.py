@@ -98,7 +98,9 @@ def test_encode_postings_partial_encode_below_single_exchange(spark, built):
         assert "Generate" not in post, s
 
 
-def test_search_plan_shuffles_only_candidates(spark, built):
+def test_search_plan_shuffles_only_candidates(spark, built, monkeypatch):
+    """The Spark plan a search runs above the in-process byte guard."""
+    monkeypatch.setattr(bm25, "LOCAL_TOPK_MAX_BYTES", 0)
     eng = SearchEngine(spark, built)
     plan = eng.search(["w0", "w3"], "disjunctive", 10)
     s = explain_str(plan, "formatted")
@@ -107,10 +109,12 @@ def test_search_plan_shuffles_only_candidates(spark, built):
     assert count_exchanges(plan) <= 2, explain_str(plan, "simple")
 
 
-def test_groups_search_plan_shape(spark, built):
-    """The boolean (CNF groups) path keeps the flat path's scale shape:
-    term-IN pushed to the postings scan, candidate-blocks-only shuffle,
-    no extra exchanges for the group structure (it lives in the kernel)."""
+def test_groups_search_plan_shape(spark, built, monkeypatch):
+    """The boolean (CNF groups) path keeps the flat path's scale shape
+    above the byte guard: term-IN pushed to the postings scan,
+    candidate-blocks-only shuffle, no extra exchanges for the group
+    structure (it lives in the kernel)."""
+    monkeypatch.setattr(bm25, "LOCAL_TOPK_MAX_BYTES", 0)
     eng = SearchEngine(spark, built)
     plan = eng.search(["w0", "w1", "w3"], "groups", 10,
                       groups=[["w0", "w1"], ["w3"]])
@@ -238,11 +242,13 @@ def test_terms_error_bounds_plan_shape(spark, built):
     assert rows and all(r["doc_count_error"] >= 0 for r in rows)
 
 
-def test_phrase_prefix_plan_pushes_expanded_in_filter(spark, tmp_path):
-    """match_phrase_prefix's postings scan must push the whole expanded
-    term set (fixed + alts) as one In(term) filter to parquet — the same
-    candidate-only scan shape as the flat kernels, ~51 terms instead of
-    a dictionary sweep."""
+def test_phrase_prefix_plan_pushes_expanded_in_filter(spark, tmp_path,
+                                                     monkeypatch):
+    """Above the byte guard, match_phrase_prefix's postings scan must
+    push the whole expanded term set (fixed + alts) as one In(term)
+    filter to parquet — the same candidate-only scan shape as the flat
+    kernels, ~51 terms instead of a dictionary sweep."""
+    monkeypatch.setattr(bm25, "LOCAL_TOPK_MAX_BYTES", 0)
     pages = spark.createDataFrame(gen_pages(300, seed=31))
     idx = str(tmp_path / "ppplan")
     build_index(spark, pages, idx,
@@ -417,25 +423,3 @@ def test_search_indices_plan_one_global_takeordered(spark, tmp_path):
     assert "CartesianProduct" not in plan and "NestedLoop" not in plan
     # the union feeds from the per-index k-limited sorts, not raw scans
     assert plan.count("Union") == 1
-
-
-def test_single_shard_query_skips_exchange(spark, tmp_path_factory):
-    """A single-shard index (every doc id below shard_range) scores flat
-    queries WITHOUT the groupBy(shard_id) exchange — coalesce into the one
-    task the group would land in anyway — and the results are identical to
-    the grouped path."""
-    from picdexer_spark.index.build import IndexConfig, build_index
-    from picdexer_spark.query.bm25 import SearchEngine
-
-    idx = str(tmp_path_factory.mktemp("ss_idx"))
-    pages = spark.createDataFrame(gen_pages(300, seed=21))
-    build_index(spark, pages, idx, IndexConfig(shard_range=1 << 16))
-    eng = SearchEngine(spark, idx)
-    assert eng._single_shard
-    plan = eng.search(["w0", "w3"], "disjunctive", 10)
-    # only the final top-k exchange remains
-    assert count_exchanges(plan) <= 1, explain_str(plan, "simple")
-    fast = eng.search_topk(["w0", "w3"], "disjunctive", 10)
-    eng._single_shard = False
-    grouped = eng.search_topk(["w0", "w3"], "disjunctive", 10)
-    assert fast == grouped and len(fast) == 10

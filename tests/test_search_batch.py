@@ -230,7 +230,8 @@ def test_batch_single_shard_fast_path_identical(spark, tmp_path_factory,
     build_index(spark, spark.createDataFrame(pdf), idx,
                 IndexConfig(shard_range=1 << 16))
     eng = SearchEngine(spark, idx)
-    assert eng._single_shard and not eng._tomb_counts
+    assert eng.n_docs <= eng.shard_range   # every doc in one shard
+    assert not eng._tomb_counts
     queries = [
         {"query_id": 0, "terms": ["w0", "w1"], "mode": "disjunctive", "k": 5},
         {"query_id": 1, "terms": ["w0", "w2"], "mode": "conjunctive", "k": 4},
